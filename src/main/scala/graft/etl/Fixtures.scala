@@ -1,21 +1,110 @@
 package graft.etl
 
+import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import scala.collection.mutable
+import org.apache.commons.io.FileUtils
+import org.apache.hadoop.fs.FileSystem
+import org.apache.hadoop.util.ShutdownHookManager
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Test-input material for the CSV→Parquet path: the corpus is
-  * parquet-only and read-only (TESTDATA.md), so CSV fixtures are
-  * exported from it into a temp dir once per (sfDir, table) per JVM.
+/** Fixture material and the one memo policy for expensive derived
+  * artifacts. The corpus is parquet-only and read-only (TESTDATA.md),
+  * so every other input shape (CSV, staged streaming sources, pair
+  * logs, indexes) is derived from it into temp dirs.
+  *
+  * Two memo tiers, both keyed by `sfDir/tag` — a tag names ONE artifact,
+  * and call sites of different families use distinct tag prefixes
+  * (`csv_`, `stream_`) so no two sites can share a key:
+  *  - [[stagedDir]]: a directory built once per JVM. The staged copy is
+  *    immutable, so every session may read it.
+  *  - [[persisted]]: a DataFrame built once per (session, sfDir, tag),
+  *    so repeated invocations reuse one persisted copy instead of
+  *    pinning a new one per call. Keyed WEAKLY by the session OBJECT: a
+  *    memo keyed by sfDir alone would hand a restarted session in the
+  *    same JVM a DataFrame bound to a stopped SparkContext, a strong key
+  *    would pin dead sessions for the JVM lifetime, and object identity
+  *    (not a hash) can never alias two live sessions.
+  *  - [[stagedPersisted]] composes the two: the persisted DataFrame's
+  *    lineage is just the parquet scan of a staged dir, so
+  *    storage-pressure eviction costs a re-READ of a small file, never
+  *    a re-RUN of the producing pipeline.
+  *
+  * Both memos tolerate nested builds (a builder that asks for another
+  * memoized artifact). Every dir created here is deleted, best effort,
+  * by one JVM shutdown hook that runs after Spark's, so no path from
+  * here may be used after the JVM exits (see [[tempDir]]).
   */
 object Fixtures {
-  private val csvCache = new ConcurrentHashMap[String, String]()
+  /** Dirs from [[tempDir]] (and so [[stagedDir]]) that the shutdown
+    * hook deletes. */
+  private[graft] val createdDirs = new ConcurrentLinkedQueue[File]()
+
+  // Spark stops its SparkContext from a Hadoop shutdown hook at
+  // FileSystem.SHUTDOWN_HOOK_PRIORITY + 30; lower priorities run later.
+  ShutdownHookManager.get().addShutdownHook(
+    () => createdDirs.forEach(d => FileUtils.deleteQuietly(d)),
+    FileSystem.SHUTDOWN_HOOK_PRIORITY + 20)
+
+  /** Fresh unique temp dir, deleted at JVM exit. Its path must not
+    * outlive the JVM: a path handed to a consumer that runs after exit
+    * (oracle SQL read by DuckDB, a printed result dir, a table LOCATION
+    * read later) names a deleted dir. Such a dir passes
+    * `outlivesJvm = true` and stays in `java.io.tmpdir`. */
+  def tempDir(prefix: String, outlivesJvm: Boolean = false): String = {
+    val dir = Files.createTempDirectory(prefix).toFile
+    if (!outlivesJvm) createdDirs.add(dir)
+    dir.toString
+  }
+
+  private val stagedDirs = new ConcurrentHashMap[String, String]()
+
+  /** Stage read-only fixture material once per (sfDir, tag) per JVM.
+    * Scan keys measure the READ; re-staging on every invocation charges
+    * them the fixture-write cost instead. Sink keys must NOT use this —
+    * the write is what they measure. `build` populates the directory it
+    * is given, exactly once. */
+  def stagedDir(sfDir: String, tag: String)(build: String => Unit): String = {
+    // check-then-build-then-publish instead of computeIfAbsent: a nested
+    // computeIfAbsent on one ConcurrentHashMap throws "Recursive update".
+    // Keys are built single-threaded per query; a lost race merely
+    // orphans one duplicate staging — the published dir stays unique.
+    val key = s"$sfDir/$tag"
+    val cached = stagedDirs.get(key)
+    if (cached != null) cached
+    else {
+      val dir = tempDir(s"graft_$tag")
+      build(dir)
+      val prev = stagedDirs.putIfAbsent(key, dir)
+      if (prev != null) prev else dir
+    }
+  }
+
+  private val sessionTables =
+    new java.util.WeakHashMap[SparkSession, mutable.Map[String, DataFrame]]()
+
+  /** Memoize `df` per (session, sfDir, tag). The caller's expression
+    * decides persistence (`persist()`, a parquet re-read, …); this only
+    * guarantees it is evaluated once per session. */
+  def persisted(spark: SparkSession, sfDir: String, tag: String)(
+      df: => DataFrame): DataFrame =
+    sessionTables.synchronized {
+      sessionTables.computeIfAbsent(spark, _ => mutable.Map.empty)
+        .getOrElseUpdate(s"$sfDir/$tag", df)
+    }
+
+  /** Staged parquet + a memoized persisted read of it: the pattern for
+    * an expensive derived table consumed more than once per query. */
+  def stagedPersisted(spark: SparkSession, sfDir: String, tag: String)(
+      build: String => Unit): DataFrame =
+    persisted(spark, sfDir, tag)(
+      spark.read.parquet(stagedDir(sfDir, tag)(build)).persist())
 
   /** Export a corpus table to CSV (header, canonical timestamp format)
-    * and return the directory path. Cached per JVM run. */
+    * and return the directory path. */
   def csvOf(spark: SparkSession, sfDir: String, table: String): String =
-    csvCache.computeIfAbsent(s"$sfDir/$table", { _ =>
-      val dir = Files.createTempDirectory(s"graft_csv_$table").toString
+    stagedDir(sfDir, s"csv_$table") { dir =>
       graft.Tables.t(spark, sfDir, table)
         .write.mode("overwrite")
         .option("header", true)
@@ -26,63 +115,6 @@ object Fixtures {
         .option("ignoreLeadingWhiteSpace", false)
         .option("ignoreTrailingWhiteSpace", false)
         .csv(dir)
-      dir
-    })
-
-  /** Fresh unique temp dir for sink tests. */
-  def tempDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
-  private val stagedCache = new ConcurrentHashMap[String, String]()
-
-  /** Stage read-only scan-fixture material once per (sfDir, tag) per
-    * JVM. Scan keys measure the READ; re-staging on every invocation
-    * charges the benchmark the fixture-write cost instead of the scan
-    * cost. Sink keys must NOT use this — the write is what they
-    * measure. `build` populates the directory exactly once. */
-  def stagedDir(sfDir: String, tag: String)(build: String => Unit): String = {
-    // check-then-build-then-publish instead of computeIfAbsent: a
-    // staged artifact whose builder stages ANOTHER artifact (e.g.
-    // embed_cluster_labels → embed_pairs) re-enters this method, and
-    // a nested computeIfAbsent on one ConcurrentHashMap throws
-    // "Recursive update". The non-atomic form is safe here: keys are
-    // built single-threaded per query, and a lost race merely orphans
-    // one duplicate temp staging — the published dir stays unique.
-    val key = s"$sfDir/$tag"
-    val cached = stagedCache.get(key)
-    if (cached != null) cached
-    else {
-      val dir = Files.createTempDirectory(s"graft_$tag").toString
-      build(dir)
-      val prev = stagedCache.putIfAbsent(key, dir)
-      if (prev != null) prev else dir
-    }
-  }
-
-  private val persistedCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, DataFrame]]()
-
-  /** Staged parquet + a memoized PERSISTED read of it: the pattern for
-    * an expensive derived table consumed more than once per query.
-    * Durability and cache-safety compose: the parquet fixture is built
-    * once per (JVM, sfDir, tag), and the persisted DataFrame's lineage
-    * is just the parquet scan — so storage-pressure eviction costs a
-    * re-READ of a small file, never a re-RUN of the producing pipeline
-    * (the r6 driver-bench outlier mechanism: a persisted corpus-derived
-    * stage evicted under suite memory pressure rebuilt its whole
-    * lineage each run). Keyed weakly by session object, same shape as
-    * the signature cache in LlmText — a restarted session must not see
-    * a DataFrame bound to a stopped SparkContext. */
-  def stagedPersisted(spark: SparkSession, sfDir: String, tag: String)(
-      build: String => Unit): DataFrame =
-    persistedCache.synchronized {
-      persistedCache.computeIfAbsent(spark,
-          _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(s"$sfDir/$tag", {
-          val dir = stagedDir(sfDir, tag)(build)
-          spark.read.parquet(dir).persist()
-        })
     }
 
   /** Write `df` to a fresh parquet dir and read it back — the

@@ -31,7 +31,7 @@ object EtlQueries {
     * giant .gz serializes its scan into one core (same caveat as
     * multiLine CSV). First touch should rewrite to parquet/zstd. */
   private def scanCsvGzip(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = Fixtures.stagedDir(sfDir, "csv_gz") { d =>
+    val dir = Fixtures.stagedDir(sfDir, "gz_csv") { d =>
       t(spark, sfDir, "events")
         .write.mode("overwrite")
         .option("header", true)
@@ -64,7 +64,8 @@ object EtlQueries {
     // reader could see a partial file, and the predictable path was
     // pre-creatable by another local user). The oracle map is built in
     // the same JVM, so the interpolated path always names this copy.
-    val d = Files.createTempDirectory("graft_badcsv")
+    // DuckDB reads it after the dumping JVM exits, so it is kept.
+    val d = Paths.get(Fixtures.tempDir("graft_badcsv", outlivesJvm = true))
     val tmp = Files.createTempFile(d, "bad", ".tmp")
     Files.writeString(tmp,
       """k,qty,note
@@ -96,7 +97,7 @@ object EtlQueries {
     * `sep`/`encoding` options; the oracle recomputes the value in
     * UTF-8, so a mis-decoded byte (mojibake) hash-mismatches. */
   private def scanCsvDelim(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = Fixtures.stagedDir(sfDir, "csv_delim") { d =>
+    val dir = Fixtures.stagedDir(sfDir, "delim_csv") { d =>
       t(spark, sfDir, "events")
         .select(col("event_id"), col("event_type"),
           concat(lit("café_"), col("event_type")).as("note"))
@@ -716,7 +717,7 @@ object EtlQueries {
     * parses in one task, so parallelism comes from file count; a
     * production layout keeps such files small and many. */
   private def scanCsvMultiline(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = Fixtures.stagedDir(sfDir, "csv_ml") { d =>
+    val dir = Fixtures.stagedDir(sfDir, "multiline_csv") { d =>
       t(spark, sfDir, "documents")
         .selectExpr("doc_id", "replace(text, ' ', '\n') AS mltext")
         .write.mode("overwrite")

@@ -40,26 +40,9 @@ object LlmText {
     * 600+ s vs <2 s at sf0.1). At cluster scale this barrier is the
     * signature staging table a production pipeline would write anyway;
     * the cached footprint is O(docs × k) — a few MB per million docs. */
-  /** One cached signature table per (session, sfDir): repeated builder
-    * invocations (Bench runs every key twice) reuse the same persisted
-    * copy instead of pinning a new one each call. Keyed WEAKLY by the
-    * session OBJECT (same shape as [[clustersCache]]): a cache keyed by
-    * sfDir alone would hand a restarted session in the same JVM a
-    * DataFrame bound to a stopped SparkContext, and a strong key would
-    * pin dead sessions for the JVM lifetime. */
-  private val signedCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, DataFrame]]()
-
   private[graft] def signed(spark: SparkSession, sfDir: String): DataFrame =
-    signedCache.synchronized {
-      signedCache.computeIfAbsent(spark,
-          _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(sfDir, signedUncached(spark, sfDir))
-    }
-
-  private def signedUncached(spark: SparkSession, sfDir: String): DataFrame =
-    signedOn(t(spark, sfDir, "documents")).persist()
+    graft.etl.Fixtures.persisted(spark, sfDir, "lsh_signed")(
+      signedOn(t(spark, sfDir, "documents")).persist())
 
   /** Signature build over an arbitrary (doc_id, text) relation — the
     * corpus-wide cached table above and `llm_dedup_eval`'s sampled
@@ -177,10 +160,8 @@ object LlmText {
     * measurement that motivated this (r10): `llm_cluster_coherence`
     * re-verified 16k pairs per run at 94.9× the sf0.1 time while the
     * pair set itself grew exactly 64× — the recompute, not the
-    * analysis, was the cost. Staged once per (JVM, sfDir), persisted as
-    * a parquet read, eviction costs a re-READ of a pair-set-sized file,
-    * never a re-run of the LSH pipeline. A production pipeline writes
-    * exactly this table (its dedup log) before any graph analysis.
+    * analysis, was the cost. A production pipeline writes exactly this
+    * table (its dedup log) before any graph analysis.
     * The public `llm_dedup_ngram_jaccard` key still runs the LIVE
     * pipeline — it IS the measured operator. */
   private[graft] def verifiedPairs(spark: SparkSession, sfDir: String): DataFrame =
@@ -194,37 +175,29 @@ object LlmText {
   // fingerprint bit. Computed entirely inside array lambdas (zero
   // shuffle, one pass over the text).
   // ---------------------------------------------------------------------
-  /** Cached per-session simhash fingerprints (same shape and rationale
-    * as [[signedCache]]): the 64-bit fold is expensive, and without a
-    * persist barrier Catalyst re-substitutes it into downstream join
-    * projections — recomputing per candidate PAIR instead of per doc. */
-  private val simhashCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, DataFrame]]()
-
+  /** Session-memoized simhash fingerprints: the 64-bit fold is
+    * expensive, and without a persist barrier Catalyst re-substitutes it
+    * into downstream join projections — recomputing per candidate PAIR
+    * instead of per doc. */
   private[graft] def simhashFp(spark: SparkSession, sfDir: String): DataFrame =
-    simhashCache.synchronized {
-      simhashCache.computeIfAbsent(spark,
-          _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(sfDir,
-          // One-pass native digest+vote loop (TextExpr.SimHashBands) —
-          // bit-identical to the lambda formulation the DuckDB twin
-          // replays (ExtensionsSpec pins the equality), ~50× cheaper to
-          // build. Bands stay INTEGERS so the pair verify runs
-          // codegen'd bit_count(xor); the public key's 64-char bit
-          // string is derived from them (lpad(bin) is exact for
-          // 16-bit values).
-          t(spark, sfDir, "documents")
-            .selectExpr("doc_id",
-              "array_distinct(split(text, ' ')) AS feats")
-            .select(col("doc_id"),
-              graft.functions.TextOps.simhashBands(col("feats")).as("bands"))
-            .selectExpr("doc_id",
-              """concat_ws('', transform(bands, b -> lpad(bin(b), 16, '0')))
-                 AS simhash""",
-              "bands")
-            .persist())
-    }
+    graft.etl.Fixtures.persisted(spark, sfDir, "simhash_fp")(
+      // One-pass native digest+vote loop (TextExpr.SimHashBands) —
+      // bit-identical to the lambda formulation the DuckDB twin
+      // replays (ExtensionsSpec pins the equality), ~50× cheaper to
+      // build. Bands stay INTEGERS so the pair verify runs
+      // codegen'd bit_count(xor); the public key's 64-char bit
+      // string is derived from them (lpad(bin) is exact for
+      // 16-bit values).
+      t(spark, sfDir, "documents")
+        .selectExpr("doc_id",
+          "array_distinct(split(text, ' ')) AS feats")
+        .select(col("doc_id"),
+          graft.functions.TextOps.simhashBands(col("feats")).as("bands"))
+        .selectExpr("doc_id",
+          """concat_ws('', transform(bands, b -> lpad(bin(b), 16, '0')))
+             AS simhash""",
+          "bands")
+        .persist())
 
   private def dedupSimhash(spark: SparkSession, sfDir: String): DataFrame =
     simhashFp(spark, sfDir).select("doc_id", "simhash").orderBy("doc_id")
@@ -533,48 +506,37 @@ object LlmText {
   // source id after the candidates' ids-only equi-join; the kNN edge
   // list is the input artifact for graph-based semantic clustering.
   // ---------------------------------------------------------------------
-  /** Session-memoized persisted kNN edge table (r17) — the same shape
-    * and rationale as [[signedCache]]/[[simhashCache]]/the cluster
-    * labels: the kNN graph is the INPUT ARTIFACT graph analytics read
-    * (a production deployment builds and persists it once; HITS,
-    * k-core, and link prediction then consume the persisted edges),
-    * but each of those four keys re-ran the band join + per-candidate
-    * exact Jaccard + rank window per invocation. One build per (JVM,
-    * sfDir), disk-backed like every other memoized stage (eviction
-    * costs a recompute, never correctness). */
-  private val knnCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, DataFrame]]()
-
-  private def knnGraphRanked(spark: SparkSession, sfDir: String): DataFrame =
-    knnCache.synchronized {
-      knnCache.computeIfAbsent(spark,
-          _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(sfDir, {
-          val jac = candidates(spark, sfDir)
-            // intersect computed ONCE (the llm_setsim_join fix class):
-            // the former inline jaccard ran array_intersect twice per
-            // candidate pair. Count-only IntersectSize kernel (r16):
-            // same value, no per-pair array. inter is referenced twice
-            // below, so CollapseProject keeps the projection staged;
-            // the double division is identical.
-            .select(col("doc_a"), col("doc_b"),
-              graft.functions.TextOps.intersectSize(col("sh_a"), col("sh_b"))
-                .as("inter"),
-              size(col("sh_a")).as("sa"), size(col("sh_b")).as("sb"))
-            .selectExpr("doc_a", "doc_b",
-              "inter / (sa + sb - inter) AS jaccard")
-          val sym = jac.select(col("doc_a").as("src"),
-              col("doc_b").as("nbr"), col("jaccard"))
-            .unionByName(jac.select(col("doc_b").as("src"),
-              col("doc_a").as("nbr"), col("jaccard")))
-          sym.withColumn("rk", row_number().over(
-              Window.partitionBy("src")
-                .orderBy(col("jaccard").desc, col("nbr"))))
-            .where(col("rk") <= 3)
-            .select("src", "rk", "nbr", "jaccard")
-            .persist()
-        })
+  /** Session-memoized persisted kNN edge table (r17): the kNN graph is
+    * the INPUT ARTIFACT graph analytics read (a production deployment
+    * builds and persists it once; HITS, k-core, and link prediction
+    * then consume the persisted edges), but each of those four keys
+    * re-ran the band join + per-candidate exact Jaccard + rank window
+    * per invocation. */
+  private[graft] def knnGraphRanked(spark: SparkSession, sfDir: String): DataFrame =
+    graft.etl.Fixtures.persisted(spark, sfDir, "knn_edges") {
+      val jac = candidates(spark, sfDir)
+        // intersect computed ONCE (the llm_setsim_join fix class):
+        // the former inline jaccard ran array_intersect twice per
+        // candidate pair. Count-only IntersectSize kernel (r16):
+        // same value, no per-pair array. inter is referenced twice
+        // below, so CollapseProject keeps the projection staged;
+        // the double division is identical.
+        .select(col("doc_a"), col("doc_b"),
+          graft.functions.TextOps.intersectSize(col("sh_a"), col("sh_b"))
+            .as("inter"),
+          size(col("sh_a")).as("sa"), size(col("sh_b")).as("sb"))
+        .selectExpr("doc_a", "doc_b",
+          "inter / (sa + sb - inter) AS jaccard")
+      val sym = jac.select(col("doc_a").as("src"),
+          col("doc_b").as("nbr"), col("jaccard"))
+        .unionByName(jac.select(col("doc_b").as("src"),
+          col("doc_a").as("nbr"), col("jaccard")))
+      sym.withColumn("rk", row_number().over(
+          Window.partitionBy("src")
+            .orderBy(col("jaccard").desc, col("nbr"))))
+        .where(col("rk") <= 3)
+        .select("src", "rk", "nbr", "jaccard")
+        .persist()
     }
 
   private def knnGraph(spark: SparkSession, sfDir: String): DataFrame =
@@ -2119,37 +2081,24 @@ object LlmText {
   // round's result is persisted and the previous unpersisted, keeping
   // lineage O(1) across iterations.
   // ---------------------------------------------------------------------
-  /** Result cache keyed WEAKLY by the session object (then by sfDir):
-    * the labels table is the staging output a production pipeline would
-    * write (same rationale as [[signed]]'s persist). The weak key means
-    * a discarded/stopped session's entries are collectable instead of
-    * pinned for the JVM lifetime, and object identity (not a hash) can
-    * never alias two live sessions. */
-  private val clustersCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, DataFrame]]()
-
-  private def dedupClusters(spark: SparkSession, sfDir: String): DataFrame =
-    clustersCache.synchronized {
-      clustersCache.computeIfAbsent(spark,
-          _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(sfDir, dedupClustersUncached(spark, sfDir))
+  /** Session-memoized: the labels table is the staging output a
+    * production pipeline would write, reused by leakage-safe split & co.
+    * (same rationale as [[signed]]'s persist). */
+  private[graft] def dedupClusters(spark: SparkSession, sfDir: String): DataFrame =
+    graft.etl.Fixtures.persisted(spark, sfDir, "dedup_clusters") {
+      val docs = t(spark, sfDir, "documents").select(col("doc_id"))
+      val pairs = verifiedPairs(spark, sfDir).select("doc_a", "doc_b")
+      val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+        .unionByName(pairs.select(col("doc_b").as("src"),
+          col("doc_a").as("dst")))
+        .persist()
+      val labels0 = docs.select(col("doc_id"), col("doc_id").as("lbl"))
+      val converged = labelFixpoint(labels0, edges)
+      edges.unpersist()
+      converged.select(col("doc_id"), col("lbl").as("cluster_id"),
+        (col("doc_id") === col("lbl")).as("is_kept"))
+        .orderBy("doc_id")
     }
-
-  private def dedupClustersUncached(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = t(spark, sfDir, "documents").select(col("doc_id"))
-    val pairs = verifiedPairs(spark, sfDir).select("doc_a", "doc_b")
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"),
-        col("doc_a").as("dst")))
-      .persist()
-    val labels0 = docs.select(col("doc_id"), col("doc_id").as("lbl"))
-    val converged = labelFixpoint(labels0, edges)
-    edges.unpersist()
-    converged.select(col("doc_id"), col("lbl").as("cluster_id"),
-      (col("doc_id") === col("lbl")).as("is_kept"))
-      .orderBy("doc_id")
-  }
 
   /** Rounds of plain propagation before escalating to pointer doubling.
     * Shallow graphs (the common case) converge before this and never
@@ -4064,21 +4013,17 @@ object LlmText {
   // side are the before/after of the re-featurization.
   // ---------------------------------------------------------------------
   private def shingleSimhashFp(spark: SparkSession, sfDir: String): DataFrame =
-    simhashCache.synchronized {
-      simhashCache.computeIfAbsent(spark,
-          _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(s"$sfDir#shingle",
-          // Same native one-pass digest+vote loop as the unigram
-          // fingerprint — over the persisted signature table's shingle
-          // arrays, so the corpus is shingled once for minhash,
-          // PPJoin, and this fingerprint alike. The former 64-way
-          // interpreted lambda was the suite's single largest one-time
-          // cost (~14 min at sf0.1); the native build is seconds.
-          signed(spark, sfDir)
-            .select(col("doc_id"),
-              graft.functions.TextOps.simhashBands(col("sh")).as("bands"))
-            .persist())
-    }
+    graft.etl.Fixtures.persisted(spark, sfDir, "simhash_shingle_fp")(
+      // Same native one-pass digest+vote loop as the unigram
+      // fingerprint — over the persisted signature table's shingle
+      // arrays, so the corpus is shingled once for minhash,
+      // PPJoin, and this fingerprint alike. The former 64-way
+      // interpreted lambda was the suite's single largest one-time
+      // cost (~14 min at sf0.1); the native build is seconds.
+      signed(spark, sfDir)
+        .select(col("doc_id"),
+          graft.functions.TextOps.simhashBands(col("sh")).as("bands"))
+        .persist())
 
   private def simhashShingleEval(spark: SparkSession, sfDir: String): DataFrame =
     confusionOf(stratumTruth(spark, sfDir),

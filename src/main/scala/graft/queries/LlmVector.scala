@@ -765,10 +765,9 @@ object LlmVector {
     * bucket join + exact-cosine verify AND the label fixpoint per
     * invocation (94.9× at ×64 while the pair set grew exactly 64×).
     * A production pipeline stages exactly these two tables (the dedup
-    * log and the cluster assignment) before any audit reads them.
-    * Eviction costs a re-READ of pair-set-sized parquet, never an LSH
-    * or fixpoint re-run. The public `llm_embed_neardup_lsh` and the
-    * audit keys stay live where they ARE the measured operator. */
+    * log and the cluster assignment) before any audit reads them. The
+    * public `llm_embed_neardup_lsh` and the audit keys stay live where
+    * they ARE the measured operator. */
   private[graft] def embedPairs(spark: SparkSession, sfDir: String): DataFrame =
     graft.etl.Fixtures.stagedPersisted(spark, sfDir, "embed_pairs") { d =>
       embedNeardupLsh(spark, sfDir).write.mode("overwrite").parquet(d)

@@ -3,13 +3,13 @@ package graft.streaming
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.FileTime
 import java.util.UUID
-import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.Tables.{dec, t}
 import graft.etl.{Ingest, Schemas}
+import graft.etl.Fixtures.{stagedDir, tempDir}
 
 /** SURVEY.md §2-I — the Structured Streaming surface.
   *
@@ -41,23 +41,16 @@ import graft.etl.{Ingest, Schemas}
   */
 object StreamingQ {
 
-  /** Stage a corpus table as parquet into a fresh temp dir (streaming
-    * file sources need a directory they can list). Cached per
-    * (sfDir, table) per JVM — the staged copy is immutable. */
-  private val stageCache = new ConcurrentHashMap[String, String]()
+  /** Stage a corpus table as parquet into a temp dir (streaming file
+    * sources need a directory they can list). */
   private def stagedParquet(spark: SparkSession, sfDir: String,
                             table: String, copies: Int = 1): String =
-    stageCache.computeIfAbsent(s"$sfDir/$table/x$copies", { _ =>
-      val dir = Files.createTempDirectory(s"graft_stream_src_").toString
+    stagedDir(sfDir, s"stream_src_${table}_x$copies") { dir =>
       val df = t(spark, sfDir, table)
       (1 to copies).foreach { i =>
         df.write.mode(if (i == 1) "overwrite" else "append").parquet(dir)
       }
-      dir
-    })
-
-  private def freshDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    }
 
   /** Run a streaming query with shuffle partitions capped at 4: a
     * stateful operator creates one state store (plus checkpoint commit
@@ -79,12 +72,12 @@ object StreamingQ {
   /** Run a streaming DataFrame to a parquet sink with AvailableNow and
     * return the sink re-read — the "as the next consumer sees it" view. */
   private def runToParquet(spark: SparkSession, stream: DataFrame): DataFrame = {
-    val out = freshDir("graft_stream_out_")
+    val out = tempDir("graft_stream_out_")
     withStreamingPartitions(spark) {
       val q = stream.writeStream
         .format("parquet")
         .option("path", out)
-        .option("checkpointLocation", freshDir("graft_stream_ckpt_"))
+        .option("checkpointLocation", tempDir("graft_stream_ckpt_"))
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -102,7 +95,7 @@ object StreamingQ {
         .format("memory")
         .queryName(name)
         .outputMode("complete")
-        .option("checkpointLocation", freshDir("graft_stream_ckpt_"))
+        .option("checkpointLocation", tempDir("graft_stream_ckpt_"))
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -110,7 +103,7 @@ object StreamingQ {
     // Copy the bounded result out of the memory sink and drop the temp
     // view immediately — otherwise every invocation pins a full result
     // copy in driver memory for the session lifetime.
-    val out = freshDir("graft_stream_complete_out_")
+    val out = tempDir("graft_stream_complete_out_")
     spark.table(name).write.mode("overwrite").parquet(out)
     spark.catalog.dropTempView(name)
     spark.read.parquet(out)
@@ -238,13 +231,7 @@ object StreamingQ {
     * deterministically. */
   private def stagedWithSentinel(spark: SparkSession, sfDir: String,
                                  sentinelUser: Long): String =
-    stageCache.computeIfAbsent(s"$sfDir/sentinel$sentinelUser", { _ =>
-      stagedWithSentinelUncached(spark, sfDir, sentinelUser)
-    })
-
-  private def stagedWithSentinelUncached(spark: SparkSession, sfDir: String,
-                                         sentinelUser: Long): String =
-    stageCorpusWithSentinels(spark, sfDir,
+    stageCorpusWithSentinels(spark, sfDir, s"stream_sentinel_u$sentinelUser",
       Seq((-1L, sentinelUser, None)))
 
   /** Core sentinel staging: corpus as one backdated file (so the data
@@ -266,24 +253,23 @@ object StreamingQ {
     * batch sequencing is semantic (the intake chains: evens-then-odds
     * dedup, tiered ANN index, LSH grid). */
   private def stageCorpusWithSentinels(spark: SparkSession, sfDir: String,
-      sentinels: Seq[(Long, Long, Option[String])]): String = {
-    val srcDir = freshDir("graft_stream_sentinel_src_")
-    val ev = t(spark, sfDir, "events")
-    ev.coalesce(1).write.mode("overwrite").parquet(srcDir)
-    val past = FileTime.fromMillis(1000000000000L) // fixed past mtime
-    val listing = Files.list(Paths.get(srcDir))
-    try listing.forEach { p: Path => Files.setLastModifiedTime(p, past) }
-    finally listing.close()
-    sentinels.foreach { case (eid, uid, kind) =>
-      val row = ev.limit(1)
-        .withColumn("ts", lit(java.sql.Timestamp.valueOf("2030-01-01 00:00:00")))
-        .withColumn("event_id", lit(eid))
-        .withColumn("user_id", lit(uid))
-      kind.fold(row)(k => row.withColumn("event_type", lit(k)))
-        .write.mode("append").parquet(srcDir)
+      tag: String, sentinels: Seq[(Long, Long, Option[String])]): String =
+    stagedDir(sfDir, tag) { srcDir =>
+      val ev = t(spark, sfDir, "events")
+      ev.coalesce(1).write.mode("overwrite").parquet(srcDir)
+      val past = FileTime.fromMillis(1000000000000L) // fixed past mtime
+      val listing = Files.list(Paths.get(srcDir))
+      try listing.forEach { p: Path => Files.setLastModifiedTime(p, past) }
+      finally listing.close()
+      sentinels.foreach { case (eid, uid, kind) =>
+        val row = ev.limit(1)
+          .withColumn("ts", lit(java.sql.Timestamp.valueOf("2030-01-01 00:00:00")))
+          .withColumn("event_id", lit(eid))
+          .withColumn("user_id", lit(uid))
+        kind.fold(row)(k => row.withColumn("event_type", lit(k)))
+          .write.mode("append").parquet(srcDir)
+      }
     }
-    srcDir
-  }
 
   // ---------------------------------------------------------------------
   // stream_resample_ohlc — streaming twin of win_resample_ohlc:
@@ -543,10 +529,8 @@ object StreamingQ {
     * sides' state needs one far-future sentinel PER TYPE (a single
     * sentinel would advance only the side whose filter it passes). */
   private def stagedWithTypeSentinels(spark: SparkSession, sfDir: String): String =
-    stageCache.computeIfAbsent(s"$sfDir/typeSentinels", { _ =>
-      stageCorpusWithSentinels(spark, sfDir,
-        Seq((-1L, -1L, Some("purchase")), (-2L, -1L, Some("view"))))
-    })
+    stageCorpusWithSentinels(spark, sfDir, "stream_type_sentinels",
+      Seq((-1L, -1L, Some("purchase")), (-2L, -1L, Some("view"))))
 
   // ---------------------------------------------------------------------
   // stream_join_outer — stream-stream LEFT OUTER interval join: every
@@ -653,7 +637,7 @@ object StreamingQ {
   // is processed once.
   // ---------------------------------------------------------------------
   private def streamForeachBatch(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = freshDir("graft_stream_feb_out_")
+    val out = tempDir("graft_stream_feb_out_")
     val src = spark.readStream.schema(Schemas.events)
       .parquet(stagedParquet(spark, sfDir, "events"))
     val q = src.writeStream
@@ -663,7 +647,7 @@ object StreamingQ {
           .option("compression", "snappy")
           .parquet(out)
       }
-      .option("checkpointLocation", freshDir("graft_stream_ckpt_"))
+      .option("checkpointLocation", tempDir("graft_stream_ckpt_"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -684,8 +668,7 @@ object StreamingQ {
   // is O(new vectors), the probe cost never changes.
   // ---------------------------------------------------------------------
   private def embHalvesDir(spark: SparkSession, sfDir: String): String =
-    stageCache.computeIfAbsent(s"$sfDir/emb_halves", { _ =>
-      val dir = freshDir("graft_stream_emb_")
+    stagedDir(sfDir, "stream_emb_halves") { dir =>
       val e = t(spark, sfDir, "embeddings")
       e.where(col("vec_id") % 2 === 0).coalesce(1)
         .write.mode("overwrite").parquet(dir)
@@ -695,8 +678,7 @@ object StreamingQ {
       finally listing.close()
       e.where(col("vec_id") % 2 === 1).coalesce(1)
         .write.mode("append").parquet(dir)
-      dir
-    })
+    }
 
   private def streamAnnIndex(spark: SparkSession, sfDir: String): DataFrame =
     graft.queries.LlmVector.probeIvfIndex(spark, sfDir,
@@ -859,7 +841,7 @@ object StreamingQ {
       crashAtBatch: Option[Long] = None,
       crashAfterRun: Boolean = false)
       : IntakeResult = {
-    val root = resumeRoot.getOrElse(freshDir(rootPrefix))
+    val root = resumeRoot.getOrElse(tempDir(rootPrefix))
     var chain = Vector.empty[(Int, String)]
     // (retireBatchId, dir) of merged-away runs awaiting their TTL
     var retired = Vector.empty[(Long, String)]
@@ -974,7 +956,7 @@ object StreamingQ {
           due.length, dueFiles, deadFilesBefore))
       }
       .option("checkpointLocation",
-        checkpointDir.getOrElse(freshDir("graft_stream_ckpt_")))
+        checkpointDir.getOrElse(tempDir("graft_stream_ckpt_")))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -1072,8 +1054,7 @@ object StreamingQ {
     * [[stagedDocsParts]], used by the ANN-index intake profiler. */
   private[graft] def stagedEmbParts(spark: SparkSession, sfDir: String,
                                     parts: Int): String =
-    stageCache.computeIfAbsent(s"$sfDir/embeddings/parts$parts", { _ =>
-      val dir = freshDir("graft_stream_emb_")
+    stagedDir(sfDir, s"stream_emb_parts$parts") { dir =>
       val e = t(spark, sfDir, "embeddings")
       val seen = scala.collection.mutable.Set.empty[Path]
       val base = 1000000000000L
@@ -1090,8 +1071,7 @@ object StreamingQ {
         }
         finally listing.close()
       }
-      dir
-    })
+    }
 
   // ---------------------------------------------------------------------
   // stream_merge_upsert — streaming CDC upsert: change batches arrive
@@ -1113,8 +1093,7 @@ object StreamingQ {
   private def streamMergeUpsert(spark: SparkSession, sfDir: String): DataFrame = {
     val snapshot = t(spark, sfDir, "orders")
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-    val srcDir = stageCache.computeIfAbsent(s"$sfDir/cdc_merge", { _ =>
-      val dir = freshDir("graft_stream_cdc_")
+    val srcDir = stagedDir(sfDir, "stream_cdc_merge") { dir =>
       snapshot.where(col("o_orderkey") % 97 === 0)
         .withColumn("o_totalprice",
           (dec(col("o_totalprice")) + lit(BigDecimal("1000.00"))).cast("double"))
@@ -1131,9 +1110,8 @@ object StreamingQ {
         .select((col("o_orderkey") + lit(shift)).as("o_orderkey"),
           col("o_custkey"), lit("N").as("o_orderstatus"), col("o_totalprice"))
         .coalesce(1).write.mode("append").parquet(dir)
-      dir
-    })
-    var cur = freshDir("graft_stream_merge_t_")
+    }
+    var cur = tempDir("graft_stream_merge_t_")
     snapshot.write.mode("overwrite").parquet(cur)
     val src = spark.readStream.schema(snapshot.schema)
       .option("maxFilesPerTrigger", 1)
@@ -1150,7 +1128,7 @@ object StreamingQ {
               .as("o_orderstatus"),
             coalesce(col("s.o_totalprice"), col("t.o_totalprice"))
               .as("o_totalprice"))
-        val next = freshDir("graft_stream_merge_t_")
+        val next = tempDir("graft_stream_merge_t_")
         merged.write.mode("overwrite").parquet(next)
         val prev = cur
         cur = next
@@ -1163,7 +1141,7 @@ object StreamingQ {
         }
         rm(new java.io.File(prev))
       }
-      .option("checkpointLocation", freshDir("graft_stream_ckpt_"))
+      .option("checkpointLocation", tempDir("graft_stream_ckpt_"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -1193,8 +1171,7 @@ object StreamingQ {
     * and heavy-hitters keys so their oracles replay the same split. */
   private def evenOddStagedEvents(spark: SparkSession, sfDir: String): String = {
     val ev = t(spark, sfDir, "events")
-    stageCache.computeIfAbsent(s"$sfDir/inc_agg", { _ =>
-      val dir = freshDir("graft_stream_incagg_")
+    stagedDir(sfDir, "stream_even_odd_events") { dir =>
       ev.where(col("event_id") % 2 === 0).coalesce(1)
         .write.mode("overwrite").parquet(dir)
       val past = FileTime.fromMillis(1000000000000L)
@@ -1203,14 +1180,13 @@ object StreamingQ {
       finally listing.close()
       ev.where(col("event_id") % 2 === 1).coalesce(1)
         .write.mode("append").parquet(dir)
-      dir
-    })
+    }
   }
 
   private def streamIncrementalAgg(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = t(spark, sfDir, "events")
     val srcDir = evenOddStagedEvents(spark, sfDir)
-    var cur = freshDir("graft_stream_incagg_t_")
+    var cur = tempDir("graft_stream_incagg_t_")
     ev.limit(0).select(col("event_type"), lit(0L).as("n_events"),
       lit(0L).as("sum_e2")).write.mode("overwrite").parquet(cur)
     val src = spark.readStream.schema(ev.schema)
@@ -1228,7 +1204,7 @@ object StreamingQ {
               coalesce(col("b_cnt"), lit(0L))).as("n_events"),
             (coalesce(col("sum_e2"), lit(0L)) +
               coalesce(col("b_sum"), lit(0L))).as("sum_e2"))
-        val next = freshDir("graft_stream_incagg_t_")
+        val next = tempDir("graft_stream_incagg_t_")
         merged.write.mode("overwrite").parquet(next)
         val prev = cur
         cur = next
@@ -1238,7 +1214,7 @@ object StreamingQ {
         }
         rm(new java.io.File(prev))
       }
-      .option("checkpointLocation", freshDir("graft_stream_ckpt_"))
+      .option("checkpointLocation", tempDir("graft_stream_ckpt_"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -1279,7 +1255,7 @@ object StreamingQ {
     // semantics. Snapshots are d·w-bounded (≤ 12,288 rows) so keeping
     // the per-batch chain costs batches·|sketch|, trivially small; the
     // root temp dir is per-invocation.
-    val snapRoot = freshDir("graft_stream_cms_t_")
+    val snapRoot = tempDir("graft_stream_cms_t_")
     var cur = s"$snapRoot/b_init"
     ev.limit(0).selectExpr("CAST(0 AS INT) AS row", "'' AS cell",
       "CAST(0 AS BIGINT) AS cnt").write.mode("overwrite").parquet(cur)
@@ -1303,7 +1279,7 @@ object StreamingQ {
         }
         cur = next
       }
-      .option("checkpointLocation", freshDir("graft_stream_ckpt_"))
+      .option("checkpointLocation", tempDir("graft_stream_ckpt_"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -1341,7 +1317,7 @@ object StreamingQ {
                                  sfDir: String): DataFrame = {
     val ev = t(spark, sfDir, "events")
     val srcDir = evenOddStagedEvents(spark, sfDir)
-    val snapRoot = freshDir("graft_stream_qh_t_")
+    val snapRoot = tempDir("graft_stream_qh_t_")
     var cur = s"$snapRoot/b_init"
     ev.limit(0).selectExpr("event_type",
       "CAST(0 AS BIGINT) AS v", "CAST(0 AS BIGINT) AS cnt")
@@ -1366,7 +1342,7 @@ object StreamingQ {
         }
         cur = next
       }
-      .option("checkpointLocation", freshDir("graft_stream_qhck_"))
+      .option("checkpointLocation", tempDir("graft_stream_qhck_"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -1412,7 +1388,7 @@ object StreamingQ {
                                 sfDir: String): DataFrame = {
     val ev = t(spark, sfDir, "events")
     val srcDir = evenOddStagedEvents(spark, sfDir)
-    val snapRoot = freshDir("graft_stream_hll_t_")
+    val snapRoot = tempDir("graft_stream_hll_t_")
     var cur = s"$snapRoot/b_init"
     ev.limit(0).groupBy("event_type")
       .agg(expr("hll_sketch_agg(user_id, 14)").as("sk"))
@@ -1436,7 +1412,7 @@ object StreamingQ {
         }
         cur = next
       }
-      .option("checkpointLocation", freshDir("graft_stream_hllck_"))
+      .option("checkpointLocation", tempDir("graft_stream_hllck_"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -1477,7 +1453,7 @@ object StreamingQ {
     import org.apache.spark.sql.expressions.Window
     val ev = t(spark, sfDir, "events")
     val srcDir = evenOddStagedEvents(spark, sfDir)
-    var cur = freshDir("graft_stream_topk_s_")
+    var cur = tempDir("graft_stream_topk_s_")
     ev.limit(0).select(col("user_id"), lit(0L).as("cnt"))
       .write.mode("overwrite").parquet(cur)
     val wTop = Window.orderBy(col("cnt").desc, col("user_id"))
@@ -1495,7 +1471,7 @@ object StreamingQ {
           .withColumn("rk", row_number().over(wTop))
           .where(col("rk") <= 64)
           .select("user_id", "cnt")
-        val next = freshDir("graft_stream_topk_s_")
+        val next = tempDir("graft_stream_topk_s_")
         merged.write.mode("overwrite").parquet(next)
         val prev = cur
         cur = next
@@ -1505,7 +1481,7 @@ object StreamingQ {
         }
         rm(new java.io.File(prev))
       }
-      .option("checkpointLocation", freshDir("graft_stream_ckpt_"))
+      .option("checkpointLocation", tempDir("graft_stream_ckpt_"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -1544,8 +1520,7 @@ object StreamingQ {
     * prove cross-batch state without a per-file checkpoint storm. */
   private[graft] def stagedDocsHalves(spark: SparkSession, sfDir: String,
                                       evenFirst: Boolean = true): String =
-    stageCache.computeIfAbsent(s"$sfDir/documents/halves$evenFirst", { _ =>
-      val dir = freshDir("graft_stream_docs_")
+    stagedDir(sfDir, s"stream_docs_${if (evenFirst) "even" else "odd"}_first") { dir =>
       val docs = t(spark, sfDir, "documents")
       val firstParity = if (evenFirst) 0 else 1
       docs.where(col("doc_id") % 2 === firstParity).coalesce(1)
@@ -1556,8 +1531,7 @@ object StreamingQ {
       finally listing.close()
       docs.where(col("doc_id") % 2 === (1 - firstParity)).coalesce(1)
         .write.mode("append").parquet(dir)
-      dir
-    })
+    }
 
   /** Stage documents as `parts` files with strictly increasing mtimes
     * (doc_id % parts = part), so maxFilesPerTrigger=1 delivers exactly
@@ -1565,8 +1539,7 @@ object StreamingQ {
     * [[stagedDocsHalves]], used by the steady-state intake profiler. */
   private[graft] def stagedDocsParts(spark: SparkSession, sfDir: String,
                                      parts: Int): String =
-    stageCache.computeIfAbsent(s"$sfDir/documents/parts$parts", { _ =>
-      val dir = freshDir("graft_stream_docs_")
+    stagedDir(sfDir, s"stream_docs_parts$parts") { dir =>
       val docs = t(spark, sfDir, "documents")
       val seen = scala.collection.mutable.Set.empty[Path]
       val base = 1000000000000L
@@ -1583,8 +1556,7 @@ object StreamingQ {
         }
         finally listing.close()
       }
-      dir
-    })
+    }
 
   private def streamDedupMinhash(spark: SparkSession, sfDir: String): DataFrame =
     streamDedupMinhashStaged(spark, stagedDocsHalves(spark, sfDir))
@@ -1742,9 +1714,9 @@ object StreamingQ {
       crashAtBatch: Option[Long] = None,
       crashAfterRun: Boolean = false): Seq[String] = {
     val snapRoot = resumeRoots.map(_._1)
-      .getOrElse(freshDir("graft_stream_incded_t_"))
+      .getOrElse(tempDir("graft_stream_incded_t_"))
     val verdictRoot = resumeRoots.map(_._2)
-      .getOrElse(freshDir("graft_stream_incded_v_"))
+      .getOrElse(tempDir("graft_stream_incded_v_"))
     // (retireBatchId, dir) of merged-away runs awaiting their TTL
     var retired = Vector.empty[(Long, String)]
     val init = s"$snapRoot/b_init"
@@ -1875,7 +1847,7 @@ object StreamingQ {
           due.length, dueFiles, deadFilesBefore))
       }
       .option("checkpointLocation",
-        checkpointDir.getOrElse(freshDir("graft_stream_ckpt_")))
+        checkpointDir.getOrElse(tempDir("graft_stream_ckpt_")))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()

@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (each run pinning a fresh cached copy) that produced the r7 driver
   * bench outlier can then never silently return.
   *
-  * Mechanism per class: session-memoized caches hold exactly one copy
-  * per (session, sfDir) by construction; paired persist/unpersist
+  * Mechanism per class: session-memoized tables (Fixtures.persisted,
+  * Fixtures.stagedPersisted) hold exactly one copy per (session, sfDir,
+  * tag) by construction; paired persist/unpersist
   * sites release within the builder; per-invocation re-persists of
   * the SAME canonical plan are deduped by Spark's CacheManager; and
   * localCheckpoint blocks are reclaimed by the ContextCleaner once
@@ -46,7 +47,8 @@ class CacheLifecycleSpec extends AnyFunSuite {
   }
 
   // One representative key per lifecycle class (PLANS.md table):
-  //   class 1 session-memoized: llm_dedup_minhash (signedCache)
+  //   class 1 session-memoized: llm_dedup_minhash (LlmText.signed via
+  //           Fixtures.persisted)
   //   class 2 paired unpersist: llm_pagerank
   //   class 3 CacheManager-deduped re-persist: llm_vocab_build,
   //           llm_triangle_count, llm_bpe_apply

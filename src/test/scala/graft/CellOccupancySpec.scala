@@ -71,8 +71,7 @@ class CellOccupancySpec extends AnyFunSuite {
       .parquet("/root/testdata/sf0.01/embeddings.parquet")
     val n0 = base.count()
     for (mult <- Seq(8, 16)) {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_kscale_x$mult").toString
+      val dir = graft.etl.Fixtures.tempDir(s"graft_kscale_x$mult")
       val reps = spark.range(0, mult).selectExpr("id AS rep")
       base.crossJoin(reps)
         .selectExpr(

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.{Fixtures, Ingest}
 
@@ -29,6 +30,17 @@ class EtlSpec extends AnyFunSuite {
   private val badSchema = StructType(Seq(
     StructField("k", LongType), StructField("qty", DoubleType),
     StructField("note", StringType)))
+
+  test("oracle SQL names no temp dir that is deleted at JVM exit") {
+    // DuckDB runs the dumped oracle SQL after the dumping JVM has exited
+    val sql = SparkEntry.oracleSql.values.mkString("\n")
+    val badCsv = Paths.get(graft.queries.EtlQueries.BadCsvDir, "bad.csv")
+    assert(sql.contains(badCsv.toString))
+    assert(Files.isRegularFile(badCsv))
+    val doomed = Fixtures.createdDirs.asScala.map(_.toString)
+      .filter(sql.contains(_))
+    assert(doomed.isEmpty, s"oracle SQL names dirs deleted at exit: $doomed")
+  }
 
   test("PERMISSIVE keeps all rows, nulls bad fields, tags corrupt record") {
     val df = Ingest.readCsv(spark, badCsvDir, badSchema,

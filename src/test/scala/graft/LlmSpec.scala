@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.{LlmText, LlmVector}
@@ -212,17 +212,27 @@ class LlmSpec extends AnyFunSuite {
     // session's context is stopped. Asserting `sparkSession eq` on a
     // newSession() catches exactly that wrong-session binding without
     // stopping the suite-shared SparkContext out from under the other
-    // (concurrently running) suites.
+    // (concurrently running) suites. Covers every session-memoized
+    // builder: the lineage-persisted tables and one staged-parquet
+    // artifact (Fixtures.stagedPersisted).
     val a = spark
-    val sigA = LlmText.signed(a, sfDir)
-    assert(sigA.sparkSession eq a)
     val b = a.newSession()
-    val sigB = LlmText.signed(b, sfDir)
-    assert(sigB.sparkSession eq b,
-      "cache returned a DataFrame bound to a different session")
-    // per-session entries are stable (no rebuild on re-ask) …
-    assert(LlmText.signed(b, sfDir) eq sigB)
-    assert(LlmText.signed(a, sfDir) eq sigA)
+    val builders = Seq[(String, SparkSession => DataFrame)](
+      "signed" -> (LlmText.signed(_, sfDir)),
+      "simhashFp" -> (LlmText.simhashFp(_, sfDir)),
+      "knnGraphRanked" -> (LlmText.knnGraphRanked(_, sfDir)),
+      "dedupClusters" -> (LlmText.dedupClusters(_, sfDir)),
+      "verifiedPairs" -> (LlmText.verifiedPairs(_, sfDir)))
+    builders.foreach { case (name, build) =>
+      val dfA = build(a)
+      assert(dfA.sparkSession eq a, name)
+      val dfB = build(b)
+      assert(dfB.sparkSession eq b,
+        s"$name: cache returned a DataFrame bound to a different session")
+      // per-session entries are stable (no rebuild on re-ask) …
+      assert(build(b) eq dfB, name)
+      assert(build(a) eq dfA, name)
+    }
     // … and the full pipeline runs green on the new session
     val na = LlmText.defs("llm_dedup_minhash")(a, sfDir).count()
     val nb = LlmText.defs("llm_dedup_minhash")(b, sfDir).count()

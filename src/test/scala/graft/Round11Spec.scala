@@ -19,7 +19,7 @@ class Round11Spec extends AnyFunSuite {
 
   /** Write a documents.parquet corpus into a fresh dir and return it. */
   private def docsDir(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r11_docs_").toString
+    val dir = graft.etl.Fixtures.tempDir("graft_r11_docs_")
     import spark.implicits._
     rows.toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' AS lang", "'unit' AS source",

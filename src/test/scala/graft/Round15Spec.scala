@@ -46,8 +46,7 @@ class Round15Spec extends AnyFunSuite {
     import graft.streaming.StreamingQ
     val nBits = graft.queries.LlmVector.lshBits(spark, sfDir)
     val src = StreamingQ.stagedEmbParts(spark, sfDir, 16)
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
+    def tmp(p: String) = graft.etl.Fixtures.tempDir(p)
     type Stats =
       scala.collection.mutable.ArrayBuffer[StreamingQ.IntakeBatchStat]
     def intake(root: String, ckpt: String, stats: Stats,
@@ -137,8 +136,7 @@ class Round15Spec extends AnyFunSuite {
   test("dedup chain restart: crash, recover, resumed verdicts == uninterrupted") {
     import graft.streaming.StreamingQ
     val src = StreamingQ.stagedDocsParts(spark, sfDir, 16)
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
+    def tmp(p: String) = graft.etl.Fixtures.tempDir(p)
     type Stats =
       scala.collection.mutable.ArrayBuffer[StreamingQ.IntakeBatchStat]
     def intake(roots: (String, String), ckpt: String, stats: Stats,
