@@ -25,6 +25,8 @@ object Bench {
       .config("spark.sql.files.openCostInBytes", "256k")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries",
+        graft.functions.GraftExtensions.CodegenCacheMaxEntries.toLong)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Route log4j2 WARN+ to a per-run file instead of the console

@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -13,6 +14,8 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries",
+        graft.functions.GraftExtensions.CodegenCacheMaxEntries.toLong)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
@@ -29,21 +32,7 @@ object Verify {
     val selected = SparkEntry.queries.filter { case (name, _) =>
       only.forall(_.contains(name))
     }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        // remove any stale output from a previous run — a leftover dump
-        // would let the oracle compare silently pass on old results
-        def rm(f: java.io.File): Unit = {
-          // listFiles() is null for unreadable/vanished dirs — skip, don't NPE
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete()
-        }
-        rm(new java.io.File(s"$outDir/$name"))
-      }
-    }
+    dump(spark, sfDir, outDir, selected)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -61,4 +50,25 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** Write each key's result to `outDir/<key>`. A key that fails is
+    * reported and the rest still run; a fatal error (OOM, interrupt)
+    * ends the dump, since the JVM may be too damaged to trust. */
+  private[graft] def dump(spark: SparkSession, sfDir: String, outDir: String,
+      keys: Map[String, (SparkSession, String) => DataFrame]): Unit =
+    keys.foreach { case (name, fn) =>
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        // remove any stale output from a previous run — a leftover dump
+        // would let the oracle compare silently pass on old results
+        def rm(f: java.io.File): Unit = {
+          // listFiles() is null for unreadable/vanished dirs — skip, don't NPE
+          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
+          f.delete()
+        }
+        rm(new java.io.File(s"$outDir/$name"))
+      }
+    }
 }

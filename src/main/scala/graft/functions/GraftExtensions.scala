@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{GraftSqlBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** The supported extension point for the engine's custom expressions:
   * `spark.sql.extensions=graft.functions.GraftExtensions` (or
@@ -11,9 +12,17 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * API (`VectorOps.dot`). Sessions created without the extension still
   * run every `SparkEntry` query — the query builders bind expressions
   * through the Column API and never require the SQL registration.
+  *
+  * It also sizes Spark's generated-class cache for the engine's working
+  * set (see [[GraftExtensions.CodegenCacheMaxEntries]]): `apply` runs
+  * inside `getOrCreate` after the SparkContext exists and before the
+  * session's shared state copies its conf.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftSqlBridge.setContextConfIfMissing(
+      StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+      GraftExtensions.CodegenCacheMaxEntries.toString)
     // whole-operator extension: per-group top-k (graft.plans)
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
     // optimizer-rule extension: rewrite the row_number()<=k window idiom
@@ -75,4 +84,24 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         WordNGrams(args.head, n)
       }))
   }
+}
+
+object GraftExtensions {
+  /** Default for `spark.sql.codegen.cache.maxEntries` (Spark's is 100).
+    *
+    * Spark keeps compiled classes in one LRU per JVM, sized once from
+    * this static conf when code is first generated. Its key includes the
+    * thread's context class loader, and in local mode the driver thread
+    * and the executor task threads use different loaders, so every
+    * whole-stage class is cached twice. The 8 curate keys of the
+    * benchmark fill ~111 entries in a fresh JVM: at 100 the LRU evicts
+    * what the next pass needs, and every pass over a new shard
+    * recompiled ~60 classes. Landing CSV batches fills ~38 entries,
+    * which fit. 2000 holds both with room for the rest of the registry.
+    *
+    * Set with `setIfMissing`, so a value the user sets explicitly wins.
+    * It takes effect only if the extension's session is the first one
+    * in the JVM to generate code: a cache already built keeps its size.
+    */
+  val CodegenCacheMaxEntries: Int = 2000
 }

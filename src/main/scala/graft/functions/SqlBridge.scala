@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into `private[sql]` seams of Spark 4's Column API. Custom
@@ -7,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * `Column`s; the supported path (`SparkSessionExtensions.injectFunction`)
   * requires owning session construction, which the evaluation harness
   * does not guarantee — so this uses the same in-package bridge pattern
-  * as other Spark extension libraries. Kept to the two minimal hooks.
+  * as other Spark extension libraries. Kept to minimal hooks.
   */
 object GraftSqlBridge {
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -32,4 +33,9 @@ object GraftSqlBridge {
     if (!cs.experimental.extraStrategies.contains(s))
       cs.experimental.extraStrategies = cs.experimental.extraStrategies :+ s
   }
+
+  /** Set `key` on the running SparkContext's own conf unless it is set.
+    * Sessions built after this copy it, static SQL confs included. */
+  def setContextConfIfMissing(key: String, value: String): Unit =
+    SparkContext.getActive.foreach(_.conf.setIfMissing(key, value))
 }
