@@ -2,10 +2,14 @@ package graft.etl
 
 import org.apache.spark.sql.types._
 
-/** Explicit StructTypes for the test corpus (FIXTURES.md). The
-  * reference pipeline infers schemas per CSV file; at 100 TB inference
-  * is an extra full scan, so production paths here always pass an
-  * explicit schema and reserve `inferSchema` for exploration.
+/** The CSV landing contract: the StructTypes that the paper's
+  * CSV -> Parquet path (`Ingest`) and the events streaming sources
+  * read their inputs with. The reference pipeline infers schemas per
+  * CSV file; at 100 TB inference is an extra full scan, so production
+  * paths here always pass an explicit schema and reserve `inferSchema`
+  * for exploration. These are not the corpus read schemas
+  * ([[graft.Tables.schemas]]): a landed timestamp is a session-zone
+  * `TimestampType`, while the corpus files hold TIMESTAMP_NTZ.
   */
 object Schemas {
   val events: StructType = StructType(Seq(
@@ -15,13 +19,6 @@ object Schemas {
     StructField("event_type", StringType),
     StructField("value", DoubleType),
     StructField("props", StringType)))
-
-  val documents: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
 
   val lineitem: StructType = StructType(Seq(
     StructField("l_orderkey", LongType),

@@ -1565,7 +1565,7 @@ object StreamingQ {
                                               srcDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val src = spark.readStream.schema(Schemas.documents)
+    val src = spark.readStream.schema(graft.Tables.schemas("documents"))
       .option("maxFilesPerTrigger", 1)
       .parquet(srcDir)
     val banded = src
@@ -1737,7 +1737,7 @@ object StreamingQ {
         .sortBy(_.getName.drop(1).toLong)
         .map(_.getPath).toSeq
     }
-    val src = spark.readStream.schema(Schemas.documents)
+    val src = spark.readStream.schema(graft.Tables.schemas("documents"))
       .option("maxFilesPerTrigger", 1)
       .parquet(srcDir)
     val q = src.writeStream
