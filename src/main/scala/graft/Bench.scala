@@ -3,32 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the bench corpora are small files (sf0.1 tables < 11 MB; the
-      // ×N scale dirs hold one ~0.5–17 MB file per copy): the 128 MB
-      // default packs a whole table into 1-2 scan tasks, serializing
-      // every CPU-heavy map stage. 8 MB sizes splits so scans spread
-      // across cores at these volumes — the knob the Spark guide says
-      // to size to the SF, doing exactly that.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"))
-      // pair the smaller split budget with a proportionally smaller
-      // per-file open cost, or many-tiny-file sources (binaryFile: one
-      // object per doc) degrade to ~2 files per task — 0.19 s → 2.64 s
-      // measured on scan_binaryfile when 8m met the default 4m open
-      // cost. 256k keeps ~30 small files per task, the same packing
-      // the defaults gave.
-      .config("spark.sql.files.openCostInBytes", "256k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.functions.GraftExtensions.CodegenCacheMaxEntries.toLong)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // Route log4j2 WARN+ to a per-run file instead of the console
     // (VERDICT r11 #3): driver and executor threads share this JVM in
     // local mode, so a benign retried/killed-task stack trace logged
@@ -93,16 +68,7 @@ object Bench {
     // min-of-2 inherited a 9.7 s reading for a 1.0 s key; a third run
     // reliably lands outside the episode.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    // Dev-only: SPARK_GRAFT_ONLY=key1,key2 restricts the run (the
-    // driver sets no env, so it always measures the full suite).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // A typo'd or stale key name must fail loudly, not silently measure
-    // a partial (or empty) suite and write a hollow results file.
-    only.foreach { keys =>
-      val unknown = keys -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names unknown keys: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
+    val only = SparkEntry.onlyKeys()
     // Untimed fixture-staging pass (VERDICT r7 #7): these keys build
     // one-time parquet-staged artifacts (Fixtures.stagedPersisted —
     // PPJoin prefix tables, PMI/LM count tables, PPM image fixtures)

@@ -29,4 +29,17 @@ object SparkEntry {
       Aggregates.oracle ++ Windows.oracle ++ SetSort.oracle ++
       ScalarFns.oracle ++ StreamingQ.oracle ++ LlmText.oracle ++
       LlmVector.oracle
+
+  /** The keys named by the dev-only filter `SPARK_GRAFT_ONLY=key1,key2`
+    * that `Verify` and `Bench` honour, or None when it is unset and
+    * every key runs. An unknown name fails loudly: a silent partial or
+    * empty selection would let stale dumps pass or write a hollow
+    * results file. */
+  private[graft] def onlyKeys(): Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet).map { keys =>
+      val unknown = keys -- queries.keySet
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY names unknown keys: ${unknown.toSeq.sorted.mkString(", ")}")
+      keys
+    }
 }

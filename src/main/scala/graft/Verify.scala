@@ -7,28 +7,9 @@ import scala.util.control.NonFatal
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.functions.GraftExtensions.CodegenCacheMaxEntries.toLong)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
-    // Dev-only: SPARK_GRAFT_ONLY=key1,key2 restricts the dump (the
-    // driver sets no env, so it always gets the full run).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // Typo'd key names fail loudly (same guard as Bench) — a silent
-    // empty selection would dump nothing and let stale results pass.
-    only.foreach { keys =>
-      val unknown = keys -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names unknown keys: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
+    val only = SparkEntry.onlyKeys()
     val selected = SparkEntry.queries.filter { case (name, _) =>
       only.forall(_.contains(name))
     }

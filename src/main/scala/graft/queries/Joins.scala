@@ -534,7 +534,7 @@ object Joins {
     // clean side stays depth 2 but drops its IDENTITY variant — a
     // 9-char string can never equal a ≤ 8-char dirty variant, so that
     // row was 15 k dead join input (45 variants, was 46). Measured at
-    // sf0.1 (graft.Prof fuzzy): dirty explode 555 k → 135 k rows while
+    // sf0.1 (noop-sink profile): dirty explode 555 k → 135 k rows while
     // the DISTINCT candidate pair set is bit-identical (109,086 pairs
     // under both enumerations) — the depth-2 dirty variants only
     // re-found pairs depth 1 already finds, so the cut is pure join-

@@ -3026,7 +3026,7 @@ object LlmText {
     // could never pass — the declared answer is unchanged (oracle
     // hash-checked). The length filter moves to exact integer form
     // (2·min ≥ max ⟺ min ≥ 0.5·max on ints). Candidate volume at
-    // sf0.1 (graft.Prof setsim): distinct pairs 309,803 → 124,979
+    // sf0.1 (noop-sink profile): distinct pairs 309,803 → 124,979
     // (2.48×) and prefix-match rows 328,628 → 131,671, so the verify
     // joins re-attach els arrays for 2.5× fewer pairs — a cut that
     // deepens with corpus size (prefixes lengthen, positions spread).

@@ -514,7 +514,7 @@ object LlmVector {
   // derived−6 point's, reaching the ≥50%@10 floor at roughly half its
   // candidate budget; the ×64 floor crossing itself (derived−2,
   // L=128) is oracle-gated by `llm_ann_lsh_tune_xl` since r15 —
-  // measured off-suite first (r14 LshGridProbe: 51.6%@10 at 3.0% of
+  // measured off-suite first (r14 grid probe: 51.6%@10 at 3.0% of
   // the corpus, the same ~3.9k budget where the coarse arm read
   // 23.6%), now a suite grid row re-verified every round.
   // ---------------------------------------------------------------------
@@ -527,8 +527,8 @@ object LlmVector {
   // ---------------------------------------------------------------------
   // llm_ann_lsh_tune_xl — the ≥50%@10 CROSSING arm of the wide-L grid
   // (VERDICT r14 #1): r14 measured the ×64 recall floor being crossed
-  // at derived−2 bits, L=128 — but only in an off-suite dev probe
-  // (LshGridProbe), so the named production operating point was never
+  // at derived−2 bits, L=128 — but only in an off-suite dev probe,
+  // so the named production operating point was never
   // re-verified by the driver's gates. This key graduates it: the same
   // one-coarsest-prefix-join min-table device as the other two grids,
   // at L ∈ {64, 96, 128} × {derived, derived−2} bits, oracle-replayed
@@ -550,7 +550,7 @@ object LlmVector {
 
   // ---------------------------------------------------------------------
   // llm_ann_lsh_planted — PLANTED-MARGIN recall, oracle-gated (the
-  // suite graduation of the r15 PlantedGridProbe/stage_planted dev
+  // suite graduation of the r15 stage_planted dev
   // measurement, per the house graduate-every-no-oracle-result rule):
   // for each of the 128 sampled anchors, a partner vector is
   // constructed IN-PLAN at an exact fixed cosine c ∈ {0.95, 0.8, 0.6}
@@ -646,9 +646,7 @@ object LlmVector {
     * prefix (the superset candidate set — the prefix property makes
     * bucket@b the first b chars of the full bucket), min_tbl per bits
     * level per (query, neighbor), every grid cell a threshold. Both
-    * grid keys call this with their own (tableCounts, bitDeltas);
-    * [[graft.streaming.LshGridProbe]] drives it at arbitrary
-    * configurations for off-suite measurements. */
+    * grid keys call this with their own (tableCounts, bitDeltas). */
   private[graft] def annLshGrid(spark: SparkSession, sfDir: String,
       tableCounts: Seq[Int], bitDeltas: Seq[Int]): DataFrame = {
     import spark.implicits._

@@ -738,11 +738,9 @@ object StreamingQ {
     spark.read.parquet(res.verdictDirs: _*).orderBy("vec_id")
   }
 
-  /** The ANN-index intake loop itself, shared by the `stream_ann_index`
-    * key (2 micro-batches: corpus halves) and the many-batch
-    * steady-state profiler [[AnnIndexIntakeProfile]] (VERDICT r11 #5 —
-    * the intake-profile treatment `stream_incremental_dedup` got at
-    * r11). Each micro-batch assigns cells MAP-SIDE against the
+  /** The ANN-index intake loop itself, run by the `stream_ann_index`
+    * key (2 micro-batches: corpus halves) and over many batches by
+    * Round12Spec/Round13Spec. Each micro-batch assigns cells MAP-SIDE against the
     * broadcast parity centroids (the fused BestCentroid argmax; nlist
     * is fixed at index-build time from the indexed corpus — the k ∝ N
     * rule — so the maintained index keeps sharing llm_ann_ivf's
@@ -1666,9 +1664,9 @@ object StreamingQ {
       reclaimedDirs: Int = 0, reclaimedFiles: Int = 0,
       deadFilesBefore: Int = 0)
 
-  /** The intake loop itself, shared by the `stream_incremental_dedup`
-    * key (2 micro-batches: corpus, then crawl) and the many-batch
-    * steady-state profiler [[DedupIntakeProfile]] (VERDICT r10 #3).
+  /** The intake loop itself, run by the `stream_incremental_dedup`
+    * key (2 micro-batches: corpus, then crawl) and over many batches by
+    * Round15Spec.
     * Returns the committed verdict dirs in batch order.
     *
     * INDEX CHAIN = append + size-tiered compaction. Each batch commits

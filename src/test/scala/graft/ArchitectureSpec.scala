@@ -2,27 +2,42 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the memo and temp-dir decision in one module: no main-source
-  * file other than etl/Fixtures.scala may declare a session-keyed cache
-  * or create temp dirs itself. */
+/** Keeps each cross-cutting decision in one module: no main-source file
+  * other than etl/Fixtures.scala may declare a session-keyed cache or
+  * create temp dirs itself, and none other than Session.scala may build
+  * a session. */
 class ArchitectureSpec extends AnyFunSuite {
-  test("only etl/Fixtures.scala declares session memos or creates temp dirs") {
-    val root = Paths.get("src/main/scala")
-    val owner = root.resolve("graft/etl/Fixtures.scala")
-    val banned = Seq(raw"WeakHashMap\s*\[\s*SparkSession".r,
-      raw"createTempDirectory".r)
+  private val root = Paths.get("src/main/scala")
+
+  /** `file: pattern` for each main-source file other than `owner` in
+    * which one of `banned` occurs. */
+  private def offenders(owner: String, banned: Seq[Regex]): List[String] = {
+    val ownerPath = root.resolve(owner)
+    assert(Files.isRegularFile(ownerPath))
     val walk = Files.walk(root)
-    val offenders = try walk.iterator.asScala
-      .filter(p => p.toString.endsWith(".scala") && p != owner)
+    try walk.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && p != ownerPath)
       .flatMap { p =>
         val src = Files.readString(p)
         banned.filter(_.findFirstIn(src).isDefined).map(r => s"$p: $r")
       }.toList
     finally walk.close()
-    assert(Files.isRegularFile(owner))
-    assert(offenders.isEmpty,
-      s"memo/temp-dir code outside graft.etl.Fixtures: ${offenders.mkString("; ")}")
+  }
+
+  test("only etl/Fixtures.scala declares session memos or creates temp dirs") {
+    val found = offenders("graft/etl/Fixtures.scala",
+      Seq(raw"WeakHashMap\s*\[\s*SparkSession".r, raw"createTempDirectory".r))
+    assert(found.isEmpty,
+      s"memo/temp-dir code outside graft.etl.Fixtures: ${found.mkString("; ")}")
+  }
+
+  test("only Session.scala builds a SparkSession") {
+    val found = offenders("graft/Session.scala",
+      Seq(raw"SparkSession\s*\.\s*builder".r))
+    assert(found.isEmpty,
+      s"session built outside graft.Session: ${found.mkString("; ")}")
   }
 }

@@ -20,9 +20,10 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
   * snapshot is deliberately regenerated; `tools/plan_diff.py` diffs
   * two snapshots across rounds.
   *
-  * Usage: runMain graft.PlanDigest <sfDir> <outFile>
-  * (sfDir must be sf0.001 for spec parity — join strategy choices are
-  * statistics-driven, so shapes are pinned at a fixed scale factor.)
+  * Usage: `sbt "Test/runMain graft.PlanDigest <sfDir> plans_r17.json"`
+  * (sfDir must be the sf0.001 testdata for spec parity — join
+  * strategy choices are statistics-driven, so shapes are pinned at a
+  * fixed scale factor).
   */
 object PlanDigest {
 
@@ -65,17 +66,23 @@ object PlanDigest {
   def constructionHeavy(key: String): Boolean =
     Seq("stream_", "sink_", "etl_", "catalog_").exists(key.startsWith)
 
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outFile) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+  /** The session both the snapshot and `PlanSnapshotSpec` plan under:
+    * a stock one (`local[4]`, no extensions). The committed snapshot
+    * pins the plans of exactly this session. */
+  def session(): SparkSession = {
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val Array(sfDir, outFile) = args
+    val spark = session()
     val lines = SparkEntry.queries.toSeq.sortBy(_._1).map { case (k, fn) =>
       val s =
         try shapeOf(fn(spark, sfDir))

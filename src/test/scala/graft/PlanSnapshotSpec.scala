@@ -4,9 +4,9 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guards the committed plan-fingerprint snapshot (plans_r13.json,
-  * written by `runMain graft.PlanDigest /root/testdata/sf0.001
-  * plans_r13.json`): recomputes the canonical operator-tree shape for
+/** Guards the committed plan-fingerprint snapshot (plans_r17.json,
+  * written by `sbt "Test/runMain graft.PlanDigest <sf0.001 dir>
+  * plans_r17.json"`): recomputes the canonical operator-tree shape for
   * every side-effect-free key and fails when a physical plan changed
   * without the snapshot being regenerated. This is the wide net under
   * PlanShapeSpec's hand-pinned assertions — a planner regression (an
@@ -18,17 +18,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * queries inside the unit suite.
   */
 class PlanSnapshotSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = PlanDigest.session()
 
   private val sfDir = "/root/testdata/sf0.001"
   // r17: regenerated snapshot — exactly one intentional drift vs
   // plans_r16.json (llm_setsim_join: posexplode + positional filter).
   private val snapshotPath = "plans_r17.json"
+
+  private val regenerate =
+    s"""sbt "Test/runMain graft.PlanDigest $sfDir $snapshotPath""""
 
   private lazy val committed: Map[String, String] = {
     val txt = Files.readString(Paths.get(snapshotPath))
@@ -41,12 +39,11 @@ class PlanSnapshotSpec extends AnyFunSuite {
     val extra = committed.keySet -- keys
     val missing = keys -- committed.keySet
     assert(extra.isEmpty && missing.isEmpty,
-      s"regenerate: runMain graft.PlanDigest $sfDir $snapshotPath " +
+      s"regenerate: $regenerate " +
         s"(missing=${missing.toSeq.sorted.take(5)}, stale=${extra.toSeq.sorted.take(5)})")
   }
 
   test("no side-effect-free plan shape drifted from the snapshot") {
-    spark.sparkContext.setLogLevel("WARN")
     val drifted = SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (k, _) => PlanDigest.constructionHeavy(k) }
       .flatMap { case (k, fn) =>
@@ -59,7 +56,7 @@ class PlanSnapshotSpec extends AnyFunSuite {
       }
     assert(drifted.isEmpty,
       s"${drifted.size} plan shape(s) drifted — if intentional, regenerate " +
-        s"with: runMain graft.PlanDigest $sfDir $snapshotPath\n" +
+        s"with: $regenerate\n" +
         drifted.take(5).mkString("\n"))
   }
 }

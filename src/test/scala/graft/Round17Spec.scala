@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,11 +31,19 @@ class Round17Spec extends AnyFunSuite {
   val sfDir = "/root/testdata/sf0.001"
   val sfDir01 = "/root/testdata/sf0.01"
 
+  /** Rows flowing into each unpartitioned (global) Window of `df`'s
+    * analyzed plan, counted by running the window's child. */
+  private def globalWindowInputs(df: DataFrame): Seq[Long] =
+    GraftSqlBridge.analyzedPlan(df).collect {
+      case w: LWindow if w.partitionSpec.isEmpty =>
+        GraftSqlBridge.ofRows(spark, w.child).count()
+    }
+
   test("every global-window input is value-domain-bounded at sf0.01") {
     spark.sparkContext.setLogLevel("WARN")
     // key -> (expected #global windows in the final analyzed plan,
     //         max input rows at sf0.01). Bounds are measured actuals
-    // (graft.WinProbe) with ~2x slack, all far below the data-sized
+    // (globalWindowInputs) with ~2x slack, all far below the data-sized
     // frames (events = 10,000 rows at sf0.01; lineitem = 60,000): a
     // future edit that puts a global window on a data-sized frame
     // fails this pin. The value-histogram keys (ks_test/mann_whitney)
@@ -62,7 +71,7 @@ class Round17Spec extends AnyFunSuite {
       "stream_topk" -> (1, 500L))          // post-sink user cut (64)
     val bad = expected.toSeq.sortBy(_._1).flatMap { case (key, (n, bound)) =>
       val df = SparkEntry.queries(key)(spark, sfDir01)
-      val counts = WinProbe.globalWindowInputs(spark, df)
+      val counts = globalWindowInputs(df)
       val missing =
         if (counts.size != n)
           Seq(s"$key: expected $n global windows, found ${counts.size}")

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.io.Source
 
 /** Guards the committed scale-evidence register (SCALE.md, regenerated
-  * via `python3 tools/scale_table.py plans_r12.json > SCALE.md`):
+  * via `python3 tools/scale_table.py plans_r17.json > SCALE.md`):
   * every `SparkEntry.queries` key must carry either a measured x8/x64
   * scaling row or a named bounded-by-construction tag. This is the
   * same enforcement shape as the survey table's coverage drift check —

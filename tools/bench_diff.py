@@ -5,7 +5,7 @@ Usage: python3 tools/bench_diff.py <old.json> <new.json> [threshold=1.5]
 
 Prints keys slower than threshold x (regressions), faster than
 1/threshold (improvements), and keys present in only one file. Use
-with the committed per-round snapshots (bench_r6.json, ...) so
+with the committed per-round snapshots (BENCH_r16.json, ...) so
 cross-round comparisons cover every key, not just stdout headliners.
 Dev tooling only.
 """

@@ -25,8 +25,9 @@ decays with corpus growth for reasons unrelated to the index. Planted
 pairs hold the neighbor margin constant across SFs, separating the
 DATA effect (shrinking margins) from the INDEX effect (bits PROP
 log N raising per-table selectivity on a fixed margin, the analytic
-1-(1-p(c)^bits)^L curve). graft.streaming.PlantedGridProbe measures
-the planted arm; LshGridProbe measures the background arm.
+1-(1-p(c)^bits)^L curve). The `llm_ann_lsh_planted` key measures the
+planted arm in-plan with the same "pr_<id>_<d>" tags; the
+`llm_ann_lsh_tune_wide`/`_xl` grid keys measure the background arm.
 
 Dev tooling only (python/duckdb are driver-side deps) - the shipped
 library never reads this.
