@@ -46,4 +46,17 @@ object Session {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Run `body` with `confs` set on `spark`, then put each back: to its
+    * previous value, or unset if it had none. Whatever reads the confs
+    * at execution time (AQE, the optimizer, a streaming query's start)
+    * must run inside `body`. */
+  def withConfs[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+import org.apache.commons.io.FileUtils
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -44,12 +45,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // remove any stale output from a previous run — a leftover dump
         // would let the oracle compare silently pass on old results
-        def rm(f: java.io.File): Unit = {
-          // listFiles() is null for unreadable/vanished dirs — skip, don't NPE
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete()
-        }
-        rm(new java.io.File(s"$outDir/$name"))
+        FileUtils.deleteQuietly(new java.io.File(s"$outDir/$name"))
       }
     }
 }

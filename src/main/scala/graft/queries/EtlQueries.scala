@@ -986,11 +986,7 @@ object EtlQueries {
       (v, snaps.where(col("v") === v).count())
     }.toSeq
     doomed.foreach { v =>
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(s"$root/v=$v"))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$root/v=$v"))
     }
     val removedDf = reclaimed.toDF("v", "n_rows")
       .selectExpr("v", "n_rows", "'removed' AS status")

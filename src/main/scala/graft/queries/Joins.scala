@@ -228,15 +228,7 @@ object Joins {
     spark.sql(s"DROP TABLE IF EXISTS $name")
     val wh = spark.conf.get("spark.sql.warehouse.dir")
       .stripPrefix("file:")
-    val dir = new java.io.File(wh, name)
-    if (dir.exists()) {
-      def rm(f: java.io.File): Unit = {
-        // listFiles() is null for unreadable/vanished dirs — skip, don't NPE
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(dir)
-    }
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh, name))
   }
 
   private def joinBucketed(spark: SparkSession, sfDir: String): DataFrame = {
@@ -310,20 +302,13 @@ object Joins {
     * other key sees the lowered thresholds. Execution (not just plan
     * construction) must happen inside this scope — Spark reads these
     * confs when the adaptive plan re-optimizes at runtime. */
-  private[graft] def withSkewConfs[T](spark: SparkSession)(body: => T): T = {
-    val tuned = Seq(
+  private[graft] def withSkewConfs[T](spark: SparkSession)(body: => T): T =
+    graft.Session.withConfs(spark,
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "4KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2KB",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val prev = tuned.map { case (k, _) => k -> spark.conf.getOption(k) }
-    tuned.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")(body)
 
   /** The unsalted skewed join itself (also exercised by PlanShapeSpec,
     * which pins the runtime skew split). */
@@ -398,20 +383,13 @@ object Joins {
     * defaults of 10 GB play the same role); broadcast is disabled so the
     * shuffle the filter protects actually exists. Execution happens
     * inside the conf scope — injection runs at optimization time. */
-  private[graft] def withRuntimeFilterConfs[T](spark: SparkSession)(body: => T): T = {
-    val tuned = Seq(
+  private[graft] def withRuntimeFilterConfs[T](spark: SparkSession)(body: => T): T =
+    graft.Session.withConfs(spark,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val prev = tuned.map { case (k, _) => k -> spark.conf.getOption(k) }
-    tuned.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")(body)
 
   /** The protected join itself (also pinned by PlanShapeSpec: the
     * lineitem side carries a `might_contain` filter fed by a

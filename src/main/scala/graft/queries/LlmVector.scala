@@ -258,8 +258,9 @@ object LlmVector {
         planeTensor(nTables, nBits))).as(Seq("tbl", "bucket")))
 
   /** Per-batch semantic-dedup verdicts against a CHAINED LSH index
-    * (the `stream_semdedup` intake hook): arrivals hash their bucket
-    * rows map-side, candidates come from the (tbl, bucket) equi-join
+    * (the `stream_semdedup` intake hook): `rows` are the arrivals'
+    * bucket rows ([[lshBucketRows]], the same rows the batch's run
+    * appends), candidates come from the (tbl, bucket) equi-join
     * against the PRE-batch chain only (ids-only — embeddings re-attach
     * by id for candidates that need scoring), and an arrival is a dup
     * iff some already-indexed vector scores cosine ≥ 0.4 (dup_of = the
@@ -267,20 +268,18 @@ object LlmVector {
     * first batch sees an empty chain — all kept — so the verdict set
     * is exactly the batch twin's even→odd half-split semantics. */
   private[graft] def semDedupVerdicts(spark: SparkSession, sfDir: String,
-      batch: DataFrame, priorDirs: Seq[String], nBits: Int): DataFrame = {
-    val ids = batch.select(col("vec_id"))
+      rows: DataFrame, priorDirs: Seq[String]): DataFrame = {
+    val ids = rows.select(col("vec_id")).distinct()
     if (priorDirs.isEmpty)
       ids.select(col("vec_id"), lit(true).as("is_kept"),
         lit(null).cast("bigint").as("dup_of"))
     else {
-      val rows = lshBucketRows(batch, nBits)
-        .select(col("vec_id"), col("tbl"), col("bucket"))
       val prior = readRuns(spark, priorDirs)
         .select(col("vec_id").as("ex_id"), col("tbl"), col("bucket"))
       val cand = rows.join(prior, Seq("tbl", "bucket"))
         // a re-delivered id that already exists in the prior chain
         // must not self-match at cosine 1.0 (r14 ADVICE: the even/odd
-        // and profiler stagings keep batches disjoint, but the
+        // and many-part stagings keep batches disjoint, but the
         // invariant belongs here, not in the staging)
         .where(col("vec_id") =!= col("ex_id"))
         .select(col("vec_id"), col("ex_id")).distinct()
@@ -2392,7 +2391,7 @@ object LlmVector {
         LIMIT 50"""
 
   /** DuckDB replay of the `stream_semdedup` batch twin: the stream
-    * stages even vec_ids as batch 0 and odd as batch 1 (embHalvesDir),
+    * stages even vec_ids as batch 0 and odd as batch 1,
     * and verdicts derive from the pre-batch chain only — so batch-0
     * vectors are all kept and a batch-1 vector is dropped iff some
     * EVEN bucket-mate scores cosine ≥ 0.4. Same 4-table rotated-plane

@@ -1,13 +1,15 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
-import java.nio.file.attribute.FileTime
 import java.util.UUID
+import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.Tables.{dec, t}
+import org.apache.spark.sql.types.StructType
+import graft.Tables.{dec, schemas, t}
 import graft.etl.{Ingest, Schemas}
 import graft.etl.Fixtures.{stagedDir, tempDir}
 
@@ -52,6 +54,34 @@ object StreamingQ {
       }
     }
 
+  /** Stage `table` as `parts` files, file i holding the rows whose
+    * `part` is i, with mtimes in part order: a file source with
+    * maxFilesPerTrigger=1 replays them as `parts` micro-batches,
+    * part 0 first. */
+  private[graft] def stagedParts(spark: SparkSession, sfDir: String,
+      table: String, part: Column, parts: Int): String =
+    stagedDir(sfDir,
+        s"stream_${table}_x${parts}_${part.toString.hashCode.toHexString}") { dir =>
+      val df = t(spark, sfDir, table)
+      stageInOrder(dir, (0 until parts).map(i => df.where(part === i)))
+    }
+
+  /** Write each frame as one file into `dir`, with strictly increasing
+    * mtimes in sequence order (file sources order by mtime). */
+  private def stageInOrder(dir: String, frames: Seq[DataFrame]): Unit = {
+    val seen = mutable.Set.empty[String]
+    frames.zipWithIndex.foreach { case (df, i) =>
+      df.coalesce(1).write.mode(if (i == 0) "overwrite" else "append")
+        .parquet(dir)
+      new java.io.File(dir).listFiles()
+        .filterNot(f => seen(f.getName) || f.getName.startsWith("_"))
+        .foreach { f =>
+          f.setLastModified(1000000000000L + i * 60000L)
+          seen += f.getName
+        }
+    }
+  }
+
   /** Run a streaming query with shuffle partitions capped at 4: a
     * stateful operator creates one state store (plus checkpoint commit
     * I/O) per shuffle partition per micro-batch — an interval join
@@ -64,9 +94,8 @@ object StreamingQ {
     * the checkpoint. */
   private def withStreamingPartitions[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, math.min(prev.toInt, 4).toString)
-    try body finally spark.conf.set(key, prev)
+    graft.Session.withConfs(spark,
+      key -> math.min(spark.conf.get(key).toInt, 4).toString)(body)
   }
 
   /** Run a streaming DataFrame to a parquet sink with AvailableNow and
@@ -225,20 +254,17 @@ object StreamingQ {
   }
 
   /** Stage events as ONE data file plus a far-future sentinel row in
-    * its own NEWEST file: with maxFilesPerTrigger=1 the data batch runs
-    * first, then the sentinel batch advances the watermark past every
-    * real window/session so Append-mode results flush
-    * deterministically. */
+    * its own NEWEST file: the sentinel advances the watermark past
+    * every real window/session so Append-mode results flush
+    * deterministically (one data batch, see the 2-batch shape below). */
   private def stagedWithSentinel(spark: SparkSession, sfDir: String,
                                  sentinelUser: Long): String =
     stageCorpusWithSentinels(spark, sfDir, s"stream_sentinel_u$sentinelUser",
       Seq((-1L, sentinelUser, None)))
 
-  /** Core sentinel staging: corpus as one backdated file (so the data
-    * batch always runs first — file sources order by mtime), then one
-    * appended far-future sentinel file per entry (event_id, user_id,
-    * optional event_type override). All sentinel-staging variants go
-    * through here so the mtime/ordering trick lives in one place.
+  /** Core sentinel staging: corpus as one file, then one far-future
+    * sentinel file per entry (event_id, user_id, optional event_type
+    * override), each newer than the last ([[stageInOrder]]).
     *
     * 2-batch shape (r17, the outer-join keys' r3 shape generalized):
     * the watermark-flush consumers no longer set maxFilesPerTrigger=1,
@@ -256,19 +282,13 @@ object StreamingQ {
       tag: String, sentinels: Seq[(Long, Long, Option[String])]): String =
     stagedDir(sfDir, tag) { srcDir =>
       val ev = t(spark, sfDir, "events")
-      ev.coalesce(1).write.mode("overwrite").parquet(srcDir)
-      val past = FileTime.fromMillis(1000000000000L) // fixed past mtime
-      val listing = Files.list(Paths.get(srcDir))
-      try listing.forEach { p: Path => Files.setLastModifiedTime(p, past) }
-      finally listing.close()
-      sentinels.foreach { case (eid, uid, kind) =>
+      stageInOrder(srcDir, ev +: sentinels.map { case (eid, uid, kind) =>
         val row = ev.limit(1)
           .withColumn("ts", lit(java.sql.Timestamp.valueOf("2030-01-01 00:00:00")))
           .withColumn("event_id", lit(eid))
           .withColumn("user_id", lit(uid))
         kind.fold(row)(k => row.withColumn("event_type", lit(k)))
-          .write.mode("append").parquet(srcDir)
-      }
+      })
     }
 
   // ---------------------------------------------------------------------
@@ -450,11 +470,9 @@ object StreamingQ {
   private def streamTransformWithState(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    graft.Session.withConfs(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       // r17: one data+sentinel batch (see stagedWithSentinel)
       val srcDir = stagedWithSentinel(spark, sfDir, sentinelUser = -1L)
       val src = spark.readStream.schema(Schemas.events)
@@ -468,9 +486,6 @@ object StreamingQ {
       runToParquet(spark, sessions.toDF())
         .where(col("user_id") >= 0)
         .orderBy("user_id", "s_start")
-    } finally prevProvider match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
     }
   }
 
@@ -667,22 +682,10 @@ object StreamingQ {
   // This is how a vector index stays fresh at 100 TB: per-batch work
   // is O(new vectors), the probe cost never changes.
   // ---------------------------------------------------------------------
-  private def embHalvesDir(spark: SparkSession, sfDir: String): String =
-    stagedDir(sfDir, "stream_emb_halves") { dir =>
-      val e = t(spark, sfDir, "embeddings")
-      e.where(col("vec_id") % 2 === 0).coalesce(1)
-        .write.mode("overwrite").parquet(dir)
-      val past = FileTime.fromMillis(1000000000000L)
-      val listing = Files.list(Paths.get(dir))
-      try listing.forEach { p: Path => Files.setLastModifiedTime(p, past) }
-      finally listing.close()
-      e.where(col("vec_id") % 2 === 1).coalesce(1)
-        .write.mode("append").parquet(dir)
-    }
-
   private def streamAnnIndex(spark: SparkSession, sfDir: String): DataFrame =
     graft.queries.LlmVector.probeIvfIndex(spark, sfDir,
-      annIndexIntake(spark, sfDir, embHalvesDir(spark, sfDir)).liveDirs)
+      annIndexIntake(spark, sfDir,
+        stagedParts(spark, sfDir, "embeddings", col("vec_id") % 2, 2)).liveDirs)
 
   // ---------------------------------------------------------------------
   // stream_lsh_index — the LSH bucket index MAINTAINED BY A STREAM: the
@@ -702,9 +705,9 @@ object StreamingQ {
   // ---------------------------------------------------------------------
   private def streamLshIndex(spark: SparkSession, sfDir: String): DataFrame = {
     val nBits = graft.queries.LlmVector.lshBits(spark, sfDir)
-    val res = tieredIntake(spark, sfDir, embHalvesDir(spark, sfDir),
-      "graft_stream_lsh_idx_", "tbl",
-      b => graft.queries.LlmVector.lshBucketRows(b, nBits))
+    val res = tieredIntake(spark, schemas("embeddings"),
+      stagedParts(spark, sfDir, "embeddings", col("vec_id") % 2, 2),
+      "graft_stream_lsh_idx_", Some("tbl"), lshRowsOf(nBits))
     graft.queries.LlmVector.annLshFromIndex(spark, sfDir, res.liveDirs)
   }
 
@@ -728,227 +731,209 @@ object StreamingQ {
   // ---------------------------------------------------------------------
   private def streamSemDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val nBits = graft.queries.LlmVector.lshBits(spark, sfDir)
-    val res = tieredIntake(spark, sfDir, embHalvesDir(spark, sfDir),
-      "graft_stream_semded_", "tbl",
-      b => graft.queries.LlmVector.lshBucketRows(b, nBits),
-      verdictOf = Some((batch, preDirs, vdir) =>
-        graft.queries.LlmVector
-          .semDedupVerdicts(spark, sfDir, batch, preDirs, nBits)
-          .write.mode("overwrite").parquet(vdir)))
+    val res = tieredIntake(spark, schemas("embeddings"),
+      stagedParts(spark, sfDir, "embeddings", col("vec_id") % 2, 2),
+      "graft_stream_semded_", Some("tbl"), lshRowsOf(nBits),
+      verdictOf = Some(
+        graft.queries.LlmVector.semDedupVerdicts(spark, sfDir, _, _)))
     spark.read.parquet(res.verdictDirs: _*).orderBy("vec_id")
   }
 
-  /** The ANN-index intake loop itself, run by the `stream_ann_index`
-    * key (2 micro-batches: corpus halves) and over many batches by
-    * Round12Spec/Round13Spec. Each micro-batch assigns cells MAP-SIDE against the
-    * broadcast parity centroids (the fused BestCentroid argmax; nlist
-    * is fixed at index-build time from the indexed corpus — the k ∝ N
-    * rule — so the maintained index keeps sharing llm_ann_ivf's
-    * oracle) and commits a LEVEL-0 RUN holding only ITS rows
-    * (cell-partitioned, one file per touched cell): per-batch intake
-    * work is O(arrivals · k) assignment + a batch-sized write,
-    * independent of how big the index already is — no rebuild, no read
-    * of prior state.
-    *
-    * INDEX CHAIN = append + size-tiered compaction (VERDICT r12 #1 —
-    * the [[incrementalDedupIntake]] Bentley–Saxe layout applied to the
-    * vector index). The r12 append-only form grew one file per batch
-    * per touched cell — 1,919 live data files after 16 batches; the
-    * listing/open cost of every probe is O(batches) by construction.
-    * Here, when [[CompactFanout]] same-level runs accumulate they merge
-    * into ONE run a level up, repartitioned by cell so a merged run
-    * holds exactly one file per cell: every row is rewritten at most
-    * log₄(batches) times, the chain holds ≤ 3·log₄(batches)+1 live
-    * runs, and live file count is bounded by runs · cells instead of
-    * batches · cells. Which run a row lives in cannot affect cell
-    * contents, so merge timing never changes probe results — the key
-    * keeps sharing llm_ann_ivf's oracle and the 4-batch==batch-twin
-    * spec pin. Runs and merges are deterministic-name + _SUCCESS
-    * guarded (a retried micro-batch reuses its committed dirs instead
-    * of double-appending), same as the dedup chain. Returns the live
-    * run dirs, oldest first. */
+  /** The IVF index on the [[tieredIntake]] chain, run by the
+    * `stream_ann_index` key (2 micro-batches: corpus halves) and over
+    * many batches by Round12Spec–Round14Spec. Each micro-batch assigns
+    * cells map-side against the broadcast parity centroids (the fused
+    * BestCentroid argmax; nlist is fixed at index-build time from the
+    * indexed corpus — the k ∝ N rule — so the maintained index keeps
+    * sharing llm_ann_ivf's oracle); runs are partitioned by cell. */
   private[graft] def annIndexIntake(spark: SparkSession, sfDir: String,
       srcDir: String,
-      stats: Option[scala.collection.mutable.ArrayBuffer[IntakeBatchStat]] =
-        None): IntakeResult = {
+      stats: Option[mutable.ArrayBuffer[IntakeBatchStat]] = None)
+      : IntakeResult = {
     val k = graft.queries.LlmVector.ivfK(spark, sfDir)
-    tieredIntake(spark, sfDir, srcDir, "graft_stream_ann_idx_", "cell",
-      b => graft.queries.LlmVector.assignCells(b, k), stats)
+    tieredIntake(spark, schemas("embeddings"), srcDir,
+      "graft_stream_ann_idx_", Some("cell"),
+      b => graft.queries.LlmVector.assignCells(spread(b), k), stats = stats)
   }
 
-  /** Live chain + reclamation accounting returned by [[tieredIntake]]:
-    * `liveDirs` is the post-stream run chain (oldest first);
-    * `reclaimedDirs`/`reclaimedFiles` count every merged-away run
-    * unlinked over the stream's life (in-stream grace-TTL vacuums plus
-    * the end-of-stream sweep), and `reclaimedInStreamDirs` the subset
-    * the foreachBatch loop itself unlinked before the stream closed. */
+  /** LSH bucket rows of a micro-batch of embeddings, partitioned by
+    * hash table in the run (the LSH index and semantic-dedup chains). */
+  private def lshRowsOf(nBits: Int)(batch: DataFrame): DataFrame =
+    graft.queries.LlmVector.lshBucketRows(spread(batch), nBits)
+
+  /** Spread a micro-batch of embeddings before its CPU-heavy row
+    * function (the O(arrivals·k) IVF assignment, the O(arrivals·L·bits)
+    * bucket hash). The batch arrives as one staged file, a handful of
+    * scan splits: the bare scan measured 22–25 s and a coalesce(1)
+    * variant 47 s for the 2-half ×64 intake, against ~11 s with the
+    * input spread. `batch.inputFiles` is empty on a micro-batch frame,
+    * so a bytes-conditional spread cannot engage. With the run's own
+    * partition exchange this costs ~+0.7 s/batch at steady state over
+    * a single-writer form (two extra stages on a KB-sized batch): the
+    * price of intake that keeps up when a batch is big. */
+  private def spread(batch: DataFrame): DataFrame =
+    batch.repartition(col("vec_id"))
+
+  /** Per-batch intake stats, filled only when a caller passes `stats`
+    * (the chain specs); the production keys skip the extra counts.
+    * `indexRowsBefore` and `runsBefore` are the live chain's rows and
+    * data files before the batch, `deadFilesBefore` the files of
+    * merged-away runs still inside their grace window (so runsBefore +
+    * deadFilesBefore is the batch's disk high-water), and
+    * `reclaimedDirs`/`reclaimedFiles` what this batch's TTL vacuum
+    * unlinked. */
+  private[graft] case class IntakeBatchStat(batchId: Long, arrivals: Long,
+      indexRowsBefore: Long, runsBefore: Int, secs: Double, merges: Int,
+      reclaimedDirs: Int, reclaimedFiles: Int, deadFilesBefore: Int)
+
+  /** What [[tieredIntake]] leaves: `liveDirs`, the run chain after the
+    * stream (oldest first); `verdictDirs`, the committed per-batch
+    * verdicts in batch order (empty without a verdict hook);
+    * `reclaimedDirs`/`reclaimedFiles`, every merged-away run unlinked
+    * over the stream's life, and `reclaimedInStreamDirs` the part the
+    * TTL vacuum unlinked before the stream closed. */
   private[graft] case class IntakeResult(liveDirs: Seq[String],
       reclaimedDirs: Int, reclaimedFiles: Int,
-      reclaimedInStreamDirs: Int = 0, verdictDirs: Seq[String] = Nil)
+      reclaimedInStreamDirs: Int, verdictDirs: Seq[String])
 
-  /** The generic size-tiered run-chain intake shared by the streamed
-    * IVF index ([[annIndexIntake]]) and the streamed LSH index
-    * ([[streamLshIndex]]): per micro-batch, `rowsOf(batch)` commits a
-    * level-0 run (hive-partitioned on `partCol`, coalesced so one task
-    * emits one file per touched partition), and [[CompactFanout]]
-    * same-level runs merge into one run a level up, repartitioned on
-    * `partCol` so a merged run holds exactly one file per partition
-    * value — the [[incrementalDedupIntake]] Bentley–Saxe layout. Every
-    * row is rewritten ≤ log₄(batches) times and the chain holds
-    * ≤ 3·log₄(batches)+1 live runs. Runs and merges are
-    * deterministic-name + _SUCCESS guarded (a retried micro-batch
-    * reuses its committed dirs).
+  /** Same-level runs that merge into one run a level up. */
+  private val CompactFanout = 4
+
+  /** Batches a merged-away run stays on disk after its merge commits. */
+  private val GraceBatches = 2
+
+  /** The size-tiered (Bentley–Saxe) run chain that keeps a streamed
+    * index fresh: the IVF index ([[annIndexIntake]]), the LSH index and
+    * semantic dedup (`stream_lsh_index`, `stream_semdedup`) and the text
+    * dedup index ([[incrementalDedupIntake]]) all run on it. A caller
+    * supplies only its data: the source `schema`, `rowsOf` (a
+    * micro-batch's run rows), the run layout (hive-partitioned on
+    * `partCol`, or unpartitioned) and an optional `verdictOf`.
     *
-    * GARBAGE RECLAMATION (r13; in-stream since r14 — VERDICT r13 #2):
-    * a run merged away is dead the moment the merged run's _SUCCESS
-    * commits, but readers of the PRE-merge chain may still be
-    * draining, so the loop unlinks a retired run only after
-    * `graceBatches` further batches have committed (retire at batch N,
-    * unlink at batch N+g) — the read-grace TTL. The disk high-water is
-    * therefore a measured property of the RUNNING stream (live chain +
-    * ≤ grace batches of not-yet-reclaimed runs), not of its shutdown;
-    * per-batch reclaim counts land in [[IntakeBatchStat]] for the
-    * profilers. End-of-stream is past any grace (every probe runs
-    * against the RETURNED live chain), so a final sweep unlinks
-    * whatever the TTL had not yet released. Deletion timing cannot
-    * affect results: merges are unions, so the live chain's contents
-    * are identical with or without the dead runs on disk.
+    * APPEND + MERGE. Each micro-batch (one staged file) commits a
+    * level-0 run `b<id>` holding only its own rows, so per-batch work is
+    * O(arrivals) plus a batch-sized write however big the index is (the
+    * first dedup cut rewrote the whole index per batch: 23.6× at ×64
+    * batches). When [[CompactFanout]] runs share a level they merge into
+    * one run a level up, `m<id>_l<lvl>_<len>`. Every row is rewritten at
+    * most log₄(batches) times and the chain holds ≤ 3·log₄(batches)+1
+    * live runs. A run is one file per `partCol` value (one file when
+    * unpartitioned), so live files are bounded by runs · partition
+    * values instead of batches · values (the append-only IVF index held
+    * 1,919 live files after 16 batches). Which run a row lives in cannot
+    * change a probe: runs are a partition of a set.
     *
-    * RESTART RECOVERY (r15 — VERDICT r14 #2): the index is the
-    * expensive artifact, so a restarted stream must not rebuild it. A
-    * caller that supplies `resumeRoot` (+ `checkpointDir`, so the
-    * source offsets resume too) gets its chain state rebuilt from the
-    * committed (_SUCCESS-guarded) dirs under that root via
-    * [[recoverChain]] — live runs, retired-awaiting-TTL runs (with
-    * their original retire batch ids, so TTL accounting resumes where
-    * it left off), and committed verdict dirs — and intake continues
-    * from the first un-checkpointed batch. The deterministic run/merge
-    * names plus the _SUCCESS and chain-append guards make the boundary
-    * batch idempotent whether the crash hit before the run write,
-    * after it, or after a merge. `crashAtBatch` is the test hook that
-    * injects the crash (at batch entry, or after the run write when
-    * `crashAfterRun`); production callers leave it None. */
-  private[graft] def tieredIntake(spark: SparkSession, sfDir: String,
-      srcDir: String, rootPrefix: String, partCol: String,
+    * VERDICTS. `verdictOf(rows, priorDirs)` judges a batch's rows
+    * against the PRE-batch chain and is written to `v<id>` beside the
+    * runs. Each arrival is judged exactly once, against everything
+    * indexed before it, and merge timing cannot change a verdict. With
+    * a hook the rows are persisted for the batch, so they are computed
+    * once for the verdict and the run write.
+    *
+    * IDEMPOTENCY. Run, merge and verdict dirs have deterministic names
+    * and are _SUCCESS-guarded, so a replayed micro-batch reuses what it
+    * committed, and the in-memory chain never re-appends a run it holds
+    * live or retired (a second append would duplicate its rows in every
+    * later merge and probe).
+    *
+    * READ-GRACE TTL. A merged-away run is dead once the merge commits,
+    * but a reader of the pre-merge chain may still be draining, so the
+    * loop unlinks it [[GraceBatches]] batches later (retire at N, unlink
+    * at N+2). Disk is the live chain plus one grace window while the
+    * stream runs; at its end a sweep unlinks the rest (probes read the
+    * returned chain). Merges are unions, so deletion timing cannot
+    * change the live chain's contents.
+    *
+    * RESTART RECOVERY. The index is the expensive artifact, so a
+    * restarted stream must not rebuild it. Given `resumeRoot` (and
+    * `checkpointDir`, so the source offsets resume too), the chain state
+    * is rebuilt from the committed dirs by [[recoverChain]] and intake
+    * continues at the first un-checkpointed batch; the guards above make
+    * that batch idempotent whether the crash hit before the run write,
+    * after it, or after a merge. `crashAtBatch` injects the crash for
+    * tests, at batch entry or, with `crashAfterRun`, after the run
+    * write. */
+  private[graft] def tieredIntake(spark: SparkSession, schema: StructType,
+      srcDir: String, rootPrefix: String, partCol: Option[String],
       rowsOf: DataFrame => DataFrame,
-      stats: Option[scala.collection.mutable.ArrayBuffer[IntakeBatchStat]] =
-        None, graceBatches: Int = 2,
-      verdictOf: Option[(DataFrame, Seq[String], String) => Unit] = None,
+      verdictOf: Option[(DataFrame, Seq[String]) => DataFrame] = None,
+      stats: Option[mutable.ArrayBuffer[IntakeBatchStat]] = None,
       resumeRoot: Option[String] = None,
       checkpointDir: Option[String] = None,
       crashAtBatch: Option[Long] = None,
       crashAfterRun: Boolean = false)
       : IntakeResult = {
     val root = resumeRoot.getOrElse(tempDir(rootPrefix))
-    var chain = Vector.empty[(Int, String)]
-    // (retireBatchId, dir) of merged-away runs awaiting their TTL
-    var retired = Vector.empty[(Long, String)]
-    var verdictDirs = Vector.empty[String]
-    resumeRoot.foreach { r =>
-      val (c, t, v) = recoverChain(r)
-      chain = c; retired = t; verdictDirs = v
-    }
+    // (level, dir) live runs oldest first; (retireBatchId, dir) runs
+    // awaiting the TTL; both empty for a fresh root
+    var (chain, retired, verdictDirs) = recoverChain(root)
     var reclaimedInStream = 0
-    var reclaimedFilesTotal = 0
-    val src = spark.readStream
-      .schema(t(spark, sfDir, "embeddings").schema)
+    var reclaimedFiles = 0
+    def committed(dir: String) = new java.io.File(dir, "_SUCCESS").exists()
+    def filesOf(runs: Seq[(Any, String)]) =
+      runs.map(r => countParquetFiles(r._2)).sum
+    def writeRun(rows: DataFrame, dir: String): Unit = (partCol match {
+      case Some(c) => rows.repartition(col(c)).write.partitionBy(c)
+      case None => rows.coalesce(1).write
+    }).mode("overwrite").parquet(dir)
+    val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(srcDir)
-    val q = src.writeStream
+      .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (crashAtBatch.contains(batchId) && !crashAfterRun)
           throw new IllegalStateException(
             s"injected crash at entry of batch $batchId")
-        // profiler-only pre-batch counts, taken OUTSIDE the timed
-        // window (runsBefore carries the LIVE data-file count across
-        // the chain — the growth axis this profile exists to watch;
-        // deadFilesBefore the retired-awaiting-TTL files, so live+dead
-        // is the disk high-water of the running stream)
+        // stats-only counts, taken before the timed window
         val (rowsBefore, filesBefore) = stats.fold((-1L, -1)) { _ =>
-          val files = chain.map(r => countParquetFiles(r._2)).sum
+          val files = filesOf(chain)
           (if (files == 0) 0L
            else graft.queries.LlmVector.readRuns(spark, chain.map(_._2))
              .count(), files)
         }
-        val deadFilesBefore = stats.fold(-1)(_ =>
-          retired.map(r => countParquetFiles(r._2)).sum)
+        val deadFilesBefore = stats.fold(-1)(_ => filesOf(retired))
         val arrivals = stats.fold(-1L)(_ => batch.count())
         val t0 = System.nanoTime()
         val run = s"$root/b$batchId"
-        // optional per-batch verdict hook (the incrementalDedupIntake
-        // convention lifted onto this chain): verdicts derive from the
-        // PRE-batch chain only, so merge timing can never change them;
-        // the dir is deterministic-name + _SUCCESS guarded like runs
+        val rows = rowsOf(batch)
+        if (verdictOf.nonEmpty) rows.persist()
         verdictOf.foreach { v =>
           val vdir = s"$root/v$batchId"
-          if (!new java.io.File(vdir, "_SUCCESS").exists())
-            v(batch, chain.map(_._2), vdir)
-          if (!verdictDirs.contains(vdir)) verdictDirs = verdictDirs :+ vdir
+          if (!committed(vdir))
+            v(rows, chain.map(_._2)).write.mode("overwrite").parquet(vdir)
+          if (!verdictDirs.contains(vdir)) verdictDirs :+= vdir
         }
-        if (!new java.io.File(run, "_SUCCESS").exists()) {
-          // Two batch-sized exchanges bracket the transform so the
-          // CPU-heavy rowsOf (the O(arrivals·k) IVF assignment / the
-          // O(arrivals·L·bits) bucket hash) computes at FULL
-          // parallelism: the batch arrives as one staged file (a
-          // handful of scan splits — a coalesce(1) variant measured
-          // 47 s and the bare scan 22-25 s for the 2-half ×64 intake,
-          // vs ~11 s with the input spread; batch.inputFiles is empty
-          // on a micro-batch frame, so a bytes-conditional spread
-          // cannot engage — measured). The partCol exchange then lands
-          // each partition value in exactly one task → one file per
-          // touched partition, the level-0 file bound the merge math
-          // uses. Cost at steady state: ~+0.7 s/batch over the r12
-          // single-writer form (two extra stages on a KB-sized batch)
-          // — the price of intake that keeps up when a batch is big.
-          rowsOf(batch.repartition(col("vec_id")))
-            .repartition(col(partCol))
-            .write.mode("overwrite").partitionBy(partCol).parquet(run)
-        }
+        if (!committed(run)) writeRun(rows, run)
+        if (verdictOf.nonEmpty) rows.unpersist()
         if (crashAtBatch.contains(batchId) && crashAfterRun)
           throw new IllegalStateException(
             s"injected crash after run write of batch $batchId")
-        // the in-memory chain needs the same idempotency as the disk
-        // write (r13 ADVICE #1): a foreachBatch replay within a run
-        // re-enters with the run already appended (and possibly merged
-        // away) — appending again would duplicate its rows in every
-        // later merge and probe
         if (!chain.exists(_._2 == run) && !retired.exists(_._2 == run))
-          chain = chain :+ ((0, run))
+          chain :+= ((0, run))
         var merges = 0
-        var merging = true
-        while (merging) {
-          val tail = chain.takeRight(CompactFanout)
-          if (tail.length == CompactFanout &&
-              tail.forall(_._1 == tail.head._1)) {
-            val lvl = tail.head._1
-            val merged = s"$root/m${batchId}_l${lvl + 1}_${chain.length}"
-            if (!new java.io.File(merged, "_SUCCESS").exists()) {
-              // repartition on partCol → each value lands in one task →
-              // a merged run is exactly one file per partition value
-              graft.queries.LlmVector.readRuns(spark, tail.map(_._2))
-                .repartition(col(partCol))
-                .write.mode("overwrite").partitionBy(partCol).parquet(merged)
-            }
-            chain = chain.dropRight(CompactFanout) :+ ((lvl + 1, merged))
-            retired = retired ++ tail.map(t => (batchId, t._2))
-            merges += 1
-          } else merging = false
+        var tail = chain.takeRight(CompactFanout)
+        while (tail.length == CompactFanout &&
+               tail.forall(_._1 == tail.head._1)) {
+          val lvl = tail.head._1
+          val merged = s"$root/m${batchId}_l${lvl + 1}_${chain.length}"
+          if (!committed(merged))
+            writeRun(graft.queries.LlmVector.readRuns(spark, tail.map(_._2)),
+              merged)
+          chain = chain.dropRight(CompactFanout) :+ ((lvl + 1, merged))
+          retired ++= tail.map(r => (batchId, r._2))
+          merges += 1
+          tail = chain.takeRight(CompactFanout)
         }
-        // read-grace TTL vacuum: runs retired at batch N are unlinked
-        // once batch N+graceBatches commits — any reader that started
-        // against the pre-merge chain has had `graceBatches` batches to
-        // drain. Idempotent under replay: a second unlink of a gone dir
-        // is a no-op and the retired list already dropped it; an
-        // UNLINKED run can never be re-seen by a replay either, because
-        // foreachBatch only ever replays the latest batch and a run
-        // stays in `retired` (visible to the append guard above) for
-        // graceBatches further commits before it goes.
-        val (due, waiting) = retired.partition(_._1 + graceBatches <= batchId)
-        val dueFiles = due.map(r => countParquetFiles(r._2)).sum
-        due.foreach(r => deleteRecursively(r._2))
+        // TTL vacuum, idempotent under replay: unlinking a gone dir is a
+        // no-op, and foreachBatch replays only the latest batch while a
+        // run stays in `retired` (seen by the append guard above) for
+        // GraceBatches further commits
+        val (due, waiting) = retired.partition(_._1 + GraceBatches <= batchId)
+        val dueFiles = filesOf(due)
+        due.foreach(r => FileUtils.deleteQuietly(new java.io.File(r._2)))
         retired = waiting
         reclaimedInStream += due.length
-        reclaimedFilesTotal += dueFiles
+        reclaimedFiles += dueFiles
         stats.foreach(_ += IntakeBatchStat(batchId, arrivals, rowsBefore,
           filesBefore, (System.nanoTime() - t0) / 1e9, merges,
           due.length, dueFiles, deadFilesBefore))
@@ -958,33 +943,30 @@ object StreamingQ {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    // end-of-stream sweep: past any grace (probes run against the
-    // returned live chain), so release what the TTL had not yet
-    val closeFiles = retired.map(r => countParquetFiles(r._2)).sum
-    retired.foreach(r => deleteRecursively(r._2))
+    val closeFiles = filesOf(retired)
+    retired.foreach(r => FileUtils.deleteQuietly(new java.io.File(r._2)))
     IntakeResult(chain.map(_._2), reclaimedInStream + retired.length,
-      reclaimedFilesTotal + closeFiles, reclaimedInStream, verdictDirs)
+      reclaimedFiles + closeFiles, reclaimedInStream, verdictDirs)
   }
 
   /** Rebuild a tiered run chain's in-memory state from its committed
-    * on-disk dirs (r15 — VERDICT r14 #2, the restart-recovery path).
-    * Lists the _SUCCESS-committed dirs under `root` and replays the
-    * deterministic merge algebra over them in creation order (by
-    * batch id; within a batch the level-0 run precedes its merges,
-    * merges cascade by increasing level — the names `b<id>` /
-    * `m<id>_l<lvl>_<len>` encode exactly this). A merge dir consumed
-    * the trailing [[CompactFanout]] level-(lvl−1) runs of the chain at
-    * its commit time; because chain levels are non-increasing head→
-    * tail and a 4th same-level run merges the moment it appears, the
-    * still-on-disk survivors of that consumed set are exactly the
-    * trailing level-(lvl−1) entries of the replayed chain (already-
-    * reclaimed members simply never enter the replay) — so the replay
-    * needs no history of unlinked runs. Survivors move to the retired
-    * list with the merge's ORIGINAL batch id, so the resumed loop's
-    * read-grace TTL unlinks them on the same schedule as an
+    * on-disk dirs (the restart-recovery path). Lists the
+    * _SUCCESS-committed dirs under `root` and replays the deterministic
+    * merge algebra over them in creation order (by batch id; within a
+    * batch the level-0 run precedes its merges, merges cascade by
+    * increasing level — the names `b<id>` / `m<id>_l<lvl>_<len>` encode
+    * exactly this). A merge dir consumed the trailing [[CompactFanout]]
+    * level-(lvl−1) runs of the chain at its commit time; because chain
+    * levels are non-increasing head→tail and a 4th same-level run merges
+    * the moment it appears, the still-on-disk survivors of that consumed
+    * set are exactly the trailing level-(lvl−1) entries of the replayed
+    * chain (already-reclaimed members simply never enter the replay) —
+    * so the replay needs no history of unlinked runs. Survivors move to
+    * the retired list with the merge's ORIGINAL batch id, so the resumed
+    * loop's read-grace TTL unlinks them on the same schedule as an
     * uninterrupted stream. Returns (live chain oldest-first, retired
     * awaiting TTL, committed verdict dirs in batch order). */
-  private[graft] def recoverChain(root: String)
+  private def recoverChain(root: String)
       : (Vector[(Int, String)], Vector[(Long, String)], Vector[String]) = {
     val runPat = "b(\\d+)".r
     val mergePat = "m(\\d+)_l(\\d+)_(\\d+)".r
@@ -1018,22 +1000,6 @@ object StreamingQ {
     (chain, retired, verdicts)
   }
 
-  /** Best-effort recursive unlink for a retired run dir (the vacuum
-    * step — a failure leaves harmless garbage, never a broken chain). */
-  private def deleteRecursively(dir: String): Unit = {
-    val root = Paths.get(dir)
-    if (Files.exists(root)) {
-      val s = Files.walk(root)
-      try {
-        s.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach { p: Path =>
-            try Files.deleteIfExists(p)
-            catch { case _: java.io.IOException => () }
-          }
-      } finally s.close()
-    }
-  }
-
   /** Data files under a (possibly hive-partitioned) parquet dir. */
   private def countParquetFiles(dir: String): Int = {
     val root = Paths.get(dir)
@@ -1045,31 +1011,6 @@ object StreamingQ {
       finally s.close()
     }
   }
-
-  /** Stage embeddings as `parts` files with strictly increasing mtimes
-    * (vec_id % parts = part), so maxFilesPerTrigger=1 delivers exactly
-    * `parts` micro-batches oldest-first — the embeddings twin of
-    * [[stagedDocsParts]], used by the ANN-index intake profiler. */
-  private[graft] def stagedEmbParts(spark: SparkSession, sfDir: String,
-                                    parts: Int): String =
-    stagedDir(sfDir, s"stream_emb_parts$parts") { dir =>
-      val e = t(spark, sfDir, "embeddings")
-      val seen = scala.collection.mutable.Set.empty[Path]
-      val base = 1000000000000L
-      for (i <- 0 until parts) {
-        e.where(pmod(col("vec_id"), lit(parts)) === i).coalesce(1)
-          .write.mode(if (i == 0) "overwrite" else "append").parquet(dir)
-        val ts = FileTime.fromMillis(base + i * 60000L)
-        val listing = Files.list(Paths.get(dir))
-        try listing.forEach { p: Path =>
-          if (!seen.contains(p) && !p.getFileName.toString.startsWith("_")) {
-            Files.setLastModifiedTime(p, ts)
-            seen += p
-          }
-        }
-        finally listing.close()
-      }
-    }
 
   // ---------------------------------------------------------------------
   // stream_merge_upsert — streaming CDC upsert: change batches arrive
@@ -1092,22 +1033,17 @@ object StreamingQ {
     val snapshot = t(spark, sfDir, "orders")
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
     val srcDir = stagedDir(sfDir, "stream_cdc_merge") { dir =>
-      snapshot.where(col("o_orderkey") % 97 === 0)
+      val updates = snapshot.where(col("o_orderkey") % 97 === 0)
         .withColumn("o_totalprice",
           (dec(col("o_totalprice")) + lit(BigDecimal("1000.00"))).cast("double"))
         .withColumn("o_orderstatus", lit("R"))
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-      val past = FileTime.fromMillis(1000000000000L)
-      val listing = Files.list(Paths.get(dir))
-      try listing.forEach { p: Path => Files.setLastModifiedTime(p, past) }
-      finally listing.close()
       // Shift inserted keys past the snapshot's max key (not a fixed
       // +10M) so they stay disjoint from real keys at any scale factor.
       val shift = snapshot.agg(max("o_orderkey")).head.getLong(0) + 1L
-      snapshot.where(col("o_orderkey") % 101 === 0)
+      val inserts = snapshot.where(col("o_orderkey") % 101 === 0)
         .select((col("o_orderkey") + lit(shift)).as("o_orderkey"),
           col("o_custkey"), lit("N").as("o_orderstatus"), col("o_totalprice"))
-        .coalesce(1).write.mode("append").parquet(dir)
+      stageInOrder(dir, Seq(updates, inserts))
     }
     var cur = tempDir("graft_stream_merge_t_")
     snapshot.write.mode("overwrite").parquet(cur)
@@ -1128,16 +1064,11 @@ object StreamingQ {
               .as("o_totalprice"))
         val next = tempDir("graft_stream_merge_t_")
         merged.write.mode("overwrite").parquet(next)
-        val prev = cur
-        cur = next
         // The superseded snapshot is never read again once the batch's
         // write completes — delete it so repeated runs don't accumulate
         // N+1 copies of the table in temp space.
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete()
-        }
-        rm(new java.io.File(prev))
+        FileUtils.deleteQuietly(new java.io.File(cur))
+        cur = next
       }
       .option("checkpointLocation", tempDir("graft_stream_ckpt_"))
       .trigger(Trigger.AvailableNow())
@@ -1163,27 +1094,9 @@ object StreamingQ {
   // order can never change the result — the oracle is the one-shot
   // batch aggregate over the same corpus, bit-for-bit.
   // ---------------------------------------------------------------------
-  /** Events staged as two half-corpus files (even event_ids, then odd)
-    * with ordered mtimes: maxFilesPerTrigger=1 gives exactly two
-    * deterministic micro-batches. Shared by the incremental-aggregate
-    * and heavy-hitters keys so their oracles replay the same split. */
-  private def evenOddStagedEvents(spark: SparkSession, sfDir: String): String = {
-    val ev = t(spark, sfDir, "events")
-    stagedDir(sfDir, "stream_even_odd_events") { dir =>
-      ev.where(col("event_id") % 2 === 0).coalesce(1)
-        .write.mode("overwrite").parquet(dir)
-      val past = FileTime.fromMillis(1000000000000L)
-      val listing = Files.list(Paths.get(dir))
-      try listing.forEach { p: Path => Files.setLastModifiedTime(p, past) }
-      finally listing.close()
-      ev.where(col("event_id") % 2 === 1).coalesce(1)
-        .write.mode("append").parquet(dir)
-    }
-  }
-
   private def streamIncrementalAgg(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = t(spark, sfDir, "events")
-    val srcDir = evenOddStagedEvents(spark, sfDir)
+    val srcDir = stagedParts(spark, sfDir, "events", col("event_id") % 2, 2)
     var cur = tempDir("graft_stream_incagg_t_")
     ev.limit(0).select(col("event_type"), lit(0L).as("n_events"),
       lit(0L).as("sum_e2")).write.mode("overwrite").parquet(cur)
@@ -1204,13 +1117,8 @@ object StreamingQ {
               coalesce(col("b_sum"), lit(0L))).as("sum_e2"))
         val next = tempDir("graft_stream_incagg_t_")
         merged.write.mode("overwrite").parquet(next)
-        val prev = cur
+        FileUtils.deleteQuietly(new java.io.File(cur))
         cur = next
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete()
-        }
-        rm(new java.io.File(prev))
       }
       .option("checkpointLocation", tempDir("graft_stream_ckpt_"))
       .trigger(Trigger.AvailableNow())
@@ -1238,7 +1146,7 @@ object StreamingQ {
   // ---------------------------------------------------------------------
   private def streamCountMin(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = t(spark, sfDir, "events")
-    val srcDir = evenOddStagedEvents(spark, sfDir)
+    val srcDir = stagedParts(spark, sfDir, "events", col("event_id") % 2, 2)
     val cellsOf = "transform(sequence(0, 2), r -> struct(r AS row, " +
       "substring(md5(concat(cast(user_id as string), '#', " +
       "cast(r as string))), 1, 3) AS cell))"
@@ -1314,7 +1222,7 @@ object StreamingQ {
   private def streamQuantileHist(spark: SparkSession,
                                  sfDir: String): DataFrame = {
     val ev = t(spark, sfDir, "events")
-    val srcDir = evenOddStagedEvents(spark, sfDir)
+    val srcDir = stagedParts(spark, sfDir, "events", col("event_id") % 2, 2)
     val snapRoot = tempDir("graft_stream_qh_t_")
     var cur = s"$snapRoot/b_init"
     ev.limit(0).selectExpr("event_type",
@@ -1385,7 +1293,7 @@ object StreamingQ {
   private def streamHllDistinct(spark: SparkSession,
                                 sfDir: String): DataFrame = {
     val ev = t(spark, sfDir, "events")
-    val srcDir = evenOddStagedEvents(spark, sfDir)
+    val srcDir = stagedParts(spark, sfDir, "events", col("event_id") % 2, 2)
     val snapRoot = tempDir("graft_stream_hll_t_")
     var cur = s"$snapRoot/b_init"
     ev.limit(0).groupBy("event_type")
@@ -1450,7 +1358,7 @@ object StreamingQ {
   private def streamTopK(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ev = t(spark, sfDir, "events")
-    val srcDir = evenOddStagedEvents(spark, sfDir)
+    val srcDir = stagedParts(spark, sfDir, "events", col("event_id") % 2, 2)
     var cur = tempDir("graft_stream_topk_s_")
     ev.limit(0).select(col("user_id"), lit(0L).as("cnt"))
       .write.mode("overwrite").parquet(cur)
@@ -1471,13 +1379,8 @@ object StreamingQ {
           .select("user_id", "cnt")
         val next = tempDir("graft_stream_topk_s_")
         merged.write.mode("overwrite").parquet(next)
-        val prev = cur
+        FileUtils.deleteQuietly(new java.io.File(cur))
         cur = next
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete()
-        }
-        rm(new java.io.File(prev))
       }
       .option("checkpointLocation", tempDir("graft_stream_ckpt_"))
       .trigger(Trigger.AvailableNow())
@@ -1513,51 +1416,11 @@ object StreamingQ {
   case class BucketState(docs: Seq[SigDoc])
   case class DupEmit(dup_id: Long, dup_of: Long)
 
-  /** Stage documents as two half-corpus files with ordered mtimes, so
-    * maxFilesPerTrigger=1 yields exactly two micro-batches — enough to
+  /** Documents as two micro-batches, even doc_ids then odd: enough to
     * prove cross-batch state without a per-file checkpoint storm. */
-  private[graft] def stagedDocsHalves(spark: SparkSession, sfDir: String,
-                                      evenFirst: Boolean = true): String =
-    stagedDir(sfDir, s"stream_docs_${if (evenFirst) "even" else "odd"}_first") { dir =>
-      val docs = t(spark, sfDir, "documents")
-      val firstParity = if (evenFirst) 0 else 1
-      docs.where(col("doc_id") % 2 === firstParity).coalesce(1)
-        .write.mode("overwrite").parquet(dir)
-      val past = FileTime.fromMillis(1000000000000L)
-      val listing = Files.list(Paths.get(dir))
-      try listing.forEach { p: Path => Files.setLastModifiedTime(p, past) }
-      finally listing.close()
-      docs.where(col("doc_id") % 2 === (1 - firstParity)).coalesce(1)
-        .write.mode("append").parquet(dir)
-    }
-
-  /** Stage documents as `parts` files with strictly increasing mtimes
-    * (doc_id % parts = part), so maxFilesPerTrigger=1 delivers exactly
-    * `parts` micro-batches oldest-first — the many-batch twin of
-    * [[stagedDocsHalves]], used by the steady-state intake profiler. */
-  private[graft] def stagedDocsParts(spark: SparkSession, sfDir: String,
-                                     parts: Int): String =
-    stagedDir(sfDir, s"stream_docs_parts$parts") { dir =>
-      val docs = t(spark, sfDir, "documents")
-      val seen = scala.collection.mutable.Set.empty[Path]
-      val base = 1000000000000L
-      for (i <- 0 until parts) {
-        docs.where(pmod(col("doc_id"), lit(parts)) === i).coalesce(1)
-          .write.mode(if (i == 0) "overwrite" else "append").parquet(dir)
-        val ts = FileTime.fromMillis(base + i * 60000L)
-        val listing = Files.list(Paths.get(dir))
-        try listing.forEach { p: Path =>
-          if (!seen.contains(p) && !p.getFileName.toString.startsWith("_")) {
-            Files.setLastModifiedTime(p, ts)
-            seen += p
-          }
-        }
-        finally listing.close()
-      }
-    }
-
   private def streamDedupMinhash(spark: SparkSession, sfDir: String): DataFrame =
-    streamDedupMinhashStaged(spark, stagedDocsHalves(spark, sfDir))
+    streamDedupMinhashStaged(spark,
+      stagedParts(spark, sfDir, "documents", col("doc_id") % 2, 2))
 
   private[graft] def streamDedupMinhashStaged(spark: SparkSession,
                                               srcDir: String): DataFrame = {
@@ -1625,19 +1488,16 @@ object StreamingQ {
   // batch boundary probe). Deliveries arrive as micro-batches; the
   // maintained state is the dedup INDEX a production pipeline persists
   // anyway — normalized-text fingerprints for the exact tier, minhash
-  // signatures + LSH band hashes + shingle sets for the near tier — and
-  // each batch (1) probes the PRE-batch index for its verdicts
-  // (exact > near precedence, min-id lineage, exactly the batch key's
-  // rules), then (2) merges its own rows in. Evens arrive as micro-batch
-  // 0 (the "existing corpus"), odds as micro-batch 1 (the "incoming
-  // crawl"), so the final verdict table over odd docs must EQUAL the
-  // one-shot llm_incremental_dedup — the two keys share ONE oracle
-  // string (LlmText.IncrementalDedupOracle), making "maintained state ==
-  // batch twin" the checked property, not prose. Index + verdict
-  // snapshots both use the batchId-keyed idempotent chain
-  // (_SUCCESS-guarded: a retried micro-batch reuses its committed
-  // snapshot instead of double-appending) and the index chain is
-  // APPEND-ONLY (see inline note). Signatures come from
+  // signatures + LSH band hashes + shingle sets for the near tier — kept
+  // on the [[tieredIntake]] run chain. Each batch (1) probes the
+  // PRE-batch index for its verdicts (exact > near precedence, min-id
+  // lineage, exactly the batch key's rules), then (2) appends its own
+  // rows as a run. Evens arrive as micro-batch 0 (the "existing
+  // corpus"), odds as micro-batch 1 (the "incoming crawl"), so the final
+  // verdict table over odd docs must EQUAL the one-shot
+  // llm_incremental_dedup — the two keys share ONE oracle string
+  // (LlmText.IncrementalDedupOracle), making "maintained state == batch
+  // twin" the checked property, not prose. Signatures come from
   // LlmText.signedOn — the ONE definition the whole batch LSH family
   // uses, so the twin cannot drift from it.
   //
@@ -1651,219 +1511,85 @@ object StreamingQ {
   // the product), not with stream length, and lives as parquet
   // (RocksDB/Delta at scale), partition-parallel on its keys.
   // ---------------------------------------------------------------------
-  /** Per-batch intake profile row — filled only when the caller asks
-    * (the steady-state profilers); the production keys skip the extra
-    * counts. `runsBefore` is the LIVE data-file count before the
-    * batch; `deadFilesBefore` the retired-awaiting-TTL files (so
-    * runsBefore + deadFilesBefore is the batch's disk high-water);
-    * `reclaimedDirs`/`reclaimedFiles` what this batch's grace-TTL
-    * vacuum unlinked (both the tiered and the dedup chain run the
-    * TTL loop since r14 and fill these). */
-  private[graft] case class IntakeBatchStat(batchId: Long, arrivals: Long,
-      indexRowsBefore: Long, runsBefore: Int, secs: Double, merges: Int,
-      reclaimedDirs: Int = 0, reclaimedFiles: Int = 0,
-      deadFilesBefore: Int = 0)
-
-  /** The intake loop itself, run by the `stream_incremental_dedup`
-    * key (2 micro-batches: corpus, then crawl) and over many batches by
-    * Round15Spec.
-    * Returns the committed verdict dirs in batch order.
-    *
-    * INDEX CHAIN = append + size-tiered compaction. Each batch commits
-    * a level-0 run holding only ITS rows (batch-sized write — the
-    * first cut's full-index rewrite per batch was the measured linear
-    * term: 23.6× at ×64); when [[CompactFanout]] runs share a level
-    * they merge into one run at level+1 (the LSM/Bentley–Saxe rule
-    * RocksDB-class stores apply to exactly this workload). Every row
-    * is therefore rewritten at most log₄(batches) times, and the chain
-    * holds ≤ 3·log₄(batches)+1 dirs — listing/open cost is
-    * logarithmic in stream length, not O(batches) (the r10 caveat this
-    * replaces). Old runs become garbage the moment the merged run
-    * commits and are unlinked by the same in-stream read-grace TTL as
-    * the [[tieredIntake]] chain (retire at batch N, unlink at N+g;
-    * final sweep at end of stream), so dedup-index disk is
-    * live-chain-sized while the stream runs, r14 — the verdict dirs
-    * (the key's OUTPUT) are never reclaimed.
-    *
-    * Idempotency is per-dir and deterministic-name keyed
-    * (_SUCCESS-guarded): a retried micro-batch reuses its committed
-    * run/verdict/merge dirs instead of double-appending. Verdicts are
-    * derived from the PRE-batch chain only, so merge timing can never
-    * change results — "maintained state == batch twin" stays the
-    * oracle-checked property.
-    */
-  private val CompactFanout = 4
-
-  /** RESTART RECOVERY (r15, the [[tieredIntake]] twin): a caller that
-    * supplies `resumeRoots` (snapshot root, verdict root — the dedup
-    * chain keeps its output verdicts under a separate root) plus
-    * `checkpointDir` gets the chain replayed from the committed dirs
-    * via [[recoverChain]] (b_init never matches the run pattern, so
-    * the replay sees exactly the batch runs and merges) and the
-    * committed verdict dirs re-listed from the verdict root; intake
-    * resumes from the first un-checkpointed batch. `crashAtBatch` /
-    * `crashAfterRun` are the test hooks, as in the twin. */
+  /** The dedup index on the [[tieredIntake]] chain, run by the
+    * `stream_incremental_dedup` key (2 micro-batches: corpus, then
+    * crawl) and over many batches by Round11Spec/Round15Spec. Runs are
+    * unpartitioned; each batch's verdicts land in the chain's `v<id>`
+    * dirs. */
   private[graft] def incrementalDedupIntake(spark: SparkSession,
       srcDir: String,
-      stats: Option[scala.collection.mutable.ArrayBuffer[IntakeBatchStat]] =
-        None, graceBatches: Int = 2,
-      resumeRoots: Option[(String, String)] = None,
+      stats: Option[mutable.ArrayBuffer[IntakeBatchStat]] = None,
+      resumeRoot: Option[String] = None,
       checkpointDir: Option[String] = None,
       crashAtBatch: Option[Long] = None,
-      crashAfterRun: Boolean = false): Seq[String] = {
-    val snapRoot = resumeRoots.map(_._1)
-      .getOrElse(tempDir("graft_stream_incded_t_"))
-    val verdictRoot = resumeRoots.map(_._2)
-      .getOrElse(tempDir("graft_stream_incded_v_"))
-    // (retireBatchId, dir) of merged-away runs awaiting their TTL
-    var retired = Vector.empty[(Long, String)]
-    val init = s"$snapRoot/b_init"
-    spark.range(0).selectExpr("id AS doc_id", "'' AS fp",
-      "array('') AS sh", "array('') AS sig", "array('') AS bands")
-      .write.mode("overwrite").parquet(init)
-    // (level, dir) runs, oldest first; the live index = init + runs
-    var chain = Vector.empty[(Int, String)]
-    var verdictDirs = Seq.empty[String]
-    resumeRoots.foreach { case (sr, vr) =>
-      val (c, t, _) = recoverChain(sr)
-      chain = c; retired = t
-      // verdicts live under their own root, named b<batchId>
-      verdictDirs = Option(new java.io.File(vr).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(d => d.getName.matches("b\\d+") &&
-          new java.io.File(d, "_SUCCESS").exists())
-        .sortBy(_.getName.drop(1).toLong)
-        .map(_.getPath).toSeq
+      crashAfterRun: Boolean = false): IntakeResult =
+    tieredIntake(spark, schemas("documents"), srcDir, "graft_stream_incded_",
+      None, dedupRowsOf, Some(dedupVerdicts(spark, _, _)), stats,
+      resumeRoot, checkpointDir, crashAtBatch, crashAfterRun)
+
+  /** A batch's dedup index rows: doc_id, the normalized-text
+    * fingerprint `fp`, and the shingles, signature and band hashes. */
+  private def dedupRowsOf(batch: DataFrame): DataFrame =
+    graft.queries.LlmText.signedOn(batch)
+      .join(batch.selectExpr("doc_id",
+        s"md5(${graft.queries.LlmText.NormText}) AS fp"), Seq("doc_id"))
+      .select("doc_id", "fp", "sh", "sig", "bands")
+
+  /** A batch's verdicts against the pre-batch index `prior`: exact_dup
+    * before near_dup, dup_of the smallest matching id. An empty index
+    * keeps every arrival. */
+  private def dedupVerdicts(spark: SparkSession, rows: DataFrame,
+                            prior: Seq[String]): DataFrame =
+    if (prior.isEmpty)
+      rows.selectExpr("doc_id", "'kept' AS verdict",
+        "CAST(NULL AS BIGINT) AS dup_of")
+    else {
+      val index = spark.read.parquet(prior: _*)
+      val exFp = index.groupBy("fp").agg(min(col("doc_id")).as("ex_doc"))
+      val incB = rows.selectExpr("doc_id AS inc_doc",
+        "posexplode(bands) AS (band_idx, band_hash)")
+      val exB = index.selectExpr("doc_id AS ex_doc",
+        "posexplode(bands) AS (band_idx, band_hash)")
+      val near = incB.join(exB, Seq("band_idx", "band_hash"))
+        .select("inc_doc", "ex_doc").distinct()
+        .join(rows.selectExpr("doc_id AS inc_doc", "sh AS sh_i",
+          "sig AS sig_i"), Seq("inc_doc"))
+        .join(index.selectExpr("doc_id AS ex_doc", "sh AS sh_e",
+          "sig AS sig_e"), Seq("ex_doc"))
+        // identical filter-then-verify as dedupNgramJaccard: 12-way
+        // signature agreement >= 3, then exact 3-gram Jaccard >= 0.5
+        .where(expr(
+          """aggregate(zip_with(sig_i, sig_e, (x, y) -> IF(x = y, 1, 0)),
+                       0, (acc, v) -> acc + v)""") >= 3)
+        // exact integer form of J ≥ ½ (3i ≥ a+b): ONE count-only
+        // IntersectSize per pair, where a ratio predicate evaluates
+        // array_intersect twice (codegen CSE does not collapse the
+        // duplicate) and allocates the intersection array both times.
+        // Identical row set: sizes are exact ints, equality at J = 0.5
+        // included both ways.
+        .where(graft.functions.TextOps.intersectSize(
+            col("sh_i"), col("sh_e")) * 3 >=
+          size(col("sh_i")) + size(col("sh_e")))
+        .groupBy("inc_doc").agg(min(col("ex_doc")).as("near_of"))
+      rows.select("doc_id", "fp")
+        .join(exFp, Seq("fp"), "left_outer")
+        .join(near, col("doc_id") === col("inc_doc"), "left_outer")
+        .selectExpr("doc_id",
+          """CASE WHEN ex_doc IS NOT NULL THEN 'exact_dup'
+                  WHEN near_of IS NOT NULL THEN 'near_dup'
+                  ELSE 'kept' END AS verdict""",
+          "coalesce(ex_doc, near_of) AS dup_of")
     }
-    val src = spark.readStream.schema(graft.Tables.schemas("documents"))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (crashAtBatch.contains(batchId) && !crashAfterRun)
-          throw new IllegalStateException(
-            s"injected crash at entry of batch $batchId")
-        val t0 = System.nanoTime()
-        val next = s"$snapRoot/b$batchId"
-        val vdir = s"$verdictRoot/b$batchId"
-        val indexDirs = init +: chain.map(_._2)
-        // profiler-only counts (parquet-footer metadata, no data scan)
-        val rowsBefore = stats.fold(-1L)(_ =>
-          spark.read.parquet(indexDirs: _*).count())
-        val arrivals = stats.fold(-1L)(_ => batch.count())
-        val deadFilesBefore = stats.fold(-1)(_ =>
-          retired.map(r => countParquetFiles(r._2)).sum)
-        if (!new java.io.File(next, "_SUCCESS").exists() ||
-            !new java.io.File(vdir, "_SUCCESS").exists()) {
-          val rows = graft.queries.LlmText.signedOn(batch)
-            .join(batch.selectExpr("doc_id",
-              s"md5(${graft.queries.LlmText.NormText}) AS fp"), Seq("doc_id"))
-            .select("doc_id", "fp", "sh", "sig", "bands")
-            .persist() // probed by both tiers, then appended — 3 reads
-          val index = spark.read.parquet(indexDirs: _*)
-          val exFp = index.groupBy("fp").agg(min(col("doc_id")).as("ex_doc"))
-          val incB = rows.selectExpr("doc_id AS inc_doc",
-            "posexplode(bands) AS (band_idx, band_hash)")
-          val exB = index.selectExpr("doc_id AS ex_doc",
-            "posexplode(bands) AS (band_idx, band_hash)")
-          val near = incB.join(exB, Seq("band_idx", "band_hash"))
-            .select("inc_doc", "ex_doc").distinct()
-            .join(rows.selectExpr("doc_id AS inc_doc", "sh AS sh_i",
-              "sig AS sig_i"), Seq("inc_doc"))
-            .join(index.selectExpr("doc_id AS ex_doc", "sh AS sh_e",
-              "sig AS sig_e"), Seq("ex_doc"))
-            // identical filter-then-verify as dedupNgramJaccard: 12-way
-            // signature agreement >= 3, then exact 3-gram Jaccard >= 0.5
-            .where(expr(
-              """aggregate(zip_with(sig_i, sig_e, (x, y) -> IF(x = y, 1, 0)),
-                           0, (acc, v) -> acc + v)""") >= 3)
-            // exact integer form of J ≥ ½ (3i ≥ a+b, the setsim fix
-            // class, r16): ONE count-only IntersectSize per pair — the
-            // former ratio predicate evaluated array_intersect twice
-            // (codegen CSE does not collapse the duplicate) and
-            // allocated the intersection array both times. Identical
-            // row set: sizes are exact ints, equality at J = 0.5
-            // included both ways.
-            .where(graft.functions.TextOps.intersectSize(
-                col("sh_i"), col("sh_e")) * 3 >=
-              size(col("sh_i")) + size(col("sh_e")))
-            .groupBy("inc_doc").agg(min(col("ex_doc")).as("near_of"))
-          rows.select("doc_id", "fp")
-            .join(exFp, Seq("fp"), "left_outer")
-            .join(near, col("doc_id") === col("inc_doc"), "left_outer")
-            .selectExpr("doc_id",
-              """CASE WHEN ex_doc IS NOT NULL THEN 'exact_dup'
-                      WHEN near_of IS NOT NULL THEN 'near_dup'
-                      ELSE 'kept' END AS verdict""",
-              "coalesce(ex_doc, near_of) AS dup_of")
-            .write.mode("overwrite").parquet(vdir)
-          // append: this batch's rows ONLY — the chain of runs IS the index
-          rows.write.mode("overwrite").parquet(next)
-          rows.unpersist()
-        }
-        if (crashAtBatch.contains(batchId) && crashAfterRun)
-          throw new IllegalStateException(
-            s"injected crash after run write of batch $batchId")
-        // same replay idempotency as the disk _SUCCESS guard (r13
-        // ADVICE #1, the tieredIntake twin): a replayed batch must not
-        // re-append a run the chain already absorbed — including one
-        // merged away but still inside its TTL grace window (r14
-        // ADVICE: the retired check, mirrored from tieredIntake, is
-        // the authoritative "already absorbed" signal; the verdictDirs
-        // proxy missed the merged-but-not-yet-recorded window)
-        if (!chain.exists(_._2 == next) && !retired.exists(_._2 == next))
-          chain = chain :+ ((0, next))
-        // size-tiered compaction: CompactFanout same-level runs → one
-        // run a level up. Deterministic merge-dir names keep retried
-        // batches idempotent (_SUCCESS-guarded like the runs).
-        var merges = 0
-        var merging = true
-        while (merging) {
-          val tail = chain.takeRight(CompactFanout)
-          if (tail.length == CompactFanout &&
-              tail.forall(_._1 == tail.head._1)) {
-            val lvl = tail.head._1
-            val merged = s"$snapRoot/m${batchId}_l${lvl + 1}_${chain.length}"
-            if (!new java.io.File(merged, "_SUCCESS").exists()) {
-              spark.read.parquet(tail.map(_._2): _*)
-                .write.mode("overwrite").parquet(merged)
-            }
-            chain = chain.dropRight(CompactFanout) :+ ((lvl + 1, merged))
-            retired = retired ++ tail.map(t => (batchId, t._2))
-            merges += 1
-          } else merging = false
-        }
-        // the same read-grace TTL vacuum as the tieredIntake chain
-        // (r14): merged-away runs unlink g batches after retirement
-        val (due, waiting) = retired.partition(_._1 + graceBatches <= batchId)
-        val dueFiles = due.map(r => countParquetFiles(r._2)).sum
-        due.foreach(r => deleteRecursively(r._2))
-        retired = waiting
-        if (!verdictDirs.contains(vdir)) verdictDirs = verdictDirs :+ vdir
-        stats.foreach(_ += IntakeBatchStat(batchId, arrivals, rowsBefore,
-          indexDirs.length, (System.nanoTime() - t0) / 1e9, merges,
-          due.length, dueFiles, deadFilesBefore))
-      }
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(tempDir("graft_stream_ckpt_")))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // end-of-stream sweep: release retired runs the TTL had not yet
-    // (verdict dirs — the key's output — are never reclaimed)
-    retired.foreach(r => deleteRecursively(r._2))
-    verdictDirs
-  }
 
   private def streamIncrementalDedup(spark: SparkSession,
                                      sfDir: String): DataFrame = {
-    val verdictDirs =
-      incrementalDedupIntake(spark, stagedDocsHalves(spark, sfDir))
-    // explicit dir list, not a `b*` glob: the foreachBatch loop knows
+    val res = incrementalDedupIntake(spark,
+      stagedParts(spark, sfDir, "documents", col("doc_id") % 2, 2))
+    // explicit dir list, not a `v*` glob: the foreachBatch loop knows
     // every verdict dir it committed, and the glob path triggered the
     // sink-metadata probe's WARN-with-stack in the bench tail
     // (VERDICT r10 #2)
-    spark.read.parquet(verdictDirs: _*)
+    spark.read.parquet(res.verdictDirs: _*)
       .where(col("doc_id") % 2 === 1)
       .orderBy("doc_id")
   }

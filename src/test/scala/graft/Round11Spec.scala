@@ -148,11 +148,12 @@ class Round11Spec extends AnyFunSuite {
     spark.sparkContext.setLogLevel("WARN")
     val sfDir = "/root/testdata/sf0.001"
     val parts = 9
-    val srcDir = graft.streaming.StreamingQ.stagedDocsParts(spark, sfDir, parts)
+    val srcDir = graft.streaming.StreamingQ.stagedParts(spark, sfDir,
+      "documents", pmod(col("doc_id"), lit(parts)), parts)
     val stats = scala.collection.mutable.ArrayBuffer
       .empty[graft.streaming.StreamingQ.IntakeBatchStat]
     val vdirs = graft.streaming.StreamingQ
-      .incrementalDedupIntake(spark, srcDir, Some(stats))
+      .incrementalDedupIntake(spark, srcDir, Some(stats)).verdictDirs
     assert(stats.length == parts, s"expected $parts batches, got ${stats.length}")
     // every doc verdicted exactly once
     val verdicts = spark.read.parquet(vdirs: _*)

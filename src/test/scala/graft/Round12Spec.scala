@@ -75,7 +75,8 @@ class Round12Spec extends AnyFunSuite {
   test("ANN-index intake: 4-batch maintained index probes identically to the 2-batch key") {
     val stats =
       scala.collection.mutable.ArrayBuffer.empty[graft.streaming.StreamingQ.IntakeBatchStat]
-    val src = graft.streaming.StreamingQ.stagedEmbParts(spark, sfDir, 4)
+    val src = graft.streaming.StreamingQ.stagedParts(spark, sfDir,
+      "embeddings", pmod(col("vec_id"), lit(4)), 4)
     val idx = graft.streaming.StreamingQ.annIndexIntake(
       spark, sfDir, src, Some(stats)).liveDirs
     // per-batch telemetry recorded, arrivals partition the corpus

@@ -29,7 +29,8 @@ class Round13Spec extends AnyFunSuite {
   test("ANN-index chain compacts: 16 batches end as one run, probe unchanged") {
     val stats =
       scala.collection.mutable.ArrayBuffer.empty[graft.streaming.StreamingQ.IntakeBatchStat]
-    val src = graft.streaming.StreamingQ.stagedEmbParts(spark, sfDir, 16)
+    val src = graft.streaming.StreamingQ.stagedParts(spark, sfDir,
+      "embeddings", pmod(col("vec_id"), lit(16)), 16)
     val res = graft.streaming.StreamingQ.annIndexIntake(
       spark, sfDir, src, Some(stats))
     val dirs = res.liveDirs

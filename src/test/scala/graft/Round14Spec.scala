@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-14 operator specs: the candidate-efficient wide-L LSH grid
@@ -50,7 +51,8 @@ class Round14Spec extends AnyFunSuite {
   test("grace-TTL reclamation: retire at N, unlink at N+2, bounded high-water") {
     val stats = scala.collection.mutable.ArrayBuffer
       .empty[graft.streaming.StreamingQ.IntakeBatchStat]
-    val src = graft.streaming.StreamingQ.stagedEmbParts(spark, sfDir, 16)
+    val src = graft.streaming.StreamingQ.stagedParts(spark, sfDir,
+      "embeddings", pmod(col("vec_id"), lit(16)), 16)
     val res = graft.streaming.StreamingQ.annIndexIntake(
       spark, sfDir, src, Some(stats))
     // Bentley–Saxe at fanout 4 over 16 batches: merges at batches

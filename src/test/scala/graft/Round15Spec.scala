@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 operator specs: the crossing-arm XL LSH grid (shared
@@ -45,13 +46,15 @@ class Round15Spec extends AnyFunSuite {
   test("tiered chain restart: crash, recover from disk, resume == uninterrupted") {
     import graft.streaming.StreamingQ
     val nBits = graft.queries.LlmVector.lshBits(spark, sfDir)
-    val src = StreamingQ.stagedEmbParts(spark, sfDir, 16)
+    val src = StreamingQ.stagedParts(spark, sfDir, "embeddings",
+      pmod(col("vec_id"), lit(16)), 16)
     def tmp(p: String) = graft.etl.Fixtures.tempDir(p)
     type Stats =
       scala.collection.mutable.ArrayBuffer[StreamingQ.IntakeBatchStat]
     def intake(root: String, ckpt: String, stats: Stats,
                crashAt: Option[Long], afterRun: Boolean) =
-      StreamingQ.tieredIntake(spark, sfDir, src, "graft_r15_unused_", "tbl",
+      StreamingQ.tieredIntake(spark, Tables.schemas("embeddings"), src,
+        "graft_r15_unused_", Some("tbl"),
         b => graft.queries.LlmVector.lshBucketRows(b, nBits),
         stats = Some(stats), resumeRoot = Some(root),
         checkpointDir = Some(ckpt), crashAtBatch = crashAt,
@@ -135,45 +138,56 @@ class Round15Spec extends AnyFunSuite {
 
   test("dedup chain restart: crash, recover, resumed verdicts == uninterrupted") {
     import graft.streaming.StreamingQ
-    val src = StreamingQ.stagedDocsParts(spark, sfDir, 16)
+    val src = StreamingQ.stagedParts(spark, sfDir, "documents",
+      pmod(col("doc_id"), lit(16)), 16)
     def tmp(p: String) = graft.etl.Fixtures.tempDir(p)
     type Stats =
       scala.collection.mutable.ArrayBuffer[StreamingQ.IntakeBatchStat]
-    def intake(roots: (String, String), ckpt: String, stats: Stats,
+    def intake(root: String, ckpt: String, stats: Stats,
                crashAt: Option[Long], afterRun: Boolean) =
       StreamingQ.incrementalDedupIntake(spark, src, Some(stats),
-        resumeRoots = Some(roots), checkpointDir = Some(ckpt),
+        resumeRoot = Some(root), checkpointDir = Some(ckpt),
         crashAtBatch = crashAt, crashAfterRun = afterRun)
     def verdicts(dirs: Seq[String]) =
       spark.read.parquet(dirs: _*).orderBy("doc_id")
         .collect().map(r => (r.getLong(0), r.getString(1),
           if (r.isNullAt(2)) -1L else r.getLong(2))).toSeq
+    def basenames(dirs: Seq[String]) =
+      dirs.map(d => new java.io.File(d).getName)
     val refStats = new Stats
-    val refDirs = intake((tmp("graft_r15_dref_"), tmp("graft_r15_drefv_")),
-      tmp("graft_r15_drefck_"), refStats, None, afterRun = false)
-    val refV = verdicts(refDirs)
+    val ref = intake(tmp("graft_r15_dref_"), tmp("graft_r15_drefck_"),
+      refStats, None, afterRun = false)
+    val refV = verdicts(ref.verdictDirs)
     val refFires =
       refStats.filter(_.reclaimedDirs > 0).map(_.batchId).sorted.toSeq
-    // crash after the run write of batch 7 — resume must replay batch
-    // 7 against its committed run+verdict (both _SUCCESS-guarded),
-    // re-list the committed verdict dirs from the verdict root, and
-    // keep the vacuum schedule
-    val roots = (tmp("graft_r15_dcrash_"), tmp("graft_r15_dcrashv_"))
-    val ckpt = tmp("graft_r15_dcrashck_")
-    val s1 = new Stats
-    val ex = intercept[Exception] {
-      intake(roots, ckpt, s1, Some(7L), afterRun = true)
+    // two crash points: (a) after the run write of batch 7 — resume
+    // must replay batch 7 against its committed run+verdict (both
+    // _SUCCESS-guarded) and re-list the committed verdict dirs; (b) at
+    // entry of batch 12 — batch 11's merge has retired four runs that
+    // are still inside their grace window, so recovery must rebuild
+    // them with their original retire batch id. Both keep the vacuum
+    // schedule.
+    for ((crashBatch, afterRun) <- Seq((7L, true), (12L, false))) {
+      val root = tmp("graft_r15_dcrash_")
+      val ckpt = tmp("graft_r15_dcrashck_")
+      val s1 = new Stats
+      val ex = intercept[Exception] {
+        intake(root, ckpt, s1, Some(crashBatch), afterRun)
+      }
+      assert(ex.getMessage != null && ex.getMessage.contains("injected crash"),
+        s"expected the injected crash, got: $ex")
+      val s2 = new Stats
+      val res = intake(root, ckpt, s2, None, afterRun = false)
+      assert(basenames(res.verdictDirs) == basenames(ref.verdictDirs),
+        s"verdict dirs drifted at crash=$crashBatch/afterRun=$afterRun")
+      assert(basenames(res.liveDirs) == basenames(ref.liveDirs),
+        s"recovered chain drifted at crash=$crashBatch/afterRun=$afterRun")
+      assert(verdicts(res.verdictDirs) == refV,
+        s"resumed dedup verdicts drifted at crash=$crashBatch/afterRun=$afterRun")
+      val fires = (s1 ++ s2).filter(_.reclaimedDirs > 0)
+        .map(_.batchId).sorted.toSeq
+      assert(fires == refFires,
+        s"dedup TTL fired at $fires, uninterrupted fired at $refFires")
     }
-    assert(ex.getMessage != null && ex.getMessage.contains("injected crash"))
-    val s2 = new Stats
-    val dirs = intake(roots, ckpt, s2, None, afterRun = false)
-    assert(dirs.map(d => new java.io.File(d).getName) ==
-      refDirs.map(d => new java.io.File(d).getName))
-    assert(verdicts(dirs) == refV,
-      "resumed dedup verdicts drifted from the uninterrupted run")
-    val fires = (s1 ++ s2).filter(_.reclaimedDirs > 0)
-      .map(_.batchId).sorted.toSeq
-    assert(fires == refFires,
-      s"dedup TTL fired at $fires, uninterrupted fired at $refFires")
   }
 }

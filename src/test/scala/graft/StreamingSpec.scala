@@ -140,9 +140,11 @@ class StreamingSpec extends AnyFunSuite {
     // pair arrives second emits the same (higher, lower) row, so the
     // batch order cannot leak into the answer.
     val fwd = StreamingQ.streamDedupMinhashStaged(spark,
-      StreamingQ.stagedDocsHalves(spark, sfDir, evenFirst = true)).cache()
+      StreamingQ.stagedParts(spark, sfDir, "documents",
+        col("doc_id") % 2, 2)).cache()
     val rev = StreamingQ.streamDedupMinhashStaged(spark,
-      StreamingQ.stagedDocsHalves(spark, sfDir, evenFirst = false))
+      StreamingQ.stagedParts(spark, sfDir, "documents",
+        (col("doc_id") + 1) % 2, 2))
     assert(fwd.count() > 0, "corpus should contain minhash near-dups")
     assert(fwd.exceptAll(rev).isEmpty && rev.exceptAll(fwd).isEmpty)
     // Each duplicate points at a strictly smaller retained doc.
