@@ -19,6 +19,11 @@ import org.apache.spark.sql.SparkSession
   *    tiny files (binaryFile: one object per doc) packed ~2 files per
   *    task, and `scan_binaryfile` went from 0.19 s to 2.64 s. 256k
   *    keeps ~30 small files per task, the packing the defaults gave.
+  *  - These two confs also decide when a scan plans as one partition:
+  *    `SingleSplitRule` (registered by the extension) plans a relation
+  *    whose files pack into one split under them with no exchange above
+  *    it. At 8m/256k one file of up to 256 KB is one split (a curate
+  *    shard is ~64 KB), and on two or more cores two files never are.
   *  - `spark.sql.session.timeZone=UTC` and no UI.
   *  - `spark.sql.extensions=graft.functions.GraftExtensions`, which also
   *    sizes the codegen cache (see

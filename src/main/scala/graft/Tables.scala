@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -44,6 +47,24 @@ object Tables {
           schemas.keys.toSeq.sorted.mkString(", ")))
       spark.read.schema(schema).parquet(s"$sfDir/$name.parquet")
     }
+
+  /** Row count of a corpus table, summed from the Parquet footers of its
+    * data files on the driver: no Spark job, and the path is listed on
+    * every call, so a directory whose contents change is counted
+    * afresh. `$name.parquet` may be one file or a directory of part
+    * files; names starting with `_` or `.` are not data, as for Spark. */
+  def rowCount(spark: SparkSession, sfDir: String, name: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(s"$sfDir/$name.parquet")
+    val fs = root.getFileSystem(conf)
+    fs.listStatus(root)
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith("."))
+      .map { s =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
+        try reader.getRecordCount finally reader.close()
+      }.sum
+  }
 
   /** events.ts arrives in different parquet encodings depending on the
     * writer, so dispatch on the type Spark actually loaded:

@@ -28,6 +28,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer-rule extension: rewrite the row_number()<=k window idiom
     // into the bounded-heap TopKPerGroup operator (graft.plans)
     ext.injectOptimizerRule(_ => graft.plans.TopKRewriteRule)
+    // optimizer-rule extension: plan a scan that reads as one split as a
+    // single-partition query, with no exchange above it (graft.plans)
+    ext.injectOptimizerRule(graft.plans.SingleSplitRule)
     ext.injectFunction((
       FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),

@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, SinglePartition, UnknownPartitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 
 /** Whole-operator extension (SURVEY.md §2-J tier (c)): per-group top-k
@@ -61,7 +61,8 @@ object TopKStrategy extends SparkStrategy {
   * distribution the child has (map-side); the final instance declares
   * `ClusteredDistribution(groupKeys)` so EnsureRequirements inserts
   * exactly one hash exchange between the two — over at most
-  * k × groups × input-partitions rows, not the full input. */
+  * k × groups × input-partitions rows, not the full input. A
+  * single-partition child already satisfies it, and gets no exchange. */
 case class TopKPerGroupExec(
     groupKeys: Seq[Expression],
     sortOrder: Seq[SortOrder],
@@ -74,6 +75,15 @@ case class TopKPerGroupExec(
 
   override def nodeName: String =
     if (partial) "TopKPerGroupPartial" else "TopKPerGroupFinal"
+
+  // Each pass keeps a subset of its own partition's rows, so a
+  // single-partition child stays single-partition and the final pass
+  // and an ORDER BY above it need no exchange (see SingleSplitRule).
+  // Any other partitioning is reported as unknown, as before.
+  override def outputPartitioning: Partitioning = child.outputPartitioning match {
+    case SinglePartition => SinglePartition
+    case _ => UnknownPartitioning(0)
+  }
 
   override def requiredChildDistribution: Seq[Distribution] =
     if (partial) Seq(UnspecifiedDistribution)

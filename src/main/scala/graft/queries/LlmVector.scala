@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.Tables.t
 
 /** SURVEY.md §2-K — vector side of the LLM-pipeline extensions:
@@ -163,7 +164,7 @@ object LlmVector {
   private val LshTargetOcc = 8
   private[graft] def lshBits(spark: SparkSession, sfDir: String): Int = {
     val n = math.max(1L,
-      t(spark, sfDir, "embeddings").count() / LshTargetOcc)
+      Tables.rowCount(spark, sfDir, "embeddings") / LshTargetOcc)
     // cap at 64: one rotation yields 64 orthogonal rows; past that the
     // recall/occupancy dial is more tables (llm_ann_lsh_tune), not bits
     math.min(64, math.max(LshBitsFloor,
@@ -978,14 +979,13 @@ object LlmVector {
   // the fixed-k era); the ×8 corpus derives k=128, ×64 k=1024. The
   // DuckDB oracles compute the SAME rule data-derived
   // (greatest(16, count(*) // 125) — [[IvfKSql]]), so k is semantics
-  // both engines share, not a Spark-side tuning knob. The count() is
-  // parquet-footer metadata (no data scan), memoized per corpus dir.
+  // both engines share, not a Spark-side tuning knob. The count is
+  // read from the Parquet footers on the driver (no Spark job).
   private val IvfKFloor = 16
   private val IvfTargetOcc = 125
-  private val ivfKCache = scala.collection.concurrent.TrieMap.empty[String, Int]
   private[graft] def ivfK(spark: SparkSession, sfDir: String): Int =
-    ivfKCache.getOrElseUpdate(sfDir, math.max(IvfKFloor,
-      (t(spark, sfDir, "embeddings").count() / IvfTargetOcc).toInt))
+    math.max(IvfKFloor,
+      (Tables.rowCount(spark, sfDir, "embeddings") / IvfTargetOcc).toInt)
 
   /** Deterministic ±1 centroid c, dimension d — md5-parity of
     * "c_<c>_<d>" (shared [[OracleFmt.mdParitySign]]; the oracle

@@ -68,7 +68,15 @@ object PlanDigest {
 
   /** The session both the snapshot and `PlanSnapshotSpec` plan under:
     * a stock one (`local[4]`, no extensions). The committed snapshot
-    * pins the plans of exactly this session. */
+    * pins the plans of exactly this session: the scale (multi-split)
+    * plan shapes, with every exchange a 100 TB run plans.
+    *
+    * `Verify`, `Bench` and perfbench register `GraftExtensions`, so they
+    * also run `TopKRewriteRule` and `SingleSplitRule`, and a one-split
+    * input plans there with no exchange at all. Keep this session
+    * stock: switching it to `Session.local()` would pin those
+    * single-split plans in place of the scale shapes. The extension
+    * plans have their own specs (`ExtensionsSpec`, `SingleSplitSpec`). */
   def session(): SparkSession = {
     val spark = SparkSession.builder()
       .master("local[4]")

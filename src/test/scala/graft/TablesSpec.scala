@@ -45,6 +45,14 @@ class TablesSpec extends AnyFunSuite {
 
   test("resolving a declared table starts no Spark job") {
     val sfDir = scaleFactors(1)
+    val jobs = jobsStartedBy {
+      Tables.schemas.keys.foreach(name => Tables.t(spark, sfDir, name))
+    }
+    assert(jobs == 0, s"$jobs Spark jobs to resolve ${Tables.schemas.size} reads")
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsStartedBy(body: => Unit): Int = {
     val jobs = new AtomicInteger
     val sentinel = new CountDownLatch(1)
     val group = "tables-spec-sentinel"
@@ -57,15 +65,37 @@ class TablesSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
-      Tables.schemas.keys.foreach(name => Tables.t(spark, sfDir, name))
+      body
       // the bus delivers events in order: once the sentinel job's start
       // arrives, every job the reads above started has been counted
       sc.setJobGroup(group, "flush the listener bus")
       try sc.parallelize(Seq(1), 1).count()
       finally sc.clearJobGroup()
       assert(sentinel.await(60, TimeUnit.SECONDS), "sentinel job never reported")
-      assert(jobs.get == 0, s"${jobs.get} Spark jobs to resolve ${Tables.schemas.size} reads")
+      jobs.get
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("rowCount equals count() at every scale factor, and starts no Spark job") {
+    val names = Seq("documents", "embeddings", "orders")
+    val counted = for (sfDir <- scaleFactors; name <- names)
+      yield (sfDir, name) -> Tables.t(spark, sfDir, name).count()
+    val jobs = jobsStartedBy {
+      for (((sfDir, name), n) <- counted)
+        assert(Tables.rowCount(spark, sfDir, name) == n, s"$sfDir/$name")
+    }
+    assert(jobs == 0, s"$jobs Spark jobs to count ${counted.size} tables from footers")
+  }
+
+  test("rowCount sums the part files of a directory and sees a file appended") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_rowcount_")
+    try {
+      val out = s"$dir/t.parquet"
+      spark.range(0, 70, 1, 3).write.parquet(out)
+      assert(Tables.rowCount(spark, dir.toString, "t") == 70)
+      spark.range(0, 5, 1, 1).write.mode("append").parquet(out)
+      assert(Tables.rowCount(spark, dir.toString, "t") == 75)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
   test("an unknown table name fails with an error that names it") {
