@@ -1050,7 +1050,8 @@ object LlmVector {
     * argmax over the centroid scores array, ties to the smallest
     * centroid id. The ONE Spark-side derivation of `cell`, shared by
     * the single-query probe and the batch-query key exactly as their
-    * oracles share IvfBaseCte's `assigned` CTE. */
+    * oracles share IvfBaseCte's `assigned` CTE, and by the on-disk and
+    * streamed indexes through [[assignCells]]. */
   private def ivfAssigned(e: DataFrame, k: Int): DataFrame = e
     .withColumn("best", bestCent(col("embedding"), col("nrm"), k))
     .select(col("vec_id"), col("embedding"), col("nrm"),
@@ -1378,22 +1379,8 @@ object LlmVector {
     * maintenance key (`stream_ann_index`): norm + argmax over the 16
     * broadcast-literal centroids, no shuffle. */
   private[graft] def assignCells(batch: DataFrame, k: Int): DataFrame =
-    batch
-      .select(col("vec_id"), col("embedding"),
-        l2norm(col("embedding")).as("nrm"))
-      .withColumn("best", bestCent(col("embedding"), col("nrm"), k))
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        (-col("best.nid")).cast("int").as("cell"))
-
-  /** Probe a hive-partitioned IVF index directory: the two probe-cell
-    * ids are computed driver-side from the broadcast centroids with
-    * the IDENTICAL sequential fold + (cos desc, cent_id asc)
-    * tie-break as the in-plan probe, so every IVF key chooses the
-    * same cells; they reach the scan as literals → partition pruning
-    * (PlanShapeSpec pins it). */
-  private[graft] def probeIvfIndex(spark: SparkSession, sfDir: String,
-      dir: String): DataFrame =
-    probeIvfIndex(spark, sfDir, Seq(dir))
+    ivfAssigned(batch.select(col("vec_id"), col("embedding"),
+      l2norm(col("embedding")).as("nrm")), k)
 
   /** One DataFrame over a chain of hive-partitioned run dirs: each run
     * reads as its OWN base path and the branches union (a multi-path
@@ -1403,14 +1390,19 @@ object LlmVector {
   private[graft] def readRuns(spark: SparkSession, dirs: Seq[String]): DataFrame =
     dirs.map(spark.read.parquet(_)).reduce(_ unionByName _)
 
-  /** Multi-dir form: a streamed index maintained as a CHAIN of run
-    * directories (level-0 appends + size-tiered merges — the
-    * Bentley–Saxe layout, r13) probes every live run; each run dir is
-    * its own hive-partitioned base path, so the cell literals prune
-    * partitions inside every run independently and the probe reads
-    * O(live_runs · corpus/K · nprobe) bytes. Cell contents are a set —
-    * which run a row lives in cannot affect the result, so the chained
-    * index keeps sharing `llm_ann_ivf`'s oracle. */
+  /** Probe a hive-partitioned IVF index: the two probe-cell ids are
+    * computed driver-side from the broadcast centroids with the
+    * IDENTICAL sequential fold + (cos desc, cent_id asc) tie-break as
+    * the in-plan probe, so every IVF key chooses the same cells; they
+    * reach the scan as literals → partition pruning (PlanShapeSpec pins
+    * it). The batch-built index is one dir; a streamed index is a
+    * CHAIN of run dirs (level-0 appends + size-tiered merges — the
+    * Bentley–Saxe layout, r13), each its own hive-partitioned base
+    * path, so the cell literals prune partitions inside every run and
+    * the probe reads O(live_runs · corpus/K · nprobe) bytes. Cell
+    * contents are a set — which run a row lives in cannot affect the
+    * result, so the chained index keeps sharing `llm_ann_ivf`'s
+    * oracle. */
   private[graft] def probeIvfIndex(spark: SparkSession, sfDir: String,
       dirs: Seq[String]): DataFrame = {
     val q = emb(spark, sfDir).where(col("vec_id") === 7)
@@ -1448,7 +1440,7 @@ object LlmVector {
     }
 
   private def annIvfPersisted(spark: SparkSession, sfDir: String): DataFrame =
-    probeIvfIndex(spark, sfDir, ivfIndexDir(spark, sfDir))
+    probeIvfIndex(spark, sfDir, Seq(ivfIndexDir(spark, sfDir)))
 
   // ---------------------------------------------------------------------
   // llm_ann_ivf_kmeans — IVF with DATA-DERIVED centroids: the real
@@ -1968,16 +1960,32 @@ object LlmVector {
     bands
   }
 
+  /** The staged (doc_id, img) P6 PPM table every multimodal key reads,
+    * built once per JVM and persisted once per session. */
+  private def ppmImages(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    graft.etl.Fixtures.stagedPersisted(spark, sfDir, "ppm_images") { dir =>
+      t(spark, sfDir, "documents").select("doc_id").as[Long]
+        .mapPartitions(it => it.map(id => (id, ppmBytes(id))))
+        .toDF("doc_id", "img")
+        .write.mode("overwrite").parquet(dir)
+    }
+  }
+
+  /** (doc_id, b0..b3): the 4 dHash band ints of each staged image. */
+  private def imageBands(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    ppmImages(spark, sfDir).as[(Long, Array[Byte])].mapPartitions { it =>
+      it.map { case (id, img) =>
+        val b = dhashBands(img)
+        (id, b(0), b(1), b(2), b(3))
+      }
+    }.toDF("doc_id", "b0", "b1", "b2", "b3")
+  }
+
   private def multimodalFeatures(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val imgs = graft.etl.Fixtures.stagedPersisted(spark, sfDir, "ppm_images") {
-      dir =>
-        t(spark, sfDir, "documents").select("doc_id").as[Long]
-          .mapPartitions(it => it.map(id => (id, ppmBytes(id))))
-          .toDF("doc_id", "img")
-          .write.mode("overwrite").parquet(dir)
-    }
-    imgs.as[(Long, Array[Byte])].mapPartitions { it =>
+    ppmImages(spark, sfDir).as[(Long, Array[Byte])].mapPartitions { it =>
       it.map { case (id, img) =>
         val (w, h, sum) = decodePpm(img)
         MmFeat(id, w, h, img.length, sum, sum.toDouble / (3.0 * w * h))
@@ -2005,25 +2013,11 @@ object LlmVector {
   // generator's closed form (pixel byte i = (s0+i) mod 256), so any
   // decode or sampling-grid error breaks the match.
   // ---------------------------------------------------------------------
-  private def multimodalPhash(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val imgs = graft.etl.Fixtures.stagedPersisted(spark, sfDir, "ppm_images") {
-      dir =>
-        t(spark, sfDir, "documents").select("doc_id").as[Long]
-          .mapPartitions(it => it.map(id => (id, ppmBytes(id))))
-          .toDF("doc_id", "img")
-          .write.mode("overwrite").parquet(dir)
-    }
-    imgs.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.map { case (id, img) =>
-        val b = dhashBands(img)
-        (id, b(0), b(1), b(2), b(3))
-      }
-    }.toDF("doc_id", "b0", "b1", "b2", "b3")
+  private def multimodalPhash(spark: SparkSession, sfDir: String): DataFrame =
+    imageBands(spark, sfDir)
       .groupBy("b0", "b1", "b2", "b3")
       .agg(count(lit(1)).as("n_images"), min(col("doc_id")).as("keep_doc_id"))
       .orderBy("keep_doc_id")
-  }
 
   // ---------------------------------------------------------------------
   // llm_multimodal_consistency — CROSS-MODAL pair filtering
@@ -2052,20 +2046,8 @@ object LlmVector {
   // key's lpad(bin) equivalence, pinned by ExtensionsSpec).
   // ---------------------------------------------------------------------
   private def multimodalConsistency(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val imgs = graft.etl.Fixtures.stagedPersisted(spark, sfDir, "ppm_images") {
-      dir =>
-        t(spark, sfDir, "documents").select("doc_id").as[Long]
-          .mapPartitions(it => it.map(id => (id, ppmBytes(id))))
-          .toDF("doc_id", "img")
-          .write.mode("overwrite").parquet(dir)
-    }
-    val ihash = imgs.as[(Long, Array[Byte])].mapPartitions { it =>
-      it.map { case (id, img) =>
-        val b = dhashBands(img)
-        (id, b(0), b(1), b(2), b(3))
-      }
-    }.toDF("doc_id", "ib0", "ib1", "ib2", "ib3")
+    val ihash = imageBands(spark, sfDir)
+      .toDF("doc_id", "ib0", "ib1", "ib2", "ib3")
     val caps = graft.queries.LlmText.simhashFp(spark, sfDir)
       .select(col("doc_id"), col("bands"))
     ihash.join(caps, Seq("doc_id"))

@@ -7,7 +7,7 @@ import scala.collection.mutable
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.Tables.{dec, schemas, t}
 import graft.etl.{Ingest, Schemas}
@@ -98,18 +98,20 @@ object StreamingQ {
       key -> math.min(spark.conf.get(key).toInt, 4).toString)(body)
   }
 
+  /** Run a streaming query to completion: the one place a query gets
+    * its checkpoint and the `AvailableNow` trigger, starts and is
+    * awaited. A caller that resumes a stream passes its checkpoint. */
+  private def runAvailableNow(writer: DataStreamWriter[_],
+      checkpointDir: String = tempDir("graft_stream_ckpt_")): Unit =
+    writer.option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+
   /** Run a streaming DataFrame to a parquet sink with AvailableNow and
     * return the sink re-read — the "as the next consumer sees it" view. */
   private def runToParquet(spark: SparkSession, stream: DataFrame): DataFrame = {
     val out = tempDir("graft_stream_out_")
     withStreamingPartitions(spark) {
-      val q = stream.writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", tempDir("graft_stream_ckpt_"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      runAvailableNow(stream.writeStream.format("parquet").option("path", out))
     }
     spark.read.parquet(out)
   }
@@ -120,14 +122,8 @@ object StreamingQ {
   private def runComplete(spark: SparkSession, stream: DataFrame): DataFrame = {
     val name = "graft_mem_" + UUID.randomUUID.toString.replace("-", "")
     withStreamingPartitions(spark) {
-      val q = stream.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", tempDir("graft_stream_ckpt_"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      runAvailableNow(stream.writeStream.format("memory").queryName(name)
+        .outputMode("complete"))
     }
     // Copy the bounded result out of the memory sink and drop the temp
     // view immediately — otherwise every invocation pins a full result
@@ -655,17 +651,13 @@ object StreamingQ {
     val out = tempDir("graft_stream_feb_out_")
     val src = spark.readStream.schema(Schemas.events)
       .parquet(stagedParquet(spark, sfDir, "events"))
-    val q = src.writeStream
+    runAvailableNow(src.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode("append")
           .partitionBy("event_type")
           .option("compression", "snappy")
           .parquet(out)
-      }
-      .option("checkpointLocation", tempDir("graft_stream_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
     spark.read.parquet(out)
       .select("event_id", "user_id", "event_type", "value")
       .orderBy("event_id")
@@ -724,10 +716,12 @@ object StreamingQ {
   // before it, and merge/vacuum timing can never change a verdict
   // (pre-batch chain contents are a set). The oracle replays the
   // even/odd half-split staging: batch-0 (even ids) all kept, an odd
-  // id dropped iff some even bucket-mate scores ≥ 0.4. At 100 TB:
-  // per-batch verdict work is the occupancy-bounded candidate set of
-  // the ARRIVALS only — the corpus never rescans, the index never
-  // rebuilds, disk stays live-chain-sized under the grace-TTL vacuum.
+  // id dropped iff some even bucket-mate scores ≥ 0.4. Candidate
+  // generation is the occupancy-bounded bucket join of the ARRIVALS
+  // only, the index never rebuilds, and disk stays live-chain-sized
+  // under the grace-TTL vacuum. The cosine re-rank, however, joins each
+  // batch's candidates to `LlmVector.emb`, a full scan and l2norm of
+  // the embeddings table, so every micro-batch still reads the corpus.
   // ---------------------------------------------------------------------
   private def streamSemDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val nBits = graft.queries.LlmVector.lshBits(spark, sfDir)
@@ -876,7 +870,7 @@ object StreamingQ {
       case Some(c) => rows.repartition(col(c)).write.partitionBy(c)
       case None => rows.coalesce(1).write
     }).mode("overwrite").parquet(dir)
-    val q = spark.readStream.schema(schema)
+    val writer = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(srcDir)
       .writeStream
@@ -938,11 +932,7 @@ object StreamingQ {
           filesBefore, (System.nanoTime() - t0) / 1e9, merges,
           due.length, dueFiles, deadFilesBefore))
       }
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(tempDir("graft_stream_ckpt_")))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    checkpointDir.fold(runAvailableNow(writer))(runAvailableNow(writer, _))
     val closeFiles = filesOf(retired)
     retired.foreach(r => FileUtils.deleteQuietly(new java.io.File(r._2)))
     IntakeResult(chain.map(_._2), reclaimedInStream + retired.length,
@@ -1012,6 +1002,42 @@ object StreamingQ {
     }
   }
 
+  /** The snapshot loop of the mergeable-summary keys: `init` is
+    * written to `b_init` under a per-call root, and each micro-batch of
+    * the file stream over `srcDir` (one file per batch) writes
+    * `merge(prev, batch)` to `b<batchId>`, never over what it reads.
+    * The superseded snapshot is deleted once the next one commits. A
+    * batch whose snapshot already holds _SUCCESS is not merged again,
+    * so a replayed batch cannot add its partial (cell sums, counts)
+    * twice; one without _SUCCESS is rewritten. Returns the last
+    * snapshot. */
+  private def foldSnapshots(spark: SparkSession, schema: StructType,
+      srcDir: String, init: DataFrame)(
+      merge: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val root = tempDir("graft_stream_fold_")
+    var cur = s"$root/b_init"
+    init.write.mode("overwrite").parquet(cur)
+    runAvailableNow(spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(srcDir)
+      .writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val next = s"$root/b$batchId"
+        if (!new java.io.File(next, "_SUCCESS").exists())
+          merge(spark.read.parquet(cur), batch)
+            .write.mode("overwrite").parquet(next)
+        // a replayed batch finds `cur` already naming its own snapshot
+        if (next != cur) FileUtils.deleteQuietly(new java.io.File(cur))
+        cur = next
+      })
+    spark.read.parquet(cur)
+  }
+
+  /** `a + b` across a full-outer summary merge, a missing side
+    * counting 0. */
+  private def addCounts(a: String, b: String): Column =
+    coalesce(col(a), lit(0L)) + coalesce(col(b), lit(0L))
+
   // ---------------------------------------------------------------------
   // stream_merge_upsert — streaming CDC upsert: change batches arrive
   // on a file stream and foreachBatch MERGEs each one into a parquet
@@ -1045,37 +1071,13 @@ object StreamingQ {
           col("o_custkey"), lit("N").as("o_orderstatus"), col("o_totalprice"))
       stageInOrder(dir, Seq(updates, inserts))
     }
-    var cur = tempDir("graft_stream_merge_t_")
-    snapshot.write.mode("overwrite").parquet(cur)
-    val src = spark.readStream.schema(snapshot.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val merged = spark.read.parquet(cur).as("t")
-          .join(batch.as("s"), col("t.o_orderkey") === col("s.o_orderkey"),
-            "full_outer")
-          .select(
-            coalesce(col("s.o_orderkey"), col("t.o_orderkey")).as("o_orderkey"),
-            coalesce(col("s.o_custkey"), col("t.o_custkey")).as("o_custkey"),
-            coalesce(col("s.o_orderstatus"), col("t.o_orderstatus"))
-              .as("o_orderstatus"),
-            coalesce(col("s.o_totalprice"), col("t.o_totalprice"))
-              .as("o_totalprice"))
-        val next = tempDir("graft_stream_merge_t_")
-        merged.write.mode("overwrite").parquet(next)
-        // The superseded snapshot is never read again once the batch's
-        // write completes — delete it so repeated runs don't accumulate
-        // N+1 copies of the table in temp space.
-        FileUtils.deleteQuietly(new java.io.File(cur))
-        cur = next
-      }
-      .option("checkpointLocation", tempDir("graft_stream_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(cur)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
+    def latest(c: String) = coalesce(col(s"s.$c"), col(s"t.$c")).as(c)
+    foldSnapshots(spark, snapshot.schema, srcDir, snapshot) { (prev, batch) =>
+      prev.as("t")
+        .join(batch.as("s"), col("t.o_orderkey") === col("s.o_orderkey"),
+          "full_outer")
+        .select(snapshot.columns.toSeq.map(latest): _*)
+    }.select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("bigint").as("price_e2"))
       .orderBy("o_orderkey")
   }
@@ -1096,35 +1098,18 @@ object StreamingQ {
   // ---------------------------------------------------------------------
   private def streamIncrementalAgg(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = t(spark, sfDir, "events")
-    val srcDir = stagedParts(spark, sfDir, "events", col("event_id") % 2, 2)
-    var cur = tempDir("graft_stream_incagg_t_")
-    ev.limit(0).select(col("event_type"), lit(0L).as("n_events"),
-      lit(0L).as("sum_e2")).write.mode("overwrite").parquet(cur)
-    val src = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val part = batch.groupBy("event_type").agg(
-          count(lit(1)).as("b_cnt"),
-          sum(round(col("value") * 100).cast("bigint")).as("b_sum"))
-        val merged = spark.read.parquet(cur).as("t")
-          .join(part.as("s"), Seq("event_type"), "full_outer")
-          .select(col("event_type"),
-            (coalesce(col("n_events"), lit(0L)) +
-              coalesce(col("b_cnt"), lit(0L))).as("n_events"),
-            (coalesce(col("sum_e2"), lit(0L)) +
-              coalesce(col("b_sum"), lit(0L))).as("sum_e2"))
-        val next = tempDir("graft_stream_incagg_t_")
-        merged.write.mode("overwrite").parquet(next)
-        FileUtils.deleteQuietly(new java.io.File(cur))
-        cur = next
-      }
-      .option("checkpointLocation", tempDir("graft_stream_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(cur).orderBy("event_type")
+    foldSnapshots(spark, ev.schema,
+        stagedParts(spark, sfDir, "events", col("event_id") % 2, 2),
+        ev.limit(0).select(col("event_type"), lit(0L).as("n_events"),
+          lit(0L).as("sum_e2"))) { (prev, batch) =>
+      val part = batch.groupBy("event_type").agg(
+        count(lit(1)).as("b_cnt"),
+        sum(round(col("value") * 100).cast("bigint")).as("b_sum"))
+      prev.join(part, Seq("event_type"), "full_outer")
+        .select(col("event_type"),
+          addCounts("n_events", "b_cnt").as("n_events"),
+          addCounts("sum_e2", "b_sum").as("sum_e2"))
+    }.orderBy("event_type")
   }
 
   // ---------------------------------------------------------------------
@@ -1137,59 +1122,31 @@ object StreamingQ {
   // merge is associative and the maintained sketch is BIT-IDENTICAL
   // to the one-shot batch sketch over the same corpus — which is
   // exactly what the DuckDB oracle replays (the equality IS the
-  // mergeability property, proved per run). Per-batch work is
-  // O(batch keys + d·w); the snapshot is d·w-bounded (≤ 12,288 rows)
-  // FOREVER, independent of stream length or key cardinality — the
-  // whole point of shipping a sketch instead of exact counts. The
-  // final answer probes user_ids 1–5 against the maintained sketch
-  // next to their exact counts (estimate ≥ exact, by how much).
+  // mergeability property, proved per run). A replayed batch must not
+  // add its cell sums twice, which [[foldSnapshots]]' _SUCCESS guard
+  // ensures. Per-batch work is O(batch keys + d·w); the snapshot is
+  // d·w-bounded (≤ 12,288 rows) FOREVER, independent of stream length
+  // or key cardinality — the whole point of shipping a sketch instead
+  // of exact counts. The final answer probes user_ids 1–5 against the
+  // maintained sketch next to their exact counts (estimate ≥ exact, by
+  // how much).
   // ---------------------------------------------------------------------
   private def streamCountMin(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = t(spark, sfDir, "events")
-    val srcDir = stagedParts(spark, sfDir, "events", col("event_id") % 2, 2)
     val cellsOf = "transform(sequence(0, 2), r -> struct(r AS row, " +
       "substring(md5(concat(cast(user_id as string), '#', " +
       "cast(r as string))), 1, 3) AS cell))"
-    // Snapshot dirs are keyed by BATCH ID, making the merge IDEMPOTENT:
-    // a failed-then-retried micro-batch finds its own committed
-    // snapshot (_SUCCESS present) and skips the re-merge instead of
-    // re-adding its cell sums to the already-merged state — the
-    // double-add would corrupt counts silently and break the
-    // maintained-sketch == one-shot-sketch oracle equality. A
-    // partially-written snapshot (no _SUCCESS) is re-written with
-    // mode(overwrite), so every path converges to exactly-once merge
-    // semantics. Snapshots are d·w-bounded (≤ 12,288 rows) so keeping
-    // the per-batch chain costs batches·|sketch|, trivially small; the
-    // root temp dir is per-invocation.
-    val snapRoot = tempDir("graft_stream_cms_t_")
-    var cur = s"$snapRoot/b_init"
-    ev.limit(0).selectExpr("CAST(0 AS INT) AS row", "'' AS cell",
-      "CAST(0 AS BIGINT) AS cnt").write.mode("overwrite").parquet(cur)
-    val src = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val next = s"$snapRoot/b$batchId"
-        if (!new java.io.File(next, "_SUCCESS").exists()) {
-          val part = batch.groupBy("user_id").agg(count(lit(1)).as("cnt"))
-            .selectExpr(s"explode($cellsOf) AS rc", "cnt")
-            .groupBy(col("rc.row").as("row"), col("rc.cell").as("cell"))
-            .agg(sum(col("cnt")).as("b_cnt"))
-          val merged = spark.read.parquet(cur)
-            .join(part, Seq("row", "cell"), "full_outer")
-            .select(col("row"), col("cell"),
-              (coalesce(col("cnt"), lit(0L)) +
-                coalesce(col("b_cnt"), lit(0L))).as("cnt"))
-          merged.write.mode("overwrite").parquet(next)
-        }
-        cur = next
-      }
-      .option("checkpointLocation", tempDir("graft_stream_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val sketch = spark.read.parquet(cur)
+    val sketch = foldSnapshots(spark, ev.schema,
+        stagedParts(spark, sfDir, "events", col("event_id") % 2, 2),
+        ev.limit(0).selectExpr("CAST(0 AS INT) AS row", "'' AS cell",
+          "CAST(0 AS BIGINT) AS cnt")) { (prev, batch) =>
+      val part = batch.groupBy("user_id").agg(count(lit(1)).as("cnt"))
+        .selectExpr(s"explode($cellsOf) AS rc", "cnt")
+        .groupBy(col("rc.row").as("row"), col("rc.cell").as("cell"))
+        .agg(sum(col("cnt")).as("b_cnt"))
+      prev.join(part, Seq("row", "cell"), "full_outer")
+        .select(col("row"), col("cell"), addCounts("cnt", "b_cnt").as("cnt"))
+    }
     ev.groupBy("user_id").agg(count(lit(1)).as("exact_cnt"))
       .where(col("user_id") <= 5)
       .selectExpr("user_id", "exact_cnt", s"explode($cellsOf) AS rc")
@@ -1211,8 +1168,9 @@ object StreamingQ {
   // (vocab-bound, the agg_gini device made incremental). This is the
   // production trade: when the domain is quantizable (money, latencies
   // in µs buckets), a mergeable exact histogram beats t-digest — same
-  // bounded state, zero error. Same batchId-keyed idempotent snapshot
-  // chain as stream_countmin. Quantile rule: smallest value whose
+  // bounded state, zero error. The histogram is folded by
+  // [[foldSnapshots]], whose _SUCCESS guard keeps a replayed batch
+  // from adding its counts twice. Quantile rule: smallest value whose
   // running count reaches ceil(p·n), computed identically in both
   // engines via integer cross-multiplication (cum·100 ≥ p100·n — no
   // ceil, no floats); the DuckDB oracle computes the same rule
@@ -1222,37 +1180,18 @@ object StreamingQ {
   private def streamQuantileHist(spark: SparkSession,
                                  sfDir: String): DataFrame = {
     val ev = t(spark, sfDir, "events")
-    val srcDir = stagedParts(spark, sfDir, "events", col("event_id") % 2, 2)
-    val snapRoot = tempDir("graft_stream_qh_t_")
-    var cur = s"$snapRoot/b_init"
-    ev.limit(0).selectExpr("event_type",
-      "CAST(0 AS BIGINT) AS v", "CAST(0 AS BIGINT) AS cnt")
-      .write.mode("overwrite").parquet(cur)
-    val src = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val next = s"$snapRoot/b$batchId"
-        if (!new java.io.File(next, "_SUCCESS").exists()) {
-          val part = batch
-            .selectExpr("event_type",
-              "cast(round(value * 100) as bigint) AS v")
-            .groupBy("event_type", "v").agg(count(lit(1)).as("b_cnt"))
-          spark.read.parquet(cur)
-            .join(part, Seq("event_type", "v"), "full_outer")
-            .select(col("event_type"), col("v"),
-              (coalesce(col("cnt"), lit(0L)) +
-                coalesce(col("b_cnt"), lit(0L))).as("cnt"))
-            .write.mode("overwrite").parquet(next)
-        }
-        cur = next
-      }
-      .option("checkpointLocation", tempDir("graft_stream_qhck_"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val hist = spark.read.parquet(cur).where(col("cnt") > 0)
+    val hist = foldSnapshots(spark, ev.schema,
+        stagedParts(spark, sfDir, "events", col("event_id") % 2, 2),
+        ev.limit(0).selectExpr("event_type",
+          "CAST(0 AS BIGINT) AS v", "CAST(0 AS BIGINT) AS cnt")) {
+      (prev, batch) =>
+        val part = batch
+          .selectExpr("event_type", "cast(round(value * 100) as bigint) AS v")
+          .groupBy("event_type", "v").agg(count(lit(1)).as("b_cnt"))
+        prev.join(part, Seq("event_type", "v"), "full_outer")
+          .select(col("event_type"), col("v"),
+            addCounts("cnt", "b_cnt").as("cnt"))
+    }.where(col("cnt") > 0)
     import org.apache.spark.sql.expressions.Window
     val wCum = Window.partitionBy("event_type").orderBy("v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1279,51 +1218,32 @@ object StreamingQ {
   // snapshot — the mergeable-summaries pattern stream_countmin applies
   // to frequencies, applied to cardinality. State is sketch-bounded
   // (lgK=14 ≈ KBs per key) FOREVER, independent of stream length —
-  // exactly why monitors ship HLL instead of distinct sets. Same
-  // batchId-keyed idempotent snapshot chain as stream_countmin (a
-  // retried batch finds its committed snapshot and skips the re-union;
-  // HLL union is max-of-registers so even a double-union is harmless,
-  // but the chain keeps the exactly-once discipline uniform). Oracle-
-  // BOUNDED like the batch sketch keys: the output carries the exact
-  // distinct count plus merge_consistent (|maintained − one-shot| ≤ 2%
-  // of one-shot) and within_bound (|maintained − exact| ≤ 5% of exact)
-  // — DuckDB independently computes the exact side and asserts both
-  // flags TRUE.
+  // exactly why monitors ship HLL instead of distinct sets. The sketch
+  // is folded by [[foldSnapshots]] like stream_countmin's (HLL union
+  // is max-of-registers, so even a double-union would be harmless, but
+  // the fold keeps one exactly-once discipline for every summary).
+  // Oracle-BOUNDED like the batch sketch keys: the output carries the
+  // exact distinct count plus merge_consistent (|maintained − one-shot|
+  // ≤ 2% of one-shot) and within_bound (|maintained − exact| ≤ 5% of
+  // exact) — DuckDB independently computes the exact side and asserts
+  // both flags TRUE.
   // ---------------------------------------------------------------------
   private def streamHllDistinct(spark: SparkSession,
                                 sfDir: String): DataFrame = {
     val ev = t(spark, sfDir, "events")
-    val srcDir = stagedParts(spark, sfDir, "events", col("event_id") % 2, 2)
-    val snapRoot = tempDir("graft_stream_hll_t_")
-    var cur = s"$snapRoot/b_init"
-    ev.limit(0).groupBy("event_type")
-      .agg(expr("hll_sketch_agg(user_id, 14)").as("sk"))
-      .write.mode("overwrite").parquet(cur)
-    val src = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val next = s"$snapRoot/b$batchId"
-        if (!new java.io.File(next, "_SUCCESS").exists()) {
-          val part = batch.groupBy("event_type")
-            .agg(expr("hll_sketch_agg(user_id, 14)").as("b_sk"))
-          spark.read.parquet(cur)
-            .join(part, Seq("event_type"), "full_outer")
-            .selectExpr("event_type",
-              """CASE WHEN sk IS NULL THEN b_sk
-                      WHEN b_sk IS NULL THEN sk
-                      ELSE hll_union(sk, b_sk) END AS sk""")
-            .write.mode("overwrite").parquet(next)
-        }
-        cur = next
-      }
-      .option("checkpointLocation", tempDir("graft_stream_hllck_"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val maintained = spark.read.parquet(cur)
-      .selectExpr("event_type", "hll_sketch_estimate(sk) AS est_users")
+    val maintained = foldSnapshots(spark, ev.schema,
+        stagedParts(spark, sfDir, "events", col("event_id") % 2, 2),
+        ev.limit(0).groupBy("event_type")
+          .agg(expr("hll_sketch_agg(user_id, 14)").as("sk"))) {
+      (prev, batch) =>
+        val part = batch.groupBy("event_type")
+          .agg(expr("hll_sketch_agg(user_id, 14)").as("b_sk"))
+        prev.join(part, Seq("event_type"), "full_outer")
+          .selectExpr("event_type",
+            """CASE WHEN sk IS NULL THEN b_sk
+                    WHEN b_sk IS NULL THEN sk
+                    ELSE hll_union(sk, b_sk) END AS sk""")
+    }.selectExpr("event_type", "hll_sketch_estimate(sk) AS est_users")
     val exact = ev.groupBy("event_type")
       .agg(countDistinct(col("user_id")).as("exact_users"),
         expr("hll_sketch_estimate(hll_sketch_agg(user_id, 14))")
@@ -1358,36 +1278,18 @@ object StreamingQ {
   private def streamTopK(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ev = t(spark, sfDir, "events")
-    val srcDir = stagedParts(spark, sfDir, "events", col("event_id") % 2, 2)
-    var cur = tempDir("graft_stream_topk_s_")
-    ev.limit(0).select(col("user_id"), lit(0L).as("cnt"))
-      .write.mode("overwrite").parquet(cur)
     val wTop = Window.orderBy(col("cnt").desc, col("user_id"))
-    val src = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    foldSnapshots(spark, ev.schema,
+        stagedParts(spark, sfDir, "events", col("event_id") % 2, 2),
+        ev.limit(0).select(col("user_id"), lit(0L).as("cnt"))) {
+      (prev, batch) =>
         val part = batch.groupBy("user_id").agg(count(lit(1)).as("b_cnt"))
-        val merged = spark.read.parquet(cur)
-          .join(part, Seq("user_id"), "full_outer")
-          .select(col("user_id"),
-            (coalesce(col("cnt"), lit(0L)) +
-              coalesce(col("b_cnt"), lit(0L))).as("cnt"))
+        prev.join(part, Seq("user_id"), "full_outer")
+          .select(col("user_id"), addCounts("cnt", "b_cnt").as("cnt"))
           .withColumn("rk", row_number().over(wTop))
           .where(col("rk") <= 64)
           .select("user_id", "cnt")
-        val next = tempDir("graft_stream_topk_s_")
-        merged.write.mode("overwrite").parquet(next)
-        FileUtils.deleteQuietly(new java.io.File(cur))
-        cur = next
-      }
-      .option("checkpointLocation", tempDir("graft_stream_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(cur)
-      .withColumn("rk", row_number().over(wTop))
+    }.withColumn("rk", row_number().over(wTop))
       .where(col("rk") <= 10)
       .select(col("rk"), col("user_id"), col("cnt"))
       .orderBy("rk")

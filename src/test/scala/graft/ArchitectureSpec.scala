@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps each cross-cutting decision in one module: no main-source file
   * other than etl/Fixtures.scala may declare a session-keyed cache or
-  * create temp dirs itself, and none other than Session.scala may build
-  * a session. */
+  * create temp dirs itself, none other than Session.scala may build a
+  * session, and no streaming query is run outside
+  * StreamingQ.runAvailableNow. */
 class ArchitectureSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -32,6 +33,29 @@ class ArchitectureSpec extends AnyFunSuite {
       Seq(raw"WeakHashMap\s*\[\s*SparkSession".r, raw"createTempDirectory".r))
     assert(found.isEmpty,
       s"memo/temp-dir code outside graft.etl.Fixtures: ${found.mkString("; ")}")
+  }
+
+  test("only StreamingQ.runAvailableNow starts and awaits a streaming query") {
+    val owner = root.resolve("graft/streaming/StreamingQ.scala")
+    // the runner's body: from its `def` to the next blank line
+    val runner = {
+      val src = Files.readString(owner)
+      val at = src.indexOf("def runAvailableNow(")
+      if (at < 0) (0, 0) else (at, src.indexOf("\n\n", at))
+    }
+    val walk = Files.walk(root)
+    val sites = try walk.iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = Files.readString(p)
+        raw"Trigger\s*\.\s*AvailableNow\s*\(|awaitTermination".r
+          .findAllMatchIn(src).map(_.start)
+          .filterNot(at => p == owner && at > runner._1 && at < runner._2)
+          .map(at => s"$p:${src.take(at).count(_ == '\n') + 1}")
+      }.toList
+    finally walk.close()
+    assert(sites.isEmpty, s"${sites.length} sites run a streaming query " +
+      s"outside runAvailableNow: ${sites.mkString("; ")}")
   }
 
   test("only Session.scala builds a SparkSession") {

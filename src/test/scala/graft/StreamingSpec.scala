@@ -177,11 +177,57 @@ class StreamingSpec extends AnyFunSuite {
   test("stream_countmin estimates never under-count and state stays bounded") {
     // CMS point estimates are OVER-estimates by construction (cell sums
     // only ever add mass), and the maintained sketch can never exceed
-    // the d*w cell bound regardless of stream length.
+    // the d*w cell bound regardless of stream length: the key's fold
+    // root keeps one snapshot, of at most 3·4096 cells, once it is done.
+    import scala.jdk.CollectionConverters._
+    def foldRoots = graft.etl.Fixtures.createdDirs.asScala
+      .filter(_.getName.startsWith("graft_stream_fold_")).toSet
+    val before = foldRoots
     val out = StreamingQ.defs("stream_countmin")(spark, sfDir).collect()
     assert(out.nonEmpty)
     out.foreach(r => assert(r.getLong(2) >= r.getLong(1),
       s"CMS under-counted user ${r.getLong(0)}"))
+    val roots = (foldRoots -- before).toSeq
+    assert(roots.length === 1, s"fold roots made by the key: $roots")
+    val snaps = roots.head.listFiles().filter(_.isDirectory).map(_.getName)
+    assert(snaps.length === 1,
+      s"superseded snapshots left behind: ${snaps.sorted.mkString(", ")}")
+    val cells = spark.read.parquet(s"${roots.head}/${snaps.head}").count()
+    assert(cells > 0 && cells <= 3 * 4096)
+  }
+
+  test("stream_merge_upsert equals the one-shot batch MERGE of its change feed") {
+    // the feed the key stages: price bump + status 'R' on keys ≡0 mod
+    // 97, and keys ≡0 mod 101 re-inserted past max(o_orderkey) as 'N'
+    val target = Tables.t(spark, sfDir, "orders")
+      .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+    val shift = target.agg(max("o_orderkey")).head.getLong(0) + 1L
+    val changes = target.where(col("o_orderkey") % 97 === 0)
+      .withColumn("o_totalprice", (Tables.dec(col("o_totalprice")) +
+        lit(BigDecimal("1000.00"))).cast("double"))
+      .withColumn("o_orderstatus", lit("R"))
+      .unionByName(target.where(col("o_orderkey") % 101 === 0)
+        .withColumn("o_orderkey", col("o_orderkey") + shift)
+        .withColumn("o_orderstatus", lit("N")))
+    // MERGE as unmatched target rows plus every change row
+    val want = target.join(changes, Seq("o_orderkey"), "left_anti")
+      .unionByName(changes)
+      .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
+        round(col("o_totalprice") * 100).cast("bigint").as("price_e2"))
+    val got = StreamingQ.defs("stream_merge_upsert")(spark, sfDir).cache()
+    assert(got.where(col("o_orderstatus") === "R").count() > 0)
+    assert(got.where(col("o_orderstatus") === "N").count() > 0)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      "streamed MERGE diverged from the batch MERGE")
+  }
+
+  test("stream_incremental_agg equals the one-shot batch aggregate") {
+    val want = Tables.t(spark, sfDir, "events").groupBy("event_type")
+      .agg(count(lit(1)).as("n_events"),
+        sum(round(col("value") * 100).cast("bigint")).as("sum_e2"))
+    val got = StreamingQ.defs("stream_incremental_agg")(spark, sfDir)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      "maintained rollup diverged from the batch aggregate")
   }
 
   test("stream_quantile_hist equals the exact batch quantiles") {
