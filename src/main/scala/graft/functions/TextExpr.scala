@@ -20,7 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `k × |sh|` digests instead of nested interpreted lambdas with
   * per-element allocation. Shuffle-free per-row work, so it scales as
   * pure map parallelism; CodegenFallback is fine because the loop body
-  * dominates, not expression dispatch.
+  * dominates, not expression dispatch; it also keeps the operator out
+  * of whole-stage codegen.
   */
 case class MinHashSignature(child: Expression, k: Int)
     extends UnaryExpression with CodegenFallback {
@@ -93,7 +94,8 @@ case class MinHashSignature(child: Expression, k: Int)
   * lambda form was the single largest one-time cost in the suite).
   * Shuffle-free per-row work — pure map parallelism at any scale;
   * CodegenFallback is fine because the digest loop dominates, not
-  * expression dispatch.
+  * expression dispatch; it also keeps the operator out of whole-stage
+  * codegen.
   */
 case class SimHashBands(child: Expression)
     extends UnaryExpression with CodegenFallback {
@@ -191,15 +193,16 @@ case class WordNGrams(child: Expression, n: Int)
     copy(child = newChild)
 }
 
-/** Unicode normalization (`java.text.Normalizer`) as a REAL-codegen
-  * unary expression — stays inside whole-stage codegen, unlike the
-  * digest-loop expressions above (whose loop bodies dominate and make
-  * CodegenFallback the right call). Spark ships no normalization
+/** Unicode normalization (`java.text.Normalizer`) as a codegen unary
+  * expression (its generated code calls `compute` through
+  * [[Kernel.callCompute]]) — stays inside whole-stage codegen, unlike
+  * the digest-loop expressions above (whose loop bodies dominate and
+  * make CodegenFallback the right call). Spark ships no normalization
   * function, yet NFC canonicalization is a standard corpus-hygiene
   * step: the same text can arrive precomposed (é = U+00E9) or
   * decomposed (e + U+0301), byte-different but canonically equal, so
-  * exact dedup silently misses cross-form duplicates. The generated
-  * code takes the `isNormalized` fast path first — for the (typical)
+  * exact dedup silently misses cross-form duplicates. The kernel
+  * takes the `isNormalized` fast path first — for the (typical)
   * already-NFC row it costs one scan and ZERO allocation, so at 100 TB
   * the pass is cheap map-side work that only pays the normalize
   * allocation on the rows that need it. Form is constructor-pinned to
@@ -217,29 +220,18 @@ case class UnicodeNormalize(child: Expression, form: String)
 
   @transient private lazy val f = java.text.Normalizer.Form.valueOf(form)
 
-  override def nullSafeEval(input: Any): Any = {
-    val u = input.asInstanceOf[UTF8String]
+  def compute(u: UTF8String): UTF8String = {
     val s = u.toString
     if (java.text.Normalizer.isNormalized(s, f)) u
     else UTF8String.fromString(java.text.Normalizer.normalize(s, f))
   }
 
+  override def nullSafeEval(input: Any): Any =
+    compute(input.asInstanceOf[UTF8String])
+
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val s = ctx.freshName("normStr")
-      s"""
-         |java.lang.String $s = $c.toString();
-         |if (java.text.Normalizer.isNormalized($s,
-         |    java.text.Normalizer.Form.$form)) {
-         |  ${ev.value} = $c;
-         |} else {
-         |  ${ev.value} = org.apache.spark.unsafe.types.UTF8String
-         |    .fromString(java.text.Normalizer.normalize($s,
-         |      java.text.Normalizer.Form.$form));
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, c => Kernel.callCompute(ctx, ev, this, c))
 
   override protected def withNewChildInternal(
       newChild: Expression): UnicodeNormalize =
@@ -269,7 +261,8 @@ case class UnicodeNormalize(child: Expression, form: String)
   * feed non-null, distinct-by-construction arrays, so no declared
   * result depends on the difference. Shuffle-free per-row work;
   * CodegenFallback is fine because the set probe loop dominates, not
-  * expression dispatch.
+  * expression dispatch; it also keeps the operator out of whole-stage
+  * codegen.
   */
 case class IntersectSize(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression

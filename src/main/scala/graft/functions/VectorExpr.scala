@@ -1,11 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.sqrt
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import Kernel.{callCompute, isFloat, isVector}
 
 /** Fused dot product over two numeric arrays — the one custom Catalyst
   * `Expression` this engine needs (SURVEY.md §7: perf-gated; the
@@ -32,170 +37,125 @@ case class DotProduct(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_dot"
 
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    // parquet-sourced arrays read as containsNull=true even when the
-    // data has no nulls, so only the element type is enforced; a null
-    // element reads as 0.0 (contributes nothing to the fold).
-    def ok(e: Expression): Boolean = e.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left) && ok(right)) TypeCheckResult.TypeCheckSuccess
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (isVector(left) && isVector(right)) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires two array<float|double> arguments, " +
         s"got ${left.dataType.sql}, ${right.dataType.sql}")
-  }
 
-  private def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
+  @transient private lazy val aFloat = isFloat(left)
+  @transient private lazy val bFloat = isFloat(right)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (aa, bb) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  def compute(aa: ArrayData, bb: ArrayData): Double = {
     val n = math.min(aa.numElements(), bb.numElements())
-    val aFloat = elemType(left) == FloatType
-    val bFloat = elemType(right) == FloatType
+    val af = aFloat
+    val bf = bFloat
     var acc = 0.0
     var i = 0
     while (i < n) {
-      val x = if (aFloat) aa.getFloat(i).toDouble else aa.getDouble(i)
-      val y = if (bFloat) bb.getFloat(i).toDouble else bb.getDouble(i)
+      val x = if (af) aa.getFloat(i).toDouble else aa.getDouble(i)
+      val y = if (bf) bb.getFloat(i).toDouble else bb.getDouble(i)
       acc += x * y
       i += 1
     }
     acc
   }
 
+  override def nullSafeEval(a: Any, b: Any): Any =
+    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val getA =
-        if (elemType(left) == FloatType) s"(double) $a.getFloat($i)"
-        else s"$a.getDouble($i)"
-      val getB =
-        if (elemType(right) == FloatType) s"(double) $b.getFloat($i)"
-        else s"$b.getDouble($i)"
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += $getA * $getB;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => callCompute(ctx, ev, this, a, b))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
 }
 
-/** All-centroid cosine scores in ONE codegen loop over a plan-constant
-  * k×dim matrix — the IVF/SemDeDup cell-assignment kernel under the
-  * k ∝ N rule (VERDICT r10 #1). The previous formulation built an
-  * `array()` of k per-centroid [[DotProduct]] nodes, which is fine at
-  * k=16 but makes the expression TREE grow with the corpus once
-  * nlist = max(16, n/target_occupancy): at ×64 (k=1024) that is 64k
-  * literal doubles and a megabyte of generated code. Here the matrix
-  * is a single reference object (`ctx.addReferenceObj`), so the
-  * generated code is k-INDEPENDENT — k is runtime data, not expression
-  * shape — and the per-row cost is the honest O(k·dim) fused
-  * multiply-add every IVF assignment pays.
+/** Cosine of a vector against every row of a plan-constant k×dim
+  * centroid matrix, the IVF/SemDeDup cell-assignment kernels under the
+  * k ∝ N rule (VERDICT r10 #1). The matrix is a field of the expression,
+  * which generated code reaches as one reference object, so the
+  * expression TREE and the generated code are k-INDEPENDENT (k is
+  * runtime data, not expression shape). The form this replaced, an
+  * `array()` of k per-centroid [[DotProduct]] nodes, grew with the
+  * corpus once nlist = max(16, n/target_occupancy): at ×64 (k=1024)
+  * that is 64k literal doubles and a megabyte of generated code. The
+  * per-row cost is the honest O(k·dim) fused multiply-add every IVF
+  * assignment pays.
   *
-  * Output: array<struct<c: double, nid: int>> with c = fold-dot / (nrm
-  * · cnorm(i)) and nid = −i, bit-identical to the per-centroid
-  * [[DotProduct]]/cosine form it replaces (same sequential left fold,
-  * same single division), so `array_max` keeps electing the same cell
-  * with ties toward the smallest centroid id and the DuckDB oracle
-  * replays it unchanged.
+  * Each cosine is fold-dot / (nrm · cnorm(c)), bit-identical to the
+  * per-centroid [[DotProduct]]/cosine form (same sequential left fold
+  * over the shorter length, same single division), so the DuckDB oracle
+  * replays it unchanged. The subclasses differ only in their output.
   */
-case class CentroidScores(emb: Expression, nrm: Expression,
-    cents: Array[Array[Double]], cnorms: Array[Double])
-    extends BinaryExpression {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+sealed abstract class CentroidKernel extends BinaryExpression {
+  def emb: Expression
+  def nrm: Expression
+  def cents: Array[Array[Double]]
+  def cnorms: Array[Double]
 
   override def left: Expression = emb
   override def right: Expression = nrm
-  override def prettyName: String = "graft_centroid_scores"
 
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("c", DoubleType, nullable = false),
-    StructField("nid", IntegerType, nullable = false))), containsNull = false)
-
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    val embOk = emb.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (embOk && nrm.dataType == DoubleType &&
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (isVector(emb) && nrm.dataType == DoubleType &&
         cents.length == cnorms.length && cents.nonEmpty)
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires (array<float|double>, double) and a " +
         s"non-empty centroid matrix with matching norms")
+
+  /** A scored cell: cosine `c` and `nid` = −(centroid id). */
+  protected final def cell: StructType = StructType(Seq(
+    StructField("c", DoubleType, nullable = false),
+    StructField("nid", IntegerType, nullable = false)))
+
+  @transient private lazy val embFloat = isFloat(emb)
+
+  /** cosine(row, centroid c) given the row's norm `n`. */
+  protected final def cosine(row: ArrayData, n: Double, c: Int): Double = {
+    val ce = cents(c)
+    val m = math.min(row.numElements(), ce.length)
+    val isF = embFloat
+    var acc = 0.0
+    var i = 0
+    while (i < m) {
+      val x = if (isF) row.getFloat(i).toDouble else row.getDouble(i)
+      acc += x * ce(i)
+      i += 1
+    }
+    acc / (n * cnorms(c))
   }
 
-  private def embFloat: Boolean =
-    emb.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  def compute(row: ArrayData, n: Double): AnyRef
 
-  override def nullSafeEval(a: Any, n: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    val nv = n.asInstanceOf[Double]
-    val isF = embFloat
+  override def nullSafeEval(a: Any, n: Any): Any =
+    compute(a.asInstanceOf[ArrayData], n.asInstanceOf[Double])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, n) => callCompute(ctx, ev, this, a, n))
+}
+
+/** All-centroid cosine scores: array<struct<c: double, nid: int>> with
+  * nid = −i, so `array_max` elects the same cell as the per-centroid
+  * form, ties toward the smallest centroid id. */
+case class CentroidScores(emb: Expression, nrm: Expression,
+    cents: Array[Array[Double]], cnorms: Array[Double])
+    extends CentroidKernel {
+  override def prettyName: String = "graft_centroid_scores"
+
+  override def dataType: DataType = ArrayType(cell, containsNull = false)
+
+  def compute(row: ArrayData, n: Double): GenericArrayData = {
     val out = new Array[Any](cents.length)
     var c = 0
     while (c < cents.length) {
-      val ce = cents(c)
-      val m = math.min(arr.numElements(), ce.length)
-      var acc = 0.0
-      var i = 0
-      while (i < m) {
-        val x = if (isF) arr.getFloat(i).toDouble else arr.getDouble(i)
-        acc += x * ce(i)
-        i += 1
-      }
-      out(c) = new GenericInternalRow(
-        Array[Any](acc / (nv * cnorms(c)), -c))
+      out(c) = new GenericInternalRow(Array[Any](cosine(row, n, c), -c))
       c += 1
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, n) => {
-      val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
-      val normsRef = ctx.addReferenceObj("cnorms", cnorms, "double[]")
-      val out = ctx.freshName("out")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val m = ctx.freshName("m")
-      val acc = ctx.freshName("acc")
-      val ce = ctx.freshName("ce")
-      val getX =
-        if (embFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      s"""
-         |Object[] $out = new Object[$centsRef.length];
-         |for (int $c = 0; $c < $centsRef.length; $c++) {
-         |  double[] $ce = $centsRef[$c];
-         |  int $m = java.lang.Math.min($a.numElements(), $ce.length);
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $m; $i++) {
-         |    $acc += $getX * $ce[$i];
-         |  }
-         |  $out[$c] = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |    new Object[]{java.lang.Double.valueOf($acc / ($n * $normsRef[$c])),
-         |                 java.lang.Integer.valueOf(-$c)});
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CentroidScores =
@@ -222,53 +182,17 @@ case class CentroidScores(emb: Expression, nrm: Expression,
   */
 case class BestCentroid(emb: Expression, nrm: Expression,
     cents: Array[Array[Double]], cnorms: Array[Double])
-    extends BinaryExpression {
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-
-  override def left: Expression = emb
-  override def right: Expression = nrm
+    extends CentroidKernel {
   override def prettyName: String = "graft_best_centroid"
 
-  override def dataType: DataType = StructType(Seq(
-    StructField("c", DoubleType, nullable = false),
-    StructField("nid", IntegerType, nullable = false)))
+  override def dataType: DataType = cell
 
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    val embOk = emb.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (embOk && nrm.dataType == DoubleType &&
-        cents.length == cnorms.length && cents.nonEmpty)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (array<float|double>, double) and a " +
-        s"non-empty centroid matrix with matching norms")
-  }
-
-  private def embFloat: Boolean =
-    emb.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def nullSafeEval(a: Any, n: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    val nv = n.asInstanceOf[Double]
-    val isF = embFloat
+  def compute(row: ArrayData, n: Double): InternalRow = {
     var bestC = Double.NegativeInfinity
     var bestI = 0
     var c = 0
     while (c < cents.length) {
-      val ce = cents(c)
-      val m = math.min(arr.numElements(), ce.length)
-      var acc = 0.0
-      var i = 0
-      while (i < m) {
-        val x = if (isF) arr.getFloat(i).toDouble else arr.getDouble(i)
-        acc += x * ce(i)
-        i += 1
-      }
-      val cos = acc / (nv * cnorms(c))
+      val cos = cosine(row, n, c)
       // Double.compare, not >: mirrors Spark's double ordering (NaN
       // greatest) so degenerate inputs match the array_max twin
       if (java.lang.Double.compare(cos, bestC) > 0) { bestC = cos; bestI = c }
@@ -276,39 +200,6 @@ case class BestCentroid(emb: Expression, nrm: Expression,
     }
     new GenericInternalRow(Array[Any](bestC, -bestI))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, n) => {
-      val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
-      val normsRef = ctx.addReferenceObj("cnorms", cnorms, "double[]")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val m = ctx.freshName("m")
-      val acc = ctx.freshName("acc")
-      val ce = ctx.freshName("ce")
-      val cos = ctx.freshName("cos")
-      val bestC = ctx.freshName("bestC")
-      val bestI = ctx.freshName("bestI")
-      val getX =
-        if (embFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      s"""
-         |double $bestC = java.lang.Double.NEGATIVE_INFINITY;
-         |int $bestI = 0;
-         |for (int $c = 0; $c < $centsRef.length; $c++) {
-         |  double[] $ce = $centsRef[$c];
-         |  int $m = java.lang.Math.min($a.numElements(), $ce.length);
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $m; $i++) {
-         |    $acc += $getX * $ce[$i];
-         |  }
-         |  double $cos = $acc / ($n * $normsRef[$c]);
-         |  if (java.lang.Double.compare($cos, $bestC) > 0) { $bestC = $cos; $bestI = $c; }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |  new Object[]{java.lang.Double.valueOf($bestC),
-         |               java.lang.Integer.valueOf(-$bestI)});
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BestCentroid =
@@ -326,7 +217,7 @@ case class BestCentroid(emb: Expression, nrm: Expression,
   * carries L·bits 64-double literals (65k doubles at L=128 — analyzer/
   * optimizer walls scale with plan size), and (c) each 64-float
   * embedding is re-read from ArrayData accessors L·bits times. Here the
-  * plane tensor is a single reference object (the [[CentroidScores]]
+  * plane tensor is a field of the expression (the [[CentroidKernel]]
   * device), the embedding converts to a primitive double[] ONCE per
   * row, and every (table, bit) dot runs over that — one scan, one
   * expression node, L-independent generated code.
@@ -353,8 +244,6 @@ case class BestCentroid(emb: Expression, nrm: Expression,
   */
 case class SignBuckets(emb: Expression, planes: Array[Array[Array[Double]]])
     extends UnaryExpression {
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
-  import org.apache.spark.unsafe.types.UTF8String
 
   override def child: Expression = emb
   override def prettyName: String = "graft_sign_buckets"
@@ -362,26 +251,15 @@ case class SignBuckets(emb: Expression, planes: Array[Array[Array[Double]]])
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
 
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    val embOk = emb.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (embOk && planes.nonEmpty && planes.forall(_.nonEmpty))
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (isVector(emb) && planes.nonEmpty && planes.forall(_.nonEmpty))
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires array<float|double> and a non-empty " +
         s"tables×bits×dim plane tensor")
-  }
 
-  private def embFloat: Boolean =
-    emb.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  @transient private lazy val embFloat = isFloat(emb)
 
-  /** The fused kernel, shared verbatim by eval and codegen (codegen
-    * calls it through a reference object — the loop is data-sized, so
-    * a generated-source copy would buy nothing over the JIT'd method). */
   def compute(arr: ArrayData): GenericArrayData = {
     val n = arr.numElements()
     val e = new Array[Double](n)
@@ -418,11 +296,7 @@ case class SignBuckets(emb: Expression, planes: Array[Array[Array[Double]]])
     compute(a.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val self = ctx.addReferenceObj("signBuckets", this,
-        classOf[SignBuckets].getName)
-      s"${ev.value} = $self.compute($a);"
-    })
+    nullSafeCodeGen(ctx, ev, a => callCompute(ctx, ev, this, a))
 
   override protected def withNewChildInternal(
       newChild: Expression): SignBuckets =

@@ -29,6 +29,11 @@ object LlmText {
   /** Whitespace-normalized, case-folded text. */
   private[graft] val NormText = "lower(trim(regexp_replace(text, '\\\\s+', ' ')))"
 
+  /** SQL for the number of equal positions of two MinHash signature
+    * columns: the agreement every LSH estimate and prefilter counts. */
+  private[graft] def sigAgreement(a: String, b: String): String =
+    s"aggregate(zip_with($a, $b, (x, y) -> IF(x = y, 1, 0)), 0, (acc, v) -> acc + v)"
+
   /** Per-document signature + LSH band hashes: 6 bands of 2 signature
     * rows each — P(candidate) = 1-(1-j²)⁶, ≈1 for j≥0.7 planted dups,
     * ≈1.5% for unrelated documents.
@@ -114,8 +119,7 @@ object LlmText {
   private def dedupMinhash(spark: SparkSession, sfDir: String): DataFrame =
     candidates(spark, sfDir)
       .selectExpr("doc_a", "doc_b",
-        """aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)),
-                     0, (acc, v) -> acc + v) / cast(12 as double) AS est_jaccard""")
+        s"${sigAgreement("sig_a", "sig_b")} / cast(12 as double) AS est_jaccard")
       .orderBy("doc_a", "doc_b")
 
   // ---------------------------------------------------------------------
@@ -130,9 +134,7 @@ object LlmText {
       // filter-then-verify shape. est ≥ 0.25 keeps a true j ≥ 0.5 pair
       // with overwhelming probability (12 Bernoulli(j) trials); the
       // oracle applies the identical filter, so parity is unaffected.
-      .where(expr(
-        """aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)),
-                     0, (acc, v) -> acc + v)""") >= 3)
+      .where(expr(sigAgreement("sig_a", "sig_b")) >= 3)
       // intersect computed ONCE through a named projection (the
       // llm_setsim_join fix class, measured there 5.4 → 3.1 s: codegen
       // CSE does NOT collapse a duplicated array_intersect), via the
@@ -3433,8 +3435,7 @@ object LlmText {
       }
       candidatesFrom(s)
         .selectExpr("doc_a", "doc_b",
-          """aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)),
-                       0, (acc, v) -> acc + v) AS n_agree""")
+          s"${sigAgreement("sig_a", "sig_b")} AS n_agree")
         .write.mode("overwrite").parquet(d)
     }
     (truth, predn)
@@ -3819,9 +3820,7 @@ object LlmText {
           Seq("doc_a"))
         .join(s.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")),
           Seq("doc_b"))
-        .selectExpr(
-          """aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)),
-               0, (acc, v) -> acc + v) AS n_eq""")
+        .selectExpr(s"${sigAgreement("sig_a", "sig_b")} AS n_eq")
         .agg(count(lit(1)).as("nc"),
           sum(when(col("n_eq") >= 6, 1L).otherwise(0L)).as("ng"))
         .selectExpr(s"$b AS n_bands", s"$r AS rows_per_band",

@@ -416,16 +416,15 @@ object LlmVector {
       .limit(LshQuerySample)
       .select("vec_id")
 
-  private def annLshTune(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val maxL = LshTuneTableCounts.max
-    val e = emb(spark, sfDir)
-    // one scan+join materializes the Q sampled rows (vec_id, embedding,
-    // nrm) — localCheckpoint is the barrier that keeps every downstream
-    // branch (truth broadcast, per-table query hashing) reading a
-    // Q-row cached block instead of re-running the sample subtree per
-    // union branch (measured: the un-checkpointed form re-ran the
-    // TakeOrdered+md5 corpus scan once PER TABLE)
+  /** The LSH audits' query side over the corpus `e`: the sampled rows
+    * (vec_id, embedding, nrm) and each one's exact top-10 by cosine as
+    * (q_id, vec_id, hit = 1). One scan+join materializes the Q sampled
+    * rows; localCheckpoint is the barrier that keeps every downstream
+    * branch (truth broadcast, per-table query hashing) reading a Q-row
+    * cached block instead of re-running the sample subtree per union
+    * branch (measured: the un-checkpointed form re-ran the
+    * TakeOrdered+md5 corpus scan once PER TABLE). */
+  private def sampleTruth(e: DataFrame): (DataFrame, DataFrame) = {
     val qe = e.join(broadcast(querySampleIds(e)), Seq("vec_id"))
       .localCheckpoint(true)
     val q = qe.select(col("vec_id").as("q_id"), col("embedding").as("qe"),
@@ -438,6 +437,13 @@ object LlmVector {
             .as("cosine")),
       Seq("q_id"), Seq(("cosine", false), ("vec_id", true)), k = 10)
       .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
+    (qe, truth)
+  }
+
+  private def annLshTune(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    val maxL = LshTuneTableCounts.max
+    val (qe, truth) = sampleTruth(emb(spark, sfDir))
     val long = lshBucketLong(spark, sfDir, maxL)
     // broadcast id-filter on the corpus union — the annLshGrid note:
     // re-hashing only the Q rows through their own per-table union
@@ -654,22 +660,7 @@ object LlmVector {
     val bitsFull = lshBits(spark, sfDir)
     val bitLevels = bitDeltas.map(d => math.max(2, bitsFull - d)).distinct
     val minBits = bitLevels.min
-    val e = emb(spark, sfDir)
-    // the annLshTune convention: materialize the Q sampled rows once
-    // (localCheckpoint barrier) so no downstream branch re-runs the
-    // sample subtree
-    val qe = e.join(broadcast(querySampleIds(e)), Seq("vec_id"))
-      .localCheckpoint(true)
-    val q = qe.select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-      col("nrm").as("qn"))
-    val truth = graft.plans.GraftOps.topKPerGroup(
-      e.crossJoin(broadcast(q))
-        .where(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"),
-          cosine(col("embedding"), col("qe"), col("nrm"), col("qn"))
-            .as("cosine")),
-      Seq("q_id"), Seq(("cosine", false), ("vec_id", true)), k = 10)
-      .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
+    val (qe, truth) = sampleTruth(emb(spark, sfDir))
     val long = lshBucketLong(spark, sfDir, maxL)
     // query-side bucket rows come from a broadcast id-filter on the
     // SAME union the corpus side builds. The alternative — hashing

@@ -1298,8 +1298,8 @@ object StreamingQ {
   // ---------------------------------------------------------------------
   // stream_dedup_minhash — STREAMING near-duplicate detection: documents
   // arrive in micro-batches, each computes its MinHash signature and LSH
-  // band hashes map-side (the same 12-hash/6-band pipeline as the batch
-  // operators), and per (band, bucket) a flatMapGroupsWithState group
+  // band hashes map-side (LlmText.signedOn, the batch 12-hash/6-band
+  // pipeline), and per (band, bucket) a flatMapGroupsWithState group
   // holds the signatures seen so far. A new arrival compares against its
   // bucket's state only — the streaming equivalent of the batch band
   // equi-join — so per-batch work is O(new docs × bucket occupancy),
@@ -1331,20 +1331,8 @@ object StreamingQ {
     val src = spark.readStream.schema(graft.Tables.schemas("documents"))
       .option("maxFilesPerTrigger", 1)
       .parquet(srcDir)
-    val banded = src
-      .selectExpr("doc_id", "text", "split(text, ' ') AS toks")
-      .selectExpr("doc_id",
-        """CASE WHEN size(toks) >= 3 THEN
-             array_distinct(transform(sequence(1, size(toks) - 2),
-               i -> concat_ws(' ', element_at(toks, i),
-                    element_at(toks, i + 1), element_at(toks, i + 2))))
-           ELSE array(text) END AS sh""")
-      .select(col("doc_id"),
-        graft.functions.TextOps.minhashSig(col("sh"), 12).as("sig"))
-      .selectExpr("doc_id", "sig",
-        """posexplode(transform(sequence(0, 5),
-             b -> md5(concat_ws('|', slice(sig, b * 2 + 1, 2)))))
-           AS (band_idx, band_hash)""")
+    val banded = graft.queries.LlmText.signedOn(src)
+      .selectExpr("doc_id", "sig", "posexplode(bands) AS (band_idx, band_hash)")
       .selectExpr("concat(band_idx, '|', band_hash) AS bucket",
         "doc_id", "sig")
       .as[(String, Long, Seq[String])]
@@ -1460,9 +1448,7 @@ object StreamingQ {
           "sig AS sig_e"), Seq("ex_doc"))
         // identical filter-then-verify as dedupNgramJaccard: 12-way
         // signature agreement >= 3, then exact 3-gram Jaccard >= 0.5
-        .where(expr(
-          """aggregate(zip_with(sig_i, sig_e, (x, y) -> IF(x = y, 1, 0)),
-                       0, (acc, v) -> acc + v)""") >= 3)
+        .where(expr(graft.queries.LlmText.sigAgreement("sig_i", "sig_e")) >= 3)
         // exact integer form of J ≥ ½ (3i ≥ a+b): ONE count-only
         // IntersectSize per pair, where a ratio predicate evaluates
         // array_intersect twice (codegen CSE does not collapse the

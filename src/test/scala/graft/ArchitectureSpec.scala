@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps each cross-cutting decision in one module: no main-source file
   * other than etl/Fixtures.scala may declare a session-keyed cache or
   * create temp dirs itself, none other than Session.scala may build a
-  * session, and no streaming query is run outside
-  * StreamingQ.runAvailableNow. */
+  * session, no streaming query is run outside
+  * StreamingQ.runAvailableNow, and every kernel's generated code calls
+  * its Scala loop through Kernel.callCompute. */
 class ArchitectureSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -63,5 +64,31 @@ class ArchitectureSpec extends AnyFunSuite {
       Seq(raw"SparkSession\s*\.\s*builder".r))
     assert(found.isEmpty,
       s"session built outside graft.Session: ${found.mkString("; ")}")
+  }
+
+  test("every doGenCode in graft.functions is one Kernel.callCompute") {
+    // the whole method, from `def` to the next blank line or the end of
+    // its class, must be the one-line call: a hand-written Java copy of
+    // a kernel cannot return
+    val oneCall = (raw"def doGenCode\([^)]*\)\s*:\s*ExprCode\s*=\s*" +
+      raw"nullSafeCodeGen\(ctx,\s*ev,\s*\(?[\w,\s]*\)?\s*=>\s*" +
+      raw"(Kernel\.)?callCompute\(ctx,\s*ev,\s*this(,\s*\w+)*\)\)").r
+    val walk = Files.walk(root.resolve("graft/functions"))
+    val bodies = try walk.iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = Files.readString(p)
+        raw"def doGenCode\(".r.findAllMatchIn(src).map { m =>
+          val end = Seq(src.indexOf("\n\n", m.start),
+            src.indexOf("\n}", m.start), src.length).filter(_ >= 0).min
+          (s"$p:${src.take(m.start).count(_ == '\n') + 1}",
+            src.substring(m.start, end).trim)
+        }
+      }.toList
+    finally walk.close()
+    assert(bodies.nonEmpty)
+    val off = bodies.filterNot { case (_, body) => oneCall.matches(body) }
+    assert(off.isEmpty, s"${off.length} of ${bodies.length} doGenCode " +
+      s"bodies do not call Kernel.callCompute: ${off.map(_._1).mkString("; ")}")
   }
 }

@@ -348,20 +348,63 @@ class ExtensionsSpec extends AnyFunSuite {
       .groupBy("nid").count().collect().map(r => r.getInt(0)).toSet
     assert(!cells.contains(-3),
       "a tie with an identical earlier centroid must never elect id 3")
-    // codegen and interpreted paths agree (the eval path is what a
-    // CodegenFallback-wrapping operator would run)
-    val interp = {
-      val prev = spark.conf.get("spark.sql.codegen.wholeStage")
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      try nativeBest.collect().map(r => (r.getLong(0), r.getStruct(1).getInt(1)))
-      finally {
-        spark.conf.set("spark.sql.codegen.wholeStage", prev)
-        spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    // codegen and interpreted paths agree for every kernel that
+    // generates code (the eval path is what a CodegenFallback-wrapping
+    // operator would run). Fallback is off on the codegen side, so
+    // generated Java that fails to compile fails here instead of
+    // silently running eval. The float and double element branches
+    // both run: `ed` is the embedding cast to array<double>.
+    def withConfs[T](kv: (String, String)*)(body: => T): T = {
+      val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
       }
     }
-    val gen = nativeBest.collect().map(r => (r.getLong(0), r.getStruct(1).getInt(1)))
-    assert(interp.sorted.toSeq === gen.sorted.toSeq)
+    import graft.functions.{TextOps, VectorOps}
+    val planes = Array.tabulate(3, 5, 64)((t, p, d) =>
+      math.sin(t * 31.0 + p * 7.0 + d))
+    def vecKernels() = e.withColumn("ed", col("embedding").cast("array<double>"))
+      .select(col("vec_id"),
+        VectorOps.dot(col("embedding"), col("embedding")).as("dot_ff"),
+        VectorOps.dot(col("embedding"), col("ed")).as("dot_fd"),
+        VectorOps.cosine(col("ed"), col("ed"), col("nrm"), col("nrm"))
+          .as("cos_dd"),
+        VectorOps.centroidScores(col("embedding"), col("nrm"), cents, norms)
+          .as("scores_f"),
+        VectorOps.centroidScores(col("ed"), col("nrm"), cents, norms)
+          .as("scores_d"),
+        VectorOps.bestCentroid(col("embedding"), col("nrm"), cents, norms)
+          .as("best_f"),
+        VectorOps.bestCentroid(col("ed"), col("nrm"), cents, norms)
+          .as("best_d"),
+        VectorOps.signBuckets(col("embedding"), planes).as("sb_f"),
+        VectorOps.signBuckets(col("ed"), planes).as("sb_d"))
+    def textKernels() = graft.Tables.t(spark,
+        s"${sys.props("user.home")}/testdata/sf0.001", "documents")
+      .select(col("doc_id"), TextOps.unicodeNorm(col("text")).as("nfc"),
+        TextOps.unicodeNorm(col("text"), "NFD").as("nfd"))
+    // a Dataset keeps the physical plan of its first action, so each
+    // mode plans its own DataFrame
+    for ((kernels, calls) <- Seq((vecKernels _, 9), (textKernels _, 2))) {
+      val interp = withConfs("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+        kernels().collect().toSeq
+      }
+      val (gen, source) = withConfs("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.fallback" -> "false",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY") {
+        val df = kernels()
+        (df.collect().toSeq,
+          df.queryExecution.debug.codegenToSeq().map(_._2).mkString("\n"))
+      }
+      assert(interp.nonEmpty)
+      assert(gen.sortBy(_.getLong(0)) === interp.sortBy(_.getLong(0)))
+      // each kernel column runs inside whole-stage codegen, through its
+      // own compute method
+      assert(raw"\.compute\(".r.findAllIn(source).size === calls, source)
+    }
 
     // NaN parity (ADVICE r11): a zero centroid with zero cnorm makes
     // that centroid's cosine 0/0 = NaN; Spark's double ordering treats
