@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Repartition, RepartitionOperation}
 import org.apache.spark.sql.catalyst.rules.Rule

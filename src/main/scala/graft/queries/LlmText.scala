@@ -79,6 +79,35 @@ object LlmText {
   private def candidates(spark: SparkSession, sfDir: String): DataFrame =
     candidatesFrom(signed(spark, sfDir))
 
+  /** Distinct id pairs (a < b) of the `rows` that share a bucket:
+    * `rows` is (id, bucket keys…), and the self-join on every key
+    * column moves ids and keys only. The one candidate join of every
+    * LSH family here and in [[LlmVector]]. */
+  private[graft] def bucketPairs(rows: DataFrame, id: String, a: String,
+                                 b: String): DataFrame = {
+    val keys = rows.columns.toSeq.filterNot(_ == id)
+    def side(n: String) = rows.select(col(id).as(n) +: keys.map(col): _*)
+    side(a).join(side(b), keys).where(col(a) < col(b))
+      .select(a, b).distinct()
+  }
+
+  /** Each `a`–`b` pair as two directed (src, dst) edges. */
+  private[graft] def undirected(pairs: DataFrame, a: String,
+                                b: String): DataFrame =
+    pairs.select(col(a).as("src"), col(b).as("dst"))
+      .unionByName(pairs.select(col(b).as("src"), col(a).as("dst")))
+
+  /** (doc_id, gram): each document's distinct word 3-grams, one row
+    * each; a document under 3 words has none. */
+  private def docGrams3(spark: SparkSession, sfDir: String): DataFrame =
+    t(spark, sfDir, "documents")
+      .selectExpr("doc_id", "split(text, ' ') AS toks")
+      .where(size(col("toks")) >= 3)
+      .selectExpr("doc_id",
+        """explode(array_distinct(transform(sequence(1, size(toks) - 2),
+             i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1),
+                  element_at(toks, i + 2))))) AS gram""")
+
   private def candidatesFrom(s: DataFrame): DataFrame = {
     // Join + distinct on bare (doc_a, doc_b) ids — the band join and
     // the dedup exchange move O(pairs) tiny rows, not the full shingle
@@ -86,15 +115,7 @@ object LlmText {
     // signature table.
     val exploded = s.select(col("doc_id"),
       posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
-    val a = exploded.select(col("doc_id").as("doc_a"),
-      col("band_idx"), col("band_hash"))
-    val b = exploded.select(col("doc_id").as("doc_b"),
-      col("band_idx"), col("band_hash"))
-    val pairs = a.join(b, Seq("band_idx", "band_hash"))
-      .where(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .distinct()
-    pairs
+    bucketPairs(exploded, "doc_id", "doc_a", "doc_b")
       .join(s.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"),
         col("sig").as("sig_a")), Seq("doc_a"))
       .join(s.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"),
@@ -225,14 +246,7 @@ object LlmText {
   private def simhashPairsFrom(fp: DataFrame): DataFrame = {
     val banded = fp.selectExpr("doc_id",
       "posexplode(bands) AS (band_idx, band_val)")
-    val a = banded.select(col("doc_id").as("doc_a"), col("band_idx"),
-      col("band_val"))
-    val b = banded.select(col("doc_id").as("doc_b"), col("band_idx"),
-      col("band_val"))
-    a.join(b, Seq("band_idx", "band_val"))
-      .where(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .distinct()
+    bucketPairs(banded, "doc_id", "doc_a", "doc_b")
       .join(fp.select(col("doc_id").as("doc_a"),
         col("bands").as("ba")), Seq("doc_a"))
       .join(fp.select(col("doc_id").as("doc_b"),
@@ -326,10 +340,7 @@ object LlmText {
   // the oracle replayable as unrolled CTEs.
   // ---------------------------------------------------------------------
   private def pageRank(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = verifiedPairs(spark, sfDir).select("doc_a", "doc_b")
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"),
-        col("doc_a").as("dst")))
+    val edges = undirected(verifiedPairs(spark, sfDir), "doc_a", "doc_b")
       .persist()
     // Pre-join each edge with its source's out-degree ONCE — the
     // weighted adjacency list every iterative graph job persists — so
@@ -381,10 +392,7 @@ object LlmText {
   // spine with no keep-old-label fallback.
   // ---------------------------------------------------------------------
   private def labelPropagation(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = verifiedPairs(spark, sfDir).select("doc_a", "doc_b")
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"),
-        col("doc_a").as("dst")))
+    val edges = undirected(verifiedPairs(spark, sfDir), "doc_a", "doc_b")
       .localCheckpoint(true)
     var lbl = edges.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
@@ -475,13 +483,7 @@ object LlmText {
   // the end.
   // ---------------------------------------------------------------------
   private def ngramNovelty(spark: SparkSession, sfDir: String): DataFrame = {
-    val grams = t(spark, sfDir, "documents")
-      .selectExpr("doc_id", "split(text, ' ') AS toks")
-      .where(size(col("toks")) >= 3)
-      .selectExpr("doc_id",
-        """explode(array_distinct(transform(sequence(1, size(toks) - 2),
-             i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1),
-                  element_at(toks, i + 2))))) AS gram""")
+    val grams = docGrams3(spark, sfDir)
     val first = grams.groupBy("gram").agg(min(col("doc_id")).as("first_doc"))
     val per = grams.join(first, Seq("gram"))
       .groupBy("doc_id")
@@ -1811,13 +1813,7 @@ object LlmText {
   // and broadcasts.
   // ---------------------------------------------------------------------
   private def decontaminate(spark: SparkSession, sfDir: String): DataFrame = {
-    val sh5 = t(spark, sfDir, "documents")
-      .selectExpr("doc_id", "split(text, ' ') AS toks")
-      .where(size(col("toks")) >= 3)
-      .selectExpr("doc_id",
-        """explode(array_distinct(transform(sequence(1, size(toks) - 2),
-             i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1),
-                  element_at(toks, i + 2))))) AS gram""")
+    val sh5 = docGrams3(spark, sfDir)
     val bench = sh5.where(col("doc_id") % 100 === 0)
       .select(col("doc_id").as("bench_id"), col("gram"))
     val train = sh5.where(col("doc_id") % 100 =!= 0)
@@ -2089,10 +2085,7 @@ object LlmText {
   private[graft] def dedupClusters(spark: SparkSession, sfDir: String): DataFrame =
     graft.etl.Fixtures.persisted(spark, sfDir, "dedup_clusters") {
       val docs = t(spark, sfDir, "documents").select(col("doc_id"))
-      val pairs = verifiedPairs(spark, sfDir).select("doc_a", "doc_b")
-      val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .unionByName(pairs.select(col("doc_b").as("src"),
-          col("doc_a").as("dst")))
+      val edges = undirected(verifiedPairs(spark, sfDir), "doc_a", "doc_b")
         .persist()
       val labels0 = docs.select(col("doc_id"), col("doc_id").as("lbl"))
       val converged = labelFixpoint(labels0, edges)
@@ -2665,13 +2658,7 @@ object LlmText {
   // bit test, no UDF, fully codegen'd.
   // ---------------------------------------------------------------------
   private def decontaminateBloom(spark: SparkSession, sfDir: String): DataFrame = {
-    val sh = t(spark, sfDir, "documents")
-      .selectExpr("doc_id", "split(text, ' ') AS toks")
-      .where(size(col("toks")) >= 3)
-      .selectExpr("doc_id",
-        """explode(array_distinct(transform(sequence(1, size(toks) - 2),
-             i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1),
-                  element_at(toks, i + 2))))) AS gram""")
+    val sh = docGrams3(spark, sfDir)
     val bench = sh.where(col("doc_id") % 100 === 0)
       .select(col("doc_id").as("bench_id"), col("gram"))
     val bitmap = bench
@@ -2909,13 +2896,7 @@ object LlmText {
   // re-aggregation — O(shingles) map-side work, one doc-keyed shuffle.
   // ---------------------------------------------------------------------
   private def contaminationOverlap(spark: SparkSession, sfDir: String): DataFrame = {
-    val grams = t(spark, sfDir, "documents")
-      .selectExpr("doc_id", "split(text, ' ') AS toks")
-      .where(size(col("toks")) >= 3)
-      .selectExpr("doc_id",
-        """explode(array_distinct(transform(sequence(1, size(toks) - 2),
-             i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1),
-                  element_at(toks, i + 2))))) AS gram""")
+    val grams = docGrams3(spark, sfDir)
     val bench = grams.where(col("doc_id") % 100 === 0)
       .select("gram").distinct()
       .withColumn("in_bench", lit(1))
@@ -3809,13 +3790,7 @@ object LlmText {
         s"""posexplode(transform(sequence(0, ${b - 1}),
               i -> md5(concat_ws('|', slice(sig, i * $r + 1, $r)))))
             AS (band_idx, band_hash)""")
-      val a = banded.select(col("doc_id").as("doc_a"), col("band_idx"),
-        col("band_hash"))
-      val bb = banded.select(col("doc_id").as("doc_b"), col("band_idx"),
-        col("band_hash"))
-      a.join(bb, Seq("band_idx", "band_hash"))
-        .where(col("doc_a") < col("doc_b"))
-        .select("doc_a", "doc_b").distinct()
+      bucketPairs(banded, "doc_id", "doc_a", "doc_b")
         .join(s.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")),
           Seq("doc_a"))
         .join(s.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")),
@@ -3868,10 +3843,7 @@ object LlmText {
   // radius rarely exceeds the component).
   // ---------------------------------------------------------------------
   private def contaminationReach(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = verifiedPairs(spark, sfDir).select("doc_a", "doc_b")
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"),
-        col("doc_a").as("dst")))
+    val edges = undirected(verifiedPairs(spark, sfDir), "doc_a", "doc_b")
       .localCheckpoint(true)
     var reached = t(spark, sfDir, "documents")
       .where(col("doc_id") % 100 === 0)
@@ -3918,10 +3890,7 @@ object LlmText {
   // ---------------------------------------------------------------------
   private def contaminationDirection(spark: SparkSession,
                                      sfDir: String): DataFrame = {
-    val pairs = verifiedPairs(spark, sfDir).select("doc_a", "doc_b")
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"),
-        col("doc_a").as("dst")))
+    val edges = undirected(verifiedPairs(spark, sfDir), "doc_a", "doc_b")
       .localCheckpoint(true)
     val docs = t(spark, sfDir, "documents")
     val T = 1000000000000L // depth stride: c = depth*T + seed

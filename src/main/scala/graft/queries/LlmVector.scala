@@ -15,7 +15,8 @@ import graft.Tables.t
   * plumbing.
   *
   * Numeric determinism: every dot product is a *sequential left fold*
-  * in double precision (`aggregate(zip_with(...))`), which fixes the
+  * in double precision (the [[graft.functions.DotProduct]] kernel, the
+  * fold of `aggregate(zip_with(...))`), which fixes the
   * floating-point summation order — the same fold in DuckDB
   * (`list_reduce`) produces bit-identical doubles, so cosine scores are
   * oracle-comparable with no tolerance. A parallel SUM over exploded
@@ -47,19 +48,41 @@ object LlmVector {
       .select(col("vec_id"), col("label"), col("embedding"),
         l2norm(col("embedding")).as("nrm"))
 
+  /** The query row: vector `id`'s embedding and norm as (qe, qn). */
+  private def query(e: DataFrame, id: Long): DataFrame =
+    e.where(col("vec_id") === id)
+      .select(col("embedding").as("qe"), col("nrm").as("qn"))
+
+  /** A row's cosine to the query row beside it. */
+  private def qCosine: Column =
+    cosine(col("embedding"), col("qe"), col("nrm"), col("qn"))
+
+  /** The exact scan: every vector but `id` with its cosine to vector
+    * `id`, scored map-side against the broadcast query row; `keep` are
+    * the columns kept before `cosine`. */
+  private def scoredAgainst(e: DataFrame, id: Long,
+                            keep: String*): DataFrame =
+    e.where(col("vec_id") =!= id)
+      .crossJoin(broadcast(query(e, id)))
+      .select(keep.map(col) :+ qCosine.as("cosine"): _*)
+
+  /** One side of a vector pair: (vec_<s>, e<s>, n<s>). */
+  private def side(e: DataFrame, s: String): DataFrame =
+    e.select(col("vec_id").as(s"vec_$s"), col("embedding").as(s"e$s"),
+      col("nrm").as(s"n$s"))
+
+  /** The cosine of a pair joined with its two [[side]]s. */
+  private def pairCosine: Column =
+    cosine(col("ea"), col("eb"), col("na"), col("nb"))
+
   // ---------------------------------------------------------------------
   // llm_cosine_pair — cosine between consecutive vectors (vec_id,
   // vec_id+1): the minimal pairwise-similarity plan.
   // ---------------------------------------------------------------------
   private def cosinePair(spark: SparkSession, sfDir: String): DataFrame = {
     val e = emb(spark, sfDir)
-    val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
-      col("nrm").as("na"))
-    val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
-      col("nrm").as("nb"))
-    a.join(b, col("vec_b") === col("vec_a") + 1)
-      .select(col("vec_a"), col("vec_b"),
-        cosine(col("ea"), col("eb"), col("na"), col("nb")).as("cosine"))
+    side(e, "a").join(side(e, "b"), col("vec_b") === col("vec_a") + 1)
+      .select(col("vec_a"), col("vec_b"), pairCosine.as("cosine"))
       .orderBy("vec_a")
   }
 
@@ -69,17 +92,10 @@ object LlmVector {
   // vector map-side, TakeOrderedAndProject keeps only k rows per
   // partition — the corpus itself never shuffles.
   // ---------------------------------------------------------------------
-  private def topkSimilarity(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = emb(spark, sfDir)
-    val q = e.where(col("vec_id") === 0)
-      .select(col("embedding").as("qe"), col("nrm").as("qn"))
-    e.where(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("label"),
-        cosine(col("embedding"), col("qe"), col("nrm"), col("qn")).as("cosine"))
+  private def topkSimilarity(spark: SparkSession, sfDir: String): DataFrame =
+    scoredAgainst(emb(spark, sfDir), 0, "vec_id", "label")
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(20)
-  }
 
   // ---------------------------------------------------------------------
   // llm_embed_neardup — exact all-pairs cosine ≥ 0.4. This is the
@@ -89,13 +105,8 @@ object LlmVector {
   // ---------------------------------------------------------------------
   private def embedNeardup(spark: SparkSession, sfDir: String): DataFrame = {
     val e = emb(spark, sfDir)
-    val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
-      col("nrm").as("na"))
-    val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
-      col("nrm").as("nb"))
-    a.join(b, col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        cosine(col("ea"), col("eb"), col("na"), col("nb")).as("cosine"))
+    side(e, "a").join(side(e, "b"), col("vec_a") < col("vec_b"))
+      .select(col("vec_a"), col("vec_b"), pairCosine.as("cosine"))
       .where(col("cosine") >= 0.4)
       .orderBy("vec_a", "vec_b")
   }
@@ -275,23 +286,21 @@ object LlmVector {
       ids.select(col("vec_id"), lit(true).as("is_kept"),
         lit(null).cast("bigint").as("dup_of"))
     else {
+      // vec_b is the arrival, vec_a the already-indexed vector
       val prior = readRuns(spark, priorDirs)
-        .select(col("vec_id").as("ex_id"), col("tbl"), col("bucket"))
-      val cand = rows.join(prior, Seq("tbl", "bucket"))
+        .select(col("vec_id").as("vec_a"), col("tbl"), col("bucket"))
+      val cand = rows.withColumnRenamed("vec_id", "vec_b")
+        .join(prior, Seq("tbl", "bucket"))
         // a re-delivered id that already exists in the prior chain
         // must not self-match at cosine 1.0 (r14 ADVICE: the even/odd
         // and many-part stagings keep batches disjoint, but the
         // invariant belongs here, not in the staging)
-        .where(col("vec_id") =!= col("ex_id"))
-        .select(col("vec_id"), col("ex_id")).distinct()
+        .where(col("vec_b") =!= col("vec_a"))
+        .select("vec_b", "vec_a").distinct()
       val e = emb(spark, sfDir)
-      val scored = cand
-        .join(e.select(col("vec_id"), col("embedding").as("eb"),
-          col("nrm").as("nb")), Seq("vec_id"))
-        .join(e.select(col("vec_id").as("ex_id"), col("embedding").as("ea"),
-          col("nrm").as("na")), Seq("ex_id"))
-        .where(cosine(col("ea"), col("eb"), col("na"), col("nb")) >= 0.4)
-        .groupBy("vec_id").agg(min(col("ex_id")).as("dup_of"))
+      val scored = cand.join(side(e, "b"), "vec_b").join(side(e, "a"), "vec_a")
+        .where(pairCosine >= 0.4)
+        .groupBy(col("vec_b").as("vec_id")).agg(min(col("vec_a")).as("dup_of"))
       ids.join(scored, Seq("vec_id"), "left_outer")
         .select(col("vec_id"), col("dup_of").isNull.as("is_kept"),
           col("dup_of"))
@@ -319,19 +328,9 @@ object LlmVector {
   private def lshScoredCandidatesOf(spark: SparkSession, sfDir: String,
       long: DataFrame): DataFrame = {
     val e = emb(spark, sfDir)
-    val a = long.select(col("vec_id").as("vec_a"), col("tbl"), col("bucket"))
-    val b = long.select(col("vec_id").as("vec_b"), col("tbl"), col("bucket"))
-    val cand = a.join(b, Seq("tbl", "bucket"))
-      .where(col("vec_a") < col("vec_b"))
-      .select("vec_a", "vec_b")
-      .distinct()
-    val ea = e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
-      col("nrm").as("na"))
-    val eb = e.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
-      col("nrm").as("nb"))
-    cand.join(ea, "vec_a").join(eb, "vec_b")
-      .select(col("vec_a"), col("vec_b"),
-        cosine(col("ea"), col("eb"), col("na"), col("nb")).as("cosine"))
+    LlmText.bucketPairs(long, "vec_id", "vec_a", "vec_b")
+      .join(side(e, "a"), "vec_a").join(side(e, "b"), "vec_b")
+      .select(col("vec_a"), col("vec_b"), pairCosine.as("cosine"))
   }
 
   private def annLsh(spark: SparkSession, sfDir: String): DataFrame =
@@ -432,9 +431,7 @@ object LlmVector {
     val truth = graft.plans.GraftOps.topKPerGroup(
       e.crossJoin(broadcast(q))
         .where(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"),
-          cosine(col("embedding"), col("qe"), col("nrm"), col("qn"))
-            .as("cosine")),
+        .select(col("q_id"), col("vec_id"), qCosine.as("cosine")),
       Seq("q_id"), Seq(("cosine", false), ("vec_id", true)), k = 10)
       .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
     (qe, truth)
@@ -839,10 +836,7 @@ object LlmVector {
                                    sfDir: String): DataFrame = {
     val ids = t(spark, sfDir, "embeddings")
       .select(col("vec_id").as("doc_id"))
-    val pairs = embedPairs(spark, sfDir).select("vec_a", "vec_b")
-    val edges = pairs.select(col("vec_a").as("src"), col("vec_b").as("dst"))
-      .unionByName(pairs.select(col("vec_b").as("src"),
-        col("vec_a").as("dst")))
+    val edges = LlmText.undirected(embedPairs(spark, sfDir), "vec_a", "vec_b")
       .persist()
     val converged = LlmText.labelFixpoint(
       ids.select(col("doc_id"), col("doc_id").as("lbl")), edges)
@@ -924,8 +918,7 @@ object LlmVector {
     val k = ivfK(spark, sfDir)
     val e = widenForAssign(spark, emb(spark, sfDir), k)
     val assigned = e
-      .withColumn("best",
-        bestCent(col("embedding"), col("nrm"), k))
+      .withColumn("best", Cents.parity(k).best(col("embedding"), col("nrm")))
       .select(col("vec_id"), (-col("best.nid")).cast("int").as("cell"),
         col("best.c").as("centrality"))
     val a = assigned.select(col("vec_id").as("vec_a"), col("cell"),
@@ -936,12 +929,8 @@ object LlmVector {
       .where(col("cent_a") > col("cent_b") ||
         (col("cent_a") === col("cent_b") && col("vec_a") < col("vec_b")))
       .select("vec_a", "vec_b")
-    val ea = e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
-      col("nrm").as("na"))
-    val eb = e.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
-      col("nrm").as("nb"))
-    val dropped = cand.join(ea, "vec_a").join(eb, "vec_b")
-      .where(cosine(col("ea"), col("eb"), col("na"), col("nb")) >= SemTau)
+    val dropped = cand.join(side(e, "a"), "vec_a").join(side(e, "b"), "vec_b")
+      .where(pairCosine >= SemTau)
       .select(col("vec_b").as("vec_id")).distinct()
       .withColumn("hit", lit(true))
     assigned.select("vec_id", "cell")
@@ -985,34 +974,50 @@ object LlmVector {
   private def centSign(c: Int, d: Int): Double =
     OracleFmt.mdParitySign(s"c_${c}_$d")
 
-  /** Parity-centroid matrix for a given k — memoized so every plan
-    * using the same k shares ONE Array instance (CentroidScores
-    * compares reference-equal matrices for subexpression reuse). */
-  private val parityCentsCache =
-    scala.collection.concurrent.TrieMap.empty[Int, Array[Array[Double]]]
-  private def parityCents(k: Int): Array[Array[Double]] =
-    parityCentsCache.getOrElseUpdate(k,
-      Array.tabulate(k)(c => Array.tabulate(64)(d => centSign(c, d))))
+  /** One IVF centroid set: the k×64 matrix `m` and its norms. Every
+    * IVF key reads its cells through these three calls, so the in-plan
+    * kernels and the driver-side probe cannot pick different cells. */
+  private[graft] final class Cents(val m: Array[Array[Double]],
+                                   val norms: Array[Double]) {
+    def k: Int = m.length
 
-  /** array of struct(ccos, -cent_id): array_max picks max cosine, ties
-    * broken toward the SMALLEST centroid id (nid is negated). One
-    * codegen loop over the k×64 matrix ([[graft.functions.CentroidScores]])
-    * — generated code is k-independent, so the k ∝ N rule never grows
-    * the expression tree. */
-  private val parityNormsCache =
-    scala.collection.concurrent.TrieMap.empty[Int, Array[Double]]
-  private def parityNorms(k: Int): Array[Double] =
-    parityNormsCache.getOrElseUpdate(k, Array.fill(k)(8.0))
-  private def centScores(embCol: Column, nrmCol: Column, k: Int): Column =
-    graft.functions.VectorOps.centroidScores(embCol, nrmCol,
-      parityCents(k), parityNorms(k))
+    /** array of struct(c = cosine, nid = -cent_id), one per centroid
+      * ([[graft.functions.CentroidScores]]): sorted descending, it
+      * ranks cells by cosine, ties toward the SMALLEST centroid id. One
+      * codegen loop over the matrix, so the k ∝ N rule never grows the
+      * expression tree. */
+    def scores(e: Column, n: Column): Column =
+      graft.functions.VectorOps.centroidScores(e, n, m, norms)
 
-  /** Corpus-side assignment: the fused argmax
-    * ([[graft.functions.BestCentroid]] — no k-struct array per row);
-    * query rows keep the full sorted scores array for top-nprobe. */
-  private def bestCent(embCol: Column, nrmCol: Column, k: Int): Column =
-    graft.functions.VectorOps.bestCentroid(embCol, nrmCol,
-      parityCents(k), parityNorms(k))
+    /** The argmax struct alone ([[graft.functions.BestCentroid]] — no
+      * k-struct array per row): the corpus-side cell assignment. */
+    def best(e: Column, n: Column): Column =
+      graft.functions.VectorOps.bestCentroid(e, n, m, norms)
+
+    /** The `nprobe` cells nearest the query, picked on the driver by the
+      * kernels' rule: the same sequential fold divided by
+      * `qn * norms(c)`, cosine descending, ties toward the smallest
+      * centroid id. So a probe that must reach the scan as literals
+      * (partition pruning) picks the cells of the in-plan probe. */
+    def probe(qe: Seq[Float], qn: Double, nprobe: Int): Seq[Int] = {
+      val q = qe.map(_.toDouble).toArray
+      m.indices.map(c => (dfoldD(q, m(c)) / (qn * norms(c)), c))
+        .sortBy { case (cos, c) => (-cos, c) }
+        .take(nprobe).map(_._2)
+    }
+  }
+
+  private[graft] object Cents {
+    private val parityCache =
+      scala.collection.concurrent.TrieMap.empty[Int, Cents]
+
+    /** The k parity centroids, memoized so every plan using the same k
+      * shares ONE matrix instance (CentroidScores compares
+      * reference-equal matrices for subexpression reuse). */
+    def parity(k: Int): Cents = parityCache.getOrElseUpdate(k,
+      new Cents(Array.tabulate(k)(c => Array.tabulate(64)(d => centSign(c, d))),
+        Array.fill(k)(8.0)))
+  }
 
   /** Repartition UP before the O(k·dim)-per-row assignment when the
     * scan offers fewer partitions than cores. The local scale corpora
@@ -1030,45 +1035,47 @@ object LlmVector {
       if (df.rdd.getNumPartitions >= want) df else df.repartition(want)
     }
 
-  /** Shared IVF probe: cell-assign the corpus (map-side argmax over
-    * the centroid array), derive the query row's top-nprobe(=2) probed
-    * cells, and emit each in-probed-cell candidate with its exact
-    * cosine. Both llm_ann_ivf (top-k tail) and llm_ann_range
-    * (threshold tail) build on this ONE derivation, matching the
-    * shared IvfCellsCte their oracles replay — the Spark side can no
-    * longer drift between the two keys any more than the oracle can. */
   /** Map-side cell assignment over the fixed-centroid IVF index —
     * argmax over the centroid scores array, ties to the smallest
     * centroid id. The ONE Spark-side derivation of `cell`, shared by
     * the single-query probe and the batch-query key exactly as their
     * oracles share IvfBaseCte's `assigned` CTE, and by the on-disk and
     * streamed indexes through [[assignCells]]. */
-  private def ivfAssigned(e: DataFrame, k: Int): DataFrame = e
-    .withColumn("best", bestCent(col("embedding"), col("nrm"), k))
+  private def ivfAssigned(e: DataFrame, cents: Cents): DataFrame = e
+    .withColumn("best", cents.best(col("embedding"), col("nrm")))
     .select(col("vec_id"), col("embedding"), col("nrm"),
       (-col("best.nid")).cast("int").as("cell"))
 
-  private def ivfProbedCandidates(spark: SparkSession, sfDir: String): DataFrame = {
-    val k = ivfK(spark, sfDir)
+  /** Adds `probed`, the `nprobe` cells nearest each query row, to a
+    * frame of query rows (qe, qn, …): the in-plan twin of
+    * [[Cents.probe]]. */
+  private[graft] def withProbed(q: DataFrame, cents: Cents,
+                                nprobe: Int): DataFrame =
+    q.withColumn("scored",
+        sort_array(cents.scores(col("qe"), col("qn")), asc = false))
+      .select(q.columns.toSeq.map(col) :+ expr(
+        s"transform(slice(scored, 1, $nprobe), s -> cast(-s.nid as int))")
+        .as("probed"): _*)
+
+  /** Shared IVF probe: cell-assign the corpus (map-side argmax over
+    * the centroid array), derive query vector 7's `nprobe` probed
+    * cells, and emit each in-probed-cell candidate with its exact
+    * cosine. llm_ann_ivf (top-k tail) and llm_ann_range (threshold
+    * tail) build on this ONE derivation over the parity centroids,
+    * matching the shared IvfCellsCte their oracles replay;
+    * llm_ann_ivf_kmeans runs it over its own centroids. */
+  private def ivfProbedCandidates(spark: SparkSession, sfDir: String,
+      cents: Cents, nprobe: Int): DataFrame = {
     val e = emb(spark, sfDir)
-    val assigned = ivfAssigned(widenForAssign(spark, e, k), k)
-    // query row: same scores array, sorted desc, top-nprobe(=2) cells
-    val q = e.where(col("vec_id") === 7)
-      .select(col("embedding").as("qe"), col("nrm").as("qn"))
-      .withColumn("scored",
-        sort_array(centScores(col("qe"), col("qn"), k), asc = false))
-      .select(col("qe"), col("qn"),
-        expr(s"transform(slice(scored, 1, 2), s -> cast(-s.nid as int))")
-          .as("probed"))
-    assigned.crossJoin(broadcast(q))
+    ivfAssigned(widenForAssign(spark, e, cents.k), cents)
+      .crossJoin(broadcast(withProbed(query(e, 7), cents, nprobe)))
       .where(array_contains(col("probed"), col("cell")) &&
         col("vec_id") =!= 7)
-      .select(col("vec_id"), col("cell"),
-        cosine(col("embedding"), col("qe"), col("nrm"), col("qn")).as("cosine"))
+      .select(col("vec_id"), col("cell"), qCosine.as("cosine"))
   }
 
   private def annIvf(spark: SparkSession, sfDir: String): DataFrame =
-    ivfProbedCandidates(spark, sfDir)
+    ivfProbedCandidates(spark, sfDir, Cents.parity(ivfK(spark, sfDir)), 2)
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(10)
 
@@ -1089,7 +1096,7 @@ object LlmVector {
   // sized, never cell-sized.
   // ---------------------------------------------------------------------
   private def annRange(spark: SparkSession, sfDir: String): DataFrame =
-    ivfProbedCandidates(spark, sfDir)
+    ivfProbedCandidates(spark, sfDir, Cents.parity(ivfK(spark, sfDir)), 2)
       .where(col("cosine") >= 0.1)
       .orderBy("vec_id")
 
@@ -1257,23 +1264,16 @@ object LlmVector {
   // k-bounded exchange, vs B full single-query plans.
   // ---------------------------------------------------------------------
   private def annBatchQueries(spark: SparkSession, sfDir: String): DataFrame = {
-    val k = ivfK(spark, sfDir)
+    val cents = Cents.parity(ivfK(spark, sfDir))
     val e = emb(spark, sfDir)
-    val assigned = ivfAssigned(widenForAssign(spark, e, k), k)
     val qs = e.where(col("vec_id").isin(3, 7, 11, 19, 23))
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
         col("nrm").as("qn"))
-      .withColumn("scored",
-        sort_array(centScores(col("qe"), col("qn"), k), asc = false))
-      .select(col("qid"), col("qe"), col("qn"),
-        expr(s"transform(slice(scored, 1, 2), s -> cast(-s.nid as int))")
-          .as("probed"))
-    val cand = assigned.crossJoin(broadcast(qs))
+    val cand = ivfAssigned(widenForAssign(spark, e, cents.k), cents)
+      .crossJoin(broadcast(withProbed(qs, cents, 2)))
       .where(array_contains(col("probed"), col("cell")) &&
         col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        cosine(col("embedding"), col("qe"), col("nrm"), col("qn"))
-          .as("cosine"))
+      .select(col("qid"), col("vec_id"), qCosine.as("cosine"))
     graft.plans.GraftOps.topKPerGroup(cand, Seq("qid"),
         Seq(("cosine", false), ("vec_id", true)), k = 3)
       .orderBy(col("qid"), col("cosine").desc, col("vec_id"))
@@ -1292,14 +1292,7 @@ object LlmVector {
   // statistic); here the corpus is the sample.
   // ---------------------------------------------------------------------
   private def annRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = emb(spark, sfDir)
-    val q = e.where(col("vec_id") === 7)
-      .select(col("embedding").as("qe"), col("nrm").as("qn"))
-    val truth = e.where(col("vec_id") =!= 7)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        cosine(col("embedding"), col("qe"), col("nrm"), col("qn"))
-          .as("cosine"))
+    val truth = scoredAgainst(emb(spark, sfDir), 7, "vec_id")
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(10)
       .select(col("vec_id")).withColumn("in_truth", lit(1))
@@ -1343,9 +1336,7 @@ object LlmVector {
       .orderBy(col("coarse_cosine").desc, col("vec_id"))
       .limit(50)
     cand
-      .select(col("vec_id"), col("coarse_cosine"),
-        cosine(col("embedding"), col("qe"), col("nrm"), col("qn"))
-          .as("cosine"))
+      .select(col("vec_id"), col("coarse_cosine"), qCosine.as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(10)
   }
@@ -1371,7 +1362,7 @@ object LlmVector {
     * broadcast-literal centroids, no shuffle. */
   private[graft] def assignCells(batch: DataFrame, k: Int): DataFrame =
     ivfAssigned(batch.select(col("vec_id"), col("embedding"),
-      l2norm(col("embedding")).as("nrm")), k)
+      l2norm(col("embedding")).as("nrm")), Cents.parity(k))
 
   /** One DataFrame over a chain of hive-partitioned run dirs: each run
     * reads as its OWN base path and the branches union (a multi-path
@@ -1382,9 +1373,8 @@ object LlmVector {
     dirs.map(spark.read.parquet(_)).reduce(_ unionByName _)
 
   /** Probe a hive-partitioned IVF index: the two probe-cell ids are
-    * computed driver-side from the broadcast centroids with the
-    * IDENTICAL sequential fold + (cos desc, cent_id asc) tie-break as
-    * the in-plan probe, so every IVF key chooses the same cells; they
+    * computed driver-side by [[Cents.probe]], the in-plan probe's rule,
+    * so every IVF key chooses the same cells; they
     * reach the scan as literals → partition pruning (PlanShapeSpec pins
     * it). The batch-built index is one dir; a streamed index is a
     * CHAIN of run dirs (level-0 appends + size-tiered merges — the
@@ -1396,22 +1386,14 @@ object LlmVector {
     * oracle. */
   private[graft] def probeIvfIndex(spark: SparkSession, sfDir: String,
       dirs: Seq[String]): DataFrame = {
-    val q = emb(spark, sfDir).where(col("vec_id") === 7)
-      .select(col("embedding").as("qe"), col("nrm").as("qn"))
+    val q = query(emb(spark, sfDir), 7)
     val qRow = q.head()
-    val (qe, qn) = (qRow.getSeq[Float](0), qRow.getDouble(1))
-    val probed = (0 until ivfK(spark, sfDir))
-      .map { c =>
-        ((0 until 64).map(d => qe(d).toDouble * centSign(c, d)).sum
-          / (qn * 8.0), c)
-      }
-      .sortBy { case (cos, c) => (-cos, c) }
-      .take(2).map(_._2)
+    val probed = Cents.parity(ivfK(spark, sfDir))
+      .probe(qRow.getSeq[Float](0), qRow.getDouble(1), 2)
     readRuns(spark, dirs)
       .where(col("cell").isin(probed: _*) && col("vec_id") =!= 7)
       .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("cell"),
-        cosine(col("embedding"), col("qe"), col("nrm"), col("qn")).as("cosine"))
+      .select(col("vec_id"), col("cell"), qCosine.as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(10)
   }
@@ -1483,14 +1465,6 @@ object LlmVector {
     BigDecimal.valueOf(x * 1.0e8)
       .setScale(0, scala.math.BigDecimal.RoundingMode.HALF_UP).toLong
 
-  /** Deterministic sampled k-means: the sample is the KmSampleN vectors
-    * with the smallest md5(vec_id) — a pseudo-random but fully
-    * deterministic choice that both engines can replay, executed as
-    * TakeOrderedAndProject (per-partition top-N, driver merges only N
-    * rows — O(N·dim) driver memory at ANY corpus size). Init = KmK
-    * evenly-strided sample members by vec_id rank, then KmIters Lloyd
-    * rounds (cosine assignment, scaled-bigint means; an empty cell keeps
-    * its previous centroid). Returns (centroid, its L2 norm) pairs. */
   /** The bounded index-build sample as a DataFrame — exposed so
     * PlanShapeSpec can pin that it plans as TakeOrderedAndProject
     * (per-partition top-N; a regression to a global sort + collect
@@ -1501,8 +1475,16 @@ object LlmVector {
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       .limit(KmSampleN)
 
-  private[graft] def kmeansCentroids(spark: SparkSession, sfDir: String)
-      : Array[(Array[Double], Double)] = {
+  /** Deterministic sampled k-means: the sample is the KmSampleN vectors
+    * with the smallest md5(vec_id) — a pseudo-random but fully
+    * deterministic choice that both engines can replay, executed as
+    * TakeOrderedAndProject (per-partition top-N, driver merges only N
+    * rows — O(N·dim) driver memory at ANY corpus size). Init = KmK
+    * evenly-strided sample members by vec_id rank, then KmIters Lloyd
+    * rounds (cosine assignment, scaled-bigint means; an empty cell keeps
+    * its previous centroid). Returns the centroids with their L2 norms. */
+  private[graft] def kmeansCentroids(spark: SparkSession,
+                                     sfDir: String): Cents = {
     val k = kmK(spark, sfDir)
     val sample: Array[Array[Double]] =
       kmSampleDF(spark, sfDir)
@@ -1537,46 +1519,13 @@ object LlmVector {
           sums(c)(d).toDouble / 1.0e8 / counts(c).toDouble)
       }
     }
-    cents.map(c => (c, math.sqrt(dfoldD(c, c))))
+    new Cents(cents, cents.map(c => math.sqrt(dfoldD(c, c))))
   }
 
-  /** Scores array over data-derived centroids — same struct/argmax
-    * semantics as [[centScores]] (ties toward the smallest id), same
-    * k-independent codegen kernel ([[graft.functions.CentroidScores]]). */
-  private def kmScores(cents: Array[(Array[Double], Double)],
-                       embCol: Column, nrmCol: Column): Column =
-    graft.functions.VectorOps.centroidScores(embCol, nrmCol,
-      cents.map(_._1), cents.map(_._2))
-
-  /** Fused-argmax twin of [[kmScores]] for the corpus-side assignment
-    * — same rationale as [[bestCent]]. */
-  private def kmBest(cents: Array[(Array[Double], Double)],
-                     embCol: Column, nrmCol: Column): Column =
-    graft.functions.VectorOps.bestCentroid(embCol, nrmCol,
-      cents.map(_._1), cents.map(_._2))
-
-  private def annIvfKmeans(spark: SparkSession, sfDir: String): DataFrame = {
-    val cents = kmeansCentroids(spark, sfDir)
-    val e = emb(spark, sfDir)
-    val assigned = widenForAssign(spark, e, cents.length)
-      .withColumn("best", kmBest(cents, col("embedding"), col("nrm")))
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        (-col("best.nid")).cast("int").as("cell"))
-    val q = e.where(col("vec_id") === 7)
-      .select(col("embedding").as("qe"), col("nrm").as("qn"))
-      .withColumn("scored",
-        sort_array(kmScores(cents, col("qe"), col("qn")), asc = false))
-      .select(col("qe"), col("qn"),
-        expr(s"transform(slice(scored, 1, 8), s -> cast(-s.nid as int))")
-          .as("probed"))
-    assigned.crossJoin(broadcast(q))
-      .where(array_contains(col("probed"), col("cell")) &&
-        col("vec_id") =!= 7)
-      .select(col("vec_id"), col("cell"),
-        cosine(col("embedding"), col("qe"), col("nrm"), col("qn")).as("cosine"))
+  private def annIvfKmeans(spark: SparkSession, sfDir: String): DataFrame =
+    ivfProbedCandidates(spark, sfDir, kmeansCentroids(spark, sfDir), 8)
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(10)
-  }
 
   // ---------------------------------------------------------------------
   // llm_vector_mean — per-label mean embedding as a declarative plan:
@@ -1809,19 +1758,9 @@ object LlmVector {
   // ANN probes.
   // ---------------------------------------------------------------------
   private def annIvfPq(spark: SparkSession, sfDir: String): DataFrame = {
-    val k = ivfK(spark, sfDir)
-    val e = emb(spark, sfDir)
-    val qRow = e.where(col("vec_id") === 7)
-      .select(col("embedding"), col("nrm")).head()
+    val qRow = query(emb(spark, sfDir), 7).head()
     val qe = qRow.getSeq[Float](0)
-    val qn = qRow.getDouble(1)
-    val probed = (0 until k)
-      .map { c =>
-        ((0 until 64).map(d => qe(d).toDouble * centSign(c, d)).sum
-          / (qn * 8.0), c)
-      }
-      .sortBy { case (cos, c) => (-cos, c) }
-      .take(2).map(_._2)
+    val probed = Cents.parity(ivfK(spark, sfDir)).probe(qe, qRow.getDouble(1), 2)
     val dist = pqDistTable(qe)
     // probe the STAGED cell-partitioned index (shared with
     // llm_ann_ivf_persisted) instead of re-deriving the assignment
@@ -2134,12 +2073,8 @@ object LlmVector {
       .orderBy(col("hamming"), col("vec_id"))
       .limit(50)
     val e = emb(spark, sfDir)
-    val qv = e.where(col("vec_id") === 0)
-      .select(col("embedding").as("qe"), col("nrm").as("qn"))
-    coarse.join(e, "vec_id").crossJoin(broadcast(qv))
-      .select(col("vec_id"), col("hamming"),
-        cosine(col("embedding"), col("qe"), col("nrm"), col("qn"))
-          .as("cosine"))
+    coarse.join(e, "vec_id").crossJoin(broadcast(query(e, 0)))
+      .select(col("vec_id"), col("hamming"), qCosine.as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(10)
   }
@@ -2162,17 +2097,10 @@ object LlmVector {
       .withColumn("rank_text", row_number().over(
         Window.orderBy(col("score").desc, col("doc_id"))).cast("bigint"))
       .select(col("doc_id").as("id"), col("rank_text"))
-    val e = emb(spark, sfDir)
-    val qv = e.where(col("vec_id") === 0)
-      .select(col("embedding").as("qe"), col("nrm").as("qn"))
-    val vec = e.where(col("vec_id") =!= 0)
-      .crossJoin(broadcast(qv))
-      .select(col("vec_id"),
-        cosine(col("embedding"), col("qe"), col("nrm"), col("qn"))
-          .as("cos"))
-      .orderBy(col("cos").desc, col("vec_id")).limit(20)
+    val vec = scoredAgainst(emb(spark, sfDir), 0, "vec_id")
+      .orderBy(col("cosine").desc, col("vec_id")).limit(20)
       .withColumn("rank_vec", row_number().over(
-        Window.orderBy(col("cos").desc, col("vec_id"))).cast("bigint"))
+        Window.orderBy(col("cosine").desc, col("vec_id"))).cast("bigint"))
       .select(col("vec_id").as("id"), col("rank_vec"))
     txt.join(vec, Seq("id"), "full_outer")
       .selectExpr("id", "rank_text", "rank_vec",

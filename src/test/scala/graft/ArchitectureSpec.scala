@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * other than etl/Fixtures.scala may declare a session-keyed cache or
   * create temp dirs itself, none other than Session.scala may build a
   * session, no streaming query is run outside
-  * StreamingQ.runAvailableNow, and every kernel's generated code calls
-  * its Scala loop through Kernel.callCompute. */
+  * StreamingQ.runAvailableNow, every kernel's generated code calls
+  * its Scala loop through Kernel.callCompute, and only LlmVector.Cents
+  * calls the centroid kernels or ranks cells on the driver. */
 class ArchitectureSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -90,5 +91,47 @@ class ArchitectureSpec extends AnyFunSuite {
     val off = bodies.filterNot { case (_, body) => oneCall.matches(body) }
     assert(off.isEmpty, s"${off.length} of ${bodies.length} doGenCode " +
       s"bodies do not call Kernel.callCompute: ${off.map(_._1).mkString("; ")}")
+  }
+
+  test("only LlmVector.Cents calls the centroid kernels; one driver-side probe") {
+    // the in-plan IVF probe and the driver-side one read one centroid
+    // type, so the persisted and IVFPQ keys pick llm_ann_ivf's cells
+    val walk = Files.walk(root.resolve("graft/queries"))
+    val srcs = try walk.iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p -> Files.readString(p)).toList
+    finally walk.close()
+    // the body of `class Cents`: from its first `{` to the matching `}`
+    def centsBody(src: String): (Int, Int) = {
+      val at = src.indexOf("class Cents(")
+      if (at < 0) (0, 0)
+      else {
+        val open = src.indexOf('{', at)
+        var depth = 1
+        var i = open + 1
+        while (depth > 0 && i < src.length) {
+          if (src(i) == '{') depth += 1 else if (src(i) == '}') depth -= 1
+          i += 1
+        }
+        (open, i)
+      }
+    }
+    def sites(r: Regex, skipCents: Boolean): List[String] = srcs.flatMap {
+      case (p, src) =>
+        val (from, to) = centsBody(src)
+        r.findAllMatchIn(src).map(_.start)
+          .filterNot(at => skipCents && at > from && at < to)
+          .map(at => s"$p:${src.take(at).count(_ == '\n') + 1}")
+    }
+    val kernels = sites(
+      raw"VectorOps\s*\.\s*(centroidScores|bestCentroid)\s*\(".r,
+      skipCents = true)
+    // the (cosine desc, centroid id asc) sort key of a driver-side probe
+    val probes = sites(raw"\(\s*-\s*cos\s*,\s*c\s*\)".r, skipCents = false)
+    assert(kernels.isEmpty && probes.length == 1,
+      s"${kernels.length} centroid kernel call sites outside " +
+        s"LlmVector.Cents (${kernels.mkString("; ")}) and " +
+        s"${probes.length} driver-side probe folds, want the one in " +
+        s"Cents.probe (${probes.mkString("; ")})")
   }
 }

@@ -276,6 +276,32 @@ class LlmSpec extends AnyFunSuite {
     assert(recall >= 0.3, s"recall@10 = $recall")
   }
 
+  test("the driver-side IVF probe picks the in-plan probe's cells") {
+    // Cents.probe gives the persisted and IVFPQ keys their cell
+    // literals, withProbed gives the in-plan keys their probed array;
+    // the keys share llm_ann_ivf's oracle only while the two agree.
+    // Every vector is the query once: parity centroids at k = 16 and
+    // 64 with nprobe 2 and 8, and the k-means centroids at 8.
+    import graft.functions.VectorOps.l2norm
+    val q = Tables.t(spark, sfDir, "embeddings")
+      .select(col("vec_id"), col("embedding").as("qe"),
+        l2norm(col("embedding")).as("qn"))
+    val n = q.count()
+    val cases = (for (k <- Seq(16, 64); nprobe <- Seq(2, 8))
+      yield (s"parity k=$k", LlmVector.Cents.parity(k), nprobe)) :+
+      (("k-means", LlmVector.kmeansCentroids(spark, sfDir), 8))
+    for ((name, cents, nprobe) <- cases) {
+      val rows = LlmVector.withProbed(q, cents, nprobe).collect()
+      assert(n > 0 && rows.length == n)
+      rows.foreach { r =>
+        val inPlan = r.getSeq[Int](3)
+        assert(inPlan.length == nprobe)
+        assert(cents.probe(r.getSeq[Float](1), r.getDouble(2), nprobe) ==
+          inPlan, s"$name nprobe=$nprobe, query vec ${r.getLong(0)}")
+      }
+    }
+  }
+
   test("hierarchical pack_sequences equals the single-window formulation") {
     // The two-pass shard packing must be BIT-identical to the naive
     // global window (that's what the oracle checks too) — and must
