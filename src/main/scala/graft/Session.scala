@@ -24,6 +24,10 @@ import org.apache.spark.sql.SparkSession
   *    whose files pack into one split under them with no exchange above
   *    it. At 8m/256k one file of up to 256 KB is one split (a curate
   *    shard is ~64 KB), and on two or more cores two files never are.
+  *    `maxPartitionBytes` also decides when a write gets one writer:
+  *    `Ingest.writeParquet` coalesces a `Project`/`Filter` chain over a
+  *    file relation of at most 8m to one task, so a ~1 MB landing batch
+  *    writes one file per partition instead of one per scan task.
   *  - `spark.sql.session.timeZone=UTC` and no UI.
   *  - `spark.sql.extensions=graft.functions.GraftExtensions`, which also
   *    sizes the codegen cache (see

@@ -118,11 +118,14 @@ object Fixtures {
     }
 
   /** Write `df` to a fresh parquet dir and read it back — the
-    * "as the next consumer sees it" view of a sink. */
+    * "as the next consumer sees it" view of a sink. An unpartitioned
+    * read-back declares `df`'s schema, so it infers nothing; a
+    * partitioned one keeps partition discovery. */
   def roundTrip(spark: SparkSession, df: DataFrame, prefix: String,
                 partitionBy: Seq[String] = Nil): DataFrame = {
     val dir = tempDir(prefix)
     Ingest.writeParquet(df, dir, partitionColumns = partitionBy)
-    spark.read.parquet(dir)
+    if (partitionBy.isEmpty) spark.read.schema(df.schema).parquet(dir)
+    else spark.read.parquet(dir)
   }
 }

@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.plans.SingleSplitRule
 
 /** The reference repository's core capability — CSV landing zone →
   * cleaned, partitioned, snappy-Parquet "staged" zone → catalog —
@@ -12,12 +13,16 @@ import org.apache.spark.sql.types.StructType
   * invocation (row-oriented, single-process), this declares the whole
   * conversion as a DataFrame plan: Spark's vectorized CSV reader scans
   * file splits in parallel across executors, Catalyst prunes columns,
-  * and the parquet sink writes one file per task — the same code path
-  * scales from one file to 100 TB by adding executors. Malformed-row
-  * policy, name sanitization, derived date partitions, and
-  * append/overwrite/dynamic-partition-overwrite semantics mirror the
-  * reference's knobs (wrangler `mode=append/overwrite/
-  * overwrite_partitions` ≈ SaveMode + partitionOverwriteMode=dynamic).
+  * and the parquet sink writes one file per task per partition it
+  * touches — the same code path scales from one file to 100 TB by
+  * adding executors. An input within one split budget
+  * (`spark.sql.files.maxPartitionBytes`) is written by one task, so a
+  * small landing batch writes one file per partition (see
+  * [[writeParquet]]). Malformed-row policy, name sanitization, derived
+  * date partitions, and append/overwrite/dynamic-partition-overwrite
+  * semantics mirror the reference's knobs (wrangler `mode=append/
+  * overwrite/overwrite_partitions` ≈ SaveMode +
+  * partitionOverwriteMode=dynamic).
   */
 object Ingest {
   /** Canonical CSV round-trip format: second-of-day plus microseconds,
@@ -63,12 +68,23 @@ object Ingest {
   /** Write snappy parquet (the reference's staged zone). Partition
     * columns become hive-style directories so downstream scans get
     * partition pruning for free. `dynamicOverwrite` replaces only the
-    * partitions present in `df` (wrangler `overwrite_partitions`). */
+    * partitions present in `df` (wrangler `overwrite_partitions`).
+    *
+    * One writer for a small input: when `df` is a `Project`/`Filter`
+    * chain over a file relation of at most
+    * `spark.sql.files.maxPartitionBytes`
+    * ([[graft.plans.SingleSplitRule.smallScan]], the size test that also
+    * plans such a scan as one split), the write is coalesced to one task
+    * with no shuffle. A landing batch then writes one file per partition
+    * it touches, as the reference's one `to_parquet` call per object
+    * does. Any other frame (a larger input, or one with its own
+    * `repartition`) writes one file per task per partition. */
   def writeParquet(df: DataFrame, path: String,
                    partitionColumns: Seq[String] = Nil,
                    saveMode: SaveMode = SaveMode.Overwrite,
                    dynamicOverwrite: Boolean = false): Unit = {
-    var w = df.write
+    val small = SingleSplitRule.smallScan(df.queryExecution.analyzed).isDefined
+    var w = (if (small) df.coalesce(1) else df).write
       .mode(saveMode)
       .option("compression", "snappy")
     if (dynamicOverwrite)

@@ -30,8 +30,8 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelati
   *
   * Guard rails:
   *  - `sizeInBytes` is checked against `maxPartitionBytes` before the
-  *    index is listed, so a large catalog index is never listed only to
-  *    be rejected;
+  *    index is listed ([[SingleSplitRule.smallScan]]), so a large catalog
+  *    index is never listed only to be rejected;
   *  - a `RepartitionOperation` and everything below it is returned
   *    unchanged: the rule is idempotent, keeps a user's `repartition`,
   *    and does not fight `CollapseRepartition` in the fixed-point batch;
@@ -45,35 +45,43 @@ case class SingleSplitRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   private def wrap(plan: LogicalPlan): LogicalPlan = plan match {
     case r: RepartitionOperation => r
-    case chain if scanBelow(chain).exists(singleSplit) =>
+    case chain if SingleSplitRule.smallScan(chain).exists(singleSplit) =>
       Repartition(1, shuffle = false, chain)
     case other => other.mapChildren(wrap)
-  }
-
-  /** The file relation at the bottom of a `Project`/`Filter` chain. */
-  private def scanBelow(plan: LogicalPlan): Option[HadoopFsRelation] = plan match {
-    case Project(_, child) => scanBelow(child)
-    case Filter(_, child) => scanBelow(child)
-    case LogicalRelation(fs: HadoopFsRelation, _, _, false, _)
-      if fs.bucketSpec.isEmpty => Some(fs)
-    case _ => None
   }
 
   /** True when the scan of every file of `fs` is one file partition.
     * Lists with no filters, a superset of what the scan reads, so the
     * answer errs toward not firing. */
-  private def singleSplit(fs: HadoopFsRelation): Boolean =
-    fs.location.sizeInBytes <= conf.filesMaxPartitionBytes && {
-      val dirs = fs.location.listFiles(Nil, Nil)
-      val maxSplit = FilePartition.maxSplitBytes(session, dirs)
-      val splits = dirs.flatMap { dir =>
-        dir.files.flatMap { f =>
-          val path = f.getPath
-          PartitionedFileUtil.splitFiles(f, path,
-            fs.fileFormat.isSplitable(session, fs.options, path),
-            maxSplit, dir.values)
-        }
-      }.sortBy(_.length)(Ordering[Long].reverse)
-      FilePartition.getFilePartitions(session, splits, maxSplit).size == 1
-    }
+  private def singleSplit(fs: HadoopFsRelation): Boolean = {
+    val dirs = fs.location.listFiles(Nil, Nil)
+    val maxSplit = FilePartition.maxSplitBytes(session, dirs)
+    val splits = dirs.flatMap { dir =>
+      dir.files.flatMap { f =>
+        val path = f.getPath
+        PartitionedFileUtil.splitFiles(f, path,
+          fs.fileFormat.isSplitable(session, fs.options, path),
+          maxSplit, dir.values)
+      }
+    }.sortBy(_.length)(Ordering[Long].reverse)
+    FilePartition.getFilePartitions(session, splits, maxSplit).size == 1
+  }
+}
+
+object SingleSplitRule {
+  /** The file relation at the bottom of a `Project`/`Filter` chain, if it
+    * is a non-streaming, unbucketed relation whose files total at most
+    * the reading session's `spark.sql.files.maxPartitionBytes`. Such a
+    * relation is small enough to plan as one split (the rule then checks
+    * Spark's packing) and to write with one writer
+    * (`graft.etl.Ingest.writeParquet`). The size comes from the file
+    * index, so nothing is listed here. */
+  def smallScan(plan: LogicalPlan): Option[HadoopFsRelation] = plan match {
+    case Project(_, child) => smallScan(child)
+    case Filter(_, child) => smallScan(child)
+    case LogicalRelation(fs: HadoopFsRelation, _, _, false, _)
+      if fs.bucketSpec.isEmpty && fs.location.sizeInBytes <=
+        fs.sparkSession.sessionState.conf.filesMaxPartitionBytes => Some(fs)
+    case _ => None
+  }
 }

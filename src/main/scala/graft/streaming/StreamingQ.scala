@@ -107,13 +107,14 @@ object StreamingQ {
       .trigger(Trigger.AvailableNow()).start().awaitTermination()
 
   /** Run a streaming DataFrame to a parquet sink with AvailableNow and
-    * return the sink re-read — the "as the next consumer sees it" view. */
+    * return the sink re-read — the "as the next consumer sees it" view.
+    * The re-read declares the stream's schema, so it infers nothing. */
   private def runToParquet(spark: SparkSession, stream: DataFrame): DataFrame = {
     val out = tempDir("graft_stream_out_")
     withStreamingPartitions(spark) {
       runAvailableNow(stream.writeStream.format("parquet").option("path", out))
     }
-    spark.read.parquet(out)
+    spark.read.schema(stream.schema).parquet(out)
   }
 
   /** Run a streaming aggregation to completion in Complete mode via the
@@ -129,9 +130,10 @@ object StreamingQ {
     // view immediately — otherwise every invocation pins a full result
     // copy in driver memory for the session lifetime.
     val out = tempDir("graft_stream_complete_out_")
-    spark.table(name).write.mode("overwrite").parquet(out)
+    val result = spark.table(name)
+    result.write.mode("overwrite").parquet(out)
     spark.catalog.dropTempView(name)
-    spark.read.parquet(out)
+    spark.read.schema(result.schema).parquet(out)
   }
 
   // ---------------------------------------------------------------------

@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * create temp dirs itself, none other than Session.scala may build a
   * session, no streaming query is run outside
   * StreamingQ.runAvailableNow, every kernel's generated code calls
-  * its Scala loop through Kernel.callCompute, and only LlmVector.Cents
-  * calls the centroid kernels or ranks cells on the driver. */
+  * its Scala loop through Kernel.callCompute, only LlmVector.Cents
+  * calls the centroid kernels or ranks cells on the driver, and only
+  * plans/SingleSplitRule.scala reads the split budget. */
 class ArchitectureSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -65,6 +66,15 @@ class ArchitectureSpec extends AnyFunSuite {
       Seq(raw"SparkSession\s*\.\s*builder".r))
     assert(found.isEmpty,
       s"session built outside graft.Session: ${found.mkString("; ")}")
+  }
+
+  test("only plans/SingleSplitRule.scala reads the split budget") {
+    // the one-split read rule and the one-writer write share one size
+    // test, SingleSplitRule.smallScan, so the two cannot drift apart
+    val found = offenders("graft/plans/SingleSplitRule.scala",
+      Seq(raw"filesMaxPartitionBytes".r, raw"FilePartition\s*\.\s*maxSplitBytes".r))
+    assert(found.isEmpty,
+      s"split budget read outside graft.plans.SingleSplitRule: ${found.mkString("; ")}")
   }
 
   test("every doGenCode in graft.functions is one Kernel.callCompute") {

@@ -1,7 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, spark_partition_id}
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
@@ -138,6 +139,83 @@ class EtlSpec extends AnyFunSuite {
     val got = spark.read.parquet(dir).select("v", "p").as[(Int, String)]
       .collect().sorted
     assert(got === Array((3, "b"), (99, "a")).sorted)
+  }
+
+  /** A landing batch as the ingest benchmark lands one: four months of
+    * sf0.1 orders (~7.5k rows, ~0.8 MB) in one CSV file. */
+  private lazy val landingCsv: String = {
+    val dir = Fixtures.tempDir("graft_spec_landing")
+    Tables.t(spark, "/root/testdata/sf0.1", "orders")
+      .where(col("o_orderdate") >= "1995-01-01" && col("o_orderdate") < "1995-05-01")
+      .withColumn("o_orderdate", col("o_orderdate").cast("timestamp"))
+      .coalesce(1).write.mode("overwrite").option("header", true)
+      .option("timestampFormat", Ingest.TsFormat).csv(dir)
+    dir
+  }
+
+  /** `landingCsv` as the landing path stages it: read, sanitized and
+    * partitioned by month. */
+  private def landingBatch(): DataFrame =
+    Ingest.withDatePartitions(Ingest.sanitizeColumnNames(Ingest.readCsv(spark,
+      landingCsv, graft.etl.Schemas.orders)), "o_orderdate")
+
+  /** The number of parquet files in each partition dir under `dir`. */
+  private def filesPerPartition(dir: String): Map[String, Int] = {
+    val walk = Files.walk(Paths.get(dir))
+    try walk.iterator.asScala.filter(_.toString.endsWith(".parquet"))
+      .toSeq.groupBy(_.getParent.toString).map { case (d, fs) => d -> fs.size }
+    finally walk.close()
+  }
+
+  /** Run `body` under the engine's split confs (`Session.confs`), under
+    * which the landing batch scans as several splits. */
+  private def engineSplits[T](extra: (String, String)*)(body: => T): T =
+    Session.withConfs(spark, (Session.confs.filter(_._1.startsWith("spark.sql.files."))
+      ++ extra).toSeq: _*)(body)
+
+  private val byMonth = Seq("p_year", "p_month")
+
+  test("a small landing batch writes one file per partition it touches") {
+    engineSplits() {
+      val batch = landingBatch()
+      assert(batch.rdd.getNumPartitions > 1, "the batch must scan as several splits")
+      val touched = batch.select(byMonth.map(col): _*).distinct().count()
+      assert(touched > 1)
+      val appended = Fixtures.tempDir("graft_spec_land_append")
+      Ingest.writeParquet(batch, appended, byMonth, SaveMode.Append)
+      val dynamic = Fixtures.tempDir("graft_spec_land_dynamic")
+      Ingest.writeParquet(batch, dynamic, byMonth, SaveMode.Overwrite,
+        dynamicOverwrite = true)
+      for (dir <- Seq(appended, dynamic)) {
+        val files = filesPerPartition(dir)
+        assert(files.size == touched && files.values.forall(_ == 1), files)
+        assert(spark.read.parquet(dir).count() == batch.count())
+      }
+    }
+  }
+
+  test("a landing batch over maxPartitionBytes writes one file per task per partition") {
+    engineSplits("spark.sql.files.maxPartitionBytes" -> "64k") {
+      val batch = landingBatch()
+      val touched = batch.select(byMonth.map(col): _*).distinct().count()
+      val perTask = batch.select((spark_partition_id() +: byMonth.map(col)): _*)
+        .distinct().count()
+      assert(perTask > touched)
+      val dir = Fixtures.tempDir("graft_spec_land_big")
+      Ingest.writeParquet(batch, dir, byMonth, SaveMode.Append)
+      assert(filesPerPartition(dir).values.sum == perTask)
+    }
+  }
+
+  test("a landing batch with its own repartition writes one file per partition") {
+    engineSplits() {
+      val batch = landingBatch().repartition(byMonth.map(col): _*)
+      val touched = batch.select(byMonth.map(col): _*).distinct().count()
+      val dir = Fixtures.tempDir("graft_spec_land_repart")
+      Ingest.writeParquet(batch, dir, byMonth, SaveMode.Append)
+      val files = filesPerPartition(dir)
+      assert(files.size == touched && files.values.forall(_ == 1), files)
+    }
   }
 
   test("range-partitioned sink writes files with disjoint key ranges") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingQ
@@ -42,6 +43,21 @@ class StreamingSpec extends AnyFunSuite {
     val batch = Tables.t(spark, sfDir, "events")
       .select("event_id", "user_id", "event_type")
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+  }
+
+  test("a parquet sink's read-back declares the schema inference finds, and starts no job") {
+    // stream_ingest, and a windowed key whose sink holds a struct column
+    for (key <- Seq("stream_ingest", "stream_window_distinct")) {
+      val sink = StreamingQ.defs(key)(spark, sfDir).queryExecution.analyzed
+        .collectFirst { case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs }
+        .getOrElse(fail(s"$key reads no file relation"))
+      val dir = sink.location.rootPaths.head.toString
+      assert(sink.schema == spark.read.parquet(dir).schema, key)
+      val jobs = TablesSpec.jobsStartedBy(spark) {
+        spark.read.schema(sink.schema).parquet(dir)
+      }
+      assert(jobs == 0, s"$key: the declared read-back started $jobs Spark jobs")
+    }
   }
 
   test("file-arrival ingest is incremental: each new file processed exactly once") {

@@ -45,42 +45,17 @@ class TablesSpec extends AnyFunSuite {
 
   test("resolving a declared table starts no Spark job") {
     val sfDir = scaleFactors(1)
-    val jobs = jobsStartedBy {
+    val jobs = TablesSpec.jobsStartedBy(spark) {
       Tables.schemas.keys.foreach(name => Tables.t(spark, sfDir, name))
     }
     assert(jobs == 0, s"$jobs Spark jobs to resolve ${Tables.schemas.size} reads")
-  }
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val jobs = new AtomicInteger
-    val sentinel = new CountDownLatch(1)
-    val group = "tables-spec-sentinel"
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          sentinel.countDown()
-        else jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      // the bus delivers events in order: once the sentinel job's start
-      // arrives, every job the reads above started has been counted
-      sc.setJobGroup(group, "flush the listener bus")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.clearJobGroup()
-      assert(sentinel.await(60, TimeUnit.SECONDS), "sentinel job never reported")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
   }
 
   test("rowCount equals count() at every scale factor, and starts no Spark job") {
     val names = Seq("documents", "embeddings", "orders")
     val counted = for (sfDir <- scaleFactors; name <- names)
       yield (sfDir, name) -> Tables.t(spark, sfDir, name).count()
-    val jobs = jobsStartedBy {
+    val jobs = TablesSpec.jobsStartedBy(spark) {
       for (((sfDir, name), n) <- counted)
         assert(Tables.rowCount(spark, sfDir, name) == n, s"$sfDir/$name")
     }
@@ -102,5 +77,32 @@ class TablesSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       Tables.t(spark, scaleFactors.head, "lineitems"))
     assert(e.getMessage.contains("'lineitems'"), e.getMessage)
+  }
+}
+
+object TablesSpec {
+  /** Spark jobs started while `body` runs. */
+  def jobsStartedBy(spark: SparkSession)(body: => Unit): Int = {
+    val jobs = new AtomicInteger
+    val sentinel = new CountDownLatch(1)
+    val group = "tables-spec-sentinel"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          sentinel.countDown()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      // the bus delivers events in order: once the sentinel job's start
+      // arrives, every job the reads above started has been counted
+      sc.setJobGroup(group, "flush the listener bus")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      assert(sentinel.await(60, TimeUnit.SECONDS), "sentinel job never reported")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
   }
 }
