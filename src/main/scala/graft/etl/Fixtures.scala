@@ -14,9 +14,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * so every other input shape (CSV, staged streaming sources, pair
   * logs, indexes) is derived from it into temp dirs.
   *
-  * Two memo tiers, both keyed by `sfDir/tag` — a tag names ONE artifact,
-  * and call sites of different families use distinct tag prefixes
-  * (`csv_`, `stream_`) so no two sites can share a key:
+  * Three memos, all keyed by `sfDir/tag`. A tag names ONE artifact, and
+  * each literal tag has one call site in `src/main`, so one builder
+  * defines it (`ArchitectureSpec` enforces this). Call sites of
+  * different families use distinct tag prefixes (`csv_`, `stream_`):
   *  - [[stagedDir]]: a directory built once per JVM. The staged copy is
   *    immutable, so every session may read it.
   *  - [[persisted]]: a DataFrame built once per (session, sfDir, tag),
@@ -26,12 +27,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    same JVM a DataFrame bound to a stopped SparkContext, a strong key
   *    would pin dead sessions for the JVM lifetime, and object identity
   *    (not a hash) can never alias two live sessions.
-  *  - [[stagedPersisted]] composes the two: the persisted DataFrame's
-  *    lineage is just the parquet scan of a staged dir, so
-  *    storage-pressure eviction costs a re-READ of a small file, never
-  *    a re-RUN of the producing pipeline.
+  *  - [[stagedPersisted]] composes the two: it takes the frame to stage,
+  *    writes it once to a staged dir, and memoizes a persisted read of
+  *    that dir. The persisted DataFrame's lineage is just the parquet
+  *    scan, so storage-pressure eviction costs a re-READ of a small
+  *    file, never a re-RUN of the producing pipeline.
   *
-  * Both memos tolerate nested builds (a builder that asks for another
+  * All three tolerate nested builds (a builder that asks for another
   * memoized artifact). Every dir created here is deleted, best effort,
   * by one JVM shutdown hook that runs after Spark's, so no path from
   * here may be used after the JVM exits (see [[tempDir]]).
@@ -95,11 +97,15 @@ object Fixtures {
     }
 
   /** Staged parquet + a memoized persisted read of it: the pattern for
-    * an expensive derived table consumed more than once per query. */
+    * an expensive derived table consumed more than once per query.
+    * `df` is evaluated (by name) only when the dir is not yet staged,
+    * and written once with `mode("overwrite")`; it may itself read
+    * another memoized artifact. */
   def stagedPersisted(spark: SparkSession, sfDir: String, tag: String)(
-      build: String => Unit): DataFrame =
+      df: => DataFrame): DataFrame =
     persisted(spark, sfDir, tag)(
-      spark.read.parquet(stagedDir(sfDir, tag)(build)).persist())
+      spark.read.parquet(stagedDir(sfDir, tag)(
+        dir => df.write.mode("overwrite").parquet(dir))).persist())
 
   /** Export a corpus table to CSV (header, canonical timestamp format)
     * and return the directory path. */

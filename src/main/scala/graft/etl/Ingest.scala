@@ -30,20 +30,21 @@ object Ingest {
     * parquet→CSV→parquet round-trips bit-identically. */
   val TsFormat = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
-  /** Read a CSV directory with an explicit schema and a malformed-row
-    * policy: PERMISSIVE (null out bad fields, optionally keep the raw
-    * line in `corruptColumn`), DROPMALFORMED, or FAILFAST. */
+  /** Read a landing-zone CSV directory: comma-delimited with a header
+    * row, timestamps in [[TsFormat]], columns typed by the explicit
+    * `schema` (no inference), and a malformed-row policy `mode`:
+    * PERMISSIVE (null out bad fields, optionally keep the raw line in
+    * `corruptColumn`), DROPMALFORMED, or FAILFAST. Another dialect
+    * (say, a `|` delimiter) reads through `spark.read` directly. */
   def readCsv(spark: SparkSession, path: String, schema: StructType,
               mode: String = "PERMISSIVE",
-              corruptColumn: Option[String] = None,
-              header: Boolean = true, delimiter: String = ","): DataFrame = {
+              corruptColumn: Option[String] = None): DataFrame = {
     val withCorrupt = corruptColumn match {
       case Some(c) => schema.add(c, org.apache.spark.sql.types.StringType)
       case None    => schema
     }
     var r = spark.read
-      .option("header", header)
-      .option("delimiter", delimiter)
+      .option("header", true)
       .option("timestampFormat", TsFormat)
       .option("mode", mode)
       .schema(withCorrupt)
@@ -103,13 +104,12 @@ object Ingest {
     spark.table(name)
   }
 
-  /** Full reference pipeline: CSV in → sanitize names → derive date
-    * partitions → partitioned snappy parquet out. Returns the staged
-    * DataFrame (re-read from the sink, as Athena would see it). */
+  /** Full reference pipeline: CSV in (PERMISSIVE) → sanitize names →
+    * derive date partitions → partitioned snappy parquet out. Returns the
+    * staged DataFrame (re-read from the sink, as Athena would see it). */
   def run(spark: SparkSession, inDir: String, outDir: String,
-          schema: StructType, tsCol: String,
-          mode: String = "PERMISSIVE"): DataFrame = {
-    val raw = readCsv(spark, inDir, schema, mode)
+          schema: StructType, tsCol: String): DataFrame = {
+    val raw = readCsv(spark, inDir, schema)
     val staged = withDatePartitions(sanitizeColumnNames(raw), tsCol)
     writeParquet(staged, outDir, partitionColumns = Seq("p_year", "p_month"))
     spark.read.parquet(outDir)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables.t
@@ -29,6 +29,16 @@ object LlmText {
   /** Whitespace-normalized, case-folded text. */
   private[graft] val NormText = "lower(trim(regexp_replace(text, '\\\\s+', ' ')))"
 
+  /** SQL for `bucket`, 0–99: the first 4 hex digits of the md5 digest
+    * `fp`, mod 100 — the hash bucket of every content-hash split and
+    * sample, stable across re-runs, engines and repartitioning. */
+  private val Bucket100 =
+    """((instr('0123456789abcdef', substring(fp, 1, 1)) - 1) * 4096 +
+            (instr('0123456789abcdef', substring(fp, 2, 1)) - 1) * 256 +
+            (instr('0123456789abcdef', substring(fp, 3, 1)) - 1) * 16 +
+            (instr('0123456789abcdef', substring(fp, 4, 1)) - 1)) % 100
+           AS bucket"""
+
   /** SQL for the number of equal positions of two MinHash signature
     * columns: the agreement every LSH estimate and prefilter counts. */
   private[graft] def sigAgreement(a: String, b: String): String =
@@ -49,6 +59,17 @@ object LlmText {
     graft.etl.Fixtures.persisted(spark, sfDir, "lsh_signed")(
       signedOn(t(spark, sfDir, "documents")).persist())
 
+  /** SQL for `sh`, a document's distinct word 3-gram shingles from its
+    * `toks = split(text, ' ')`; a document under 3 words is one
+    * shingle, its text. The shingle set of the MinHash signatures and
+    * of the PPJoin prefix table. */
+  private val Shingles3 =
+    """CASE WHEN size(toks) >= 3 THEN
+             array_distinct(transform(sequence(1, size(toks) - 2),
+               i -> concat_ws(' ', element_at(toks, i),
+                    element_at(toks, i + 1), element_at(toks, i + 2))))
+           ELSE array(text) END AS sh"""
+
   /** Signature build over an arbitrary (doc_id, text) relation — the
     * corpus-wide cached table above and `llm_dedup_eval`'s sampled
     * stratum both derive from this one definition, so the two can
@@ -61,12 +82,7 @@ object LlmText {
       // separate, so split/shingle work is per-document, not
       // per-lambda-element.
       .selectExpr("doc_id", "text", "split(text, ' ') AS toks")
-      .selectExpr("doc_id",
-        """CASE WHEN size(toks) >= 3 THEN
-             array_distinct(transform(sequence(1, size(toks) - 2),
-               i -> concat_ws(' ', element_at(toks, i),
-                    element_at(toks, i + 1), element_at(toks, i + 2))))
-           ELSE array(text) END AS sh""")
+      .selectExpr("doc_id", Shingles3)
       .select(col("doc_id"), col("sh"),
         graft.functions.TextOps.minhashSig(col("sh"), 12).as("sig"))
       .selectExpr("doc_id", "sh", "sig",
@@ -143,33 +159,37 @@ object LlmText {
         s"${sigAgreement("sig_a", "sig_b")} / cast(12 as double) AS est_jaccard")
       .orderBy("doc_a", "doc_b")
 
+  /** (doc_a, doc_b, inter, sa, sb) of candidate pairs carrying
+    * shingle arrays `sh_a`/`sh_b`. The intersection is counted ONCE
+    * through a named projection (the llm_setsim_join fix class,
+    * measured there 5.4 → 3.1 s: codegen CSE does NOT collapse a
+    * duplicated array_intersect), by the count-only
+    * [[graft.functions.IntersectSize]] kernel (r16 — no per-pair output
+    * array; value-identical, Round16Spec-pinned). Every caller reads
+    * `inter` more than once, so CollapseProject/filter-pushdown keep the
+    * projection staged. */
+  private def shingleOverlap(cands: DataFrame): DataFrame =
+    cands.select(col("doc_a"), col("doc_b"),
+      graft.functions.TextOps.intersectSize(col("sh_a"), col("sh_b"))
+        .as("inter"),
+      size(col("sh_a")).as("sa"), size(col("sh_b")).as("sb"))
+
   // ---------------------------------------------------------------------
   // llm_dedup_ngram_jaccard — exact 3-gram Jaccard, computed only on
   // LSH candidates, thresholded at 0.5 (the corpus' planted near-dups
   // score ≥0.9; unrelated docs <0.1).
   // ---------------------------------------------------------------------
   private def dedupNgramJaccard(spark: SparkSession, sfDir: String): DataFrame =
-    candidates(spark, sfDir)
+    shingleOverlap(candidates(spark, sfDir)
       // Cheap-estimate prefilter before the exact set intersection: 12
       // signature compares vs O(|sh_a|·|sh_b|) — the standard
       // filter-then-verify shape. est ≥ 0.25 keeps a true j ≥ 0.5 pair
       // with overwhelming probability (12 Bernoulli(j) trials); the
       // oracle applies the identical filter, so parity is unaffected.
-      .where(expr(sigAgreement("sig_a", "sig_b")) >= 3)
-      // intersect computed ONCE through a named projection (the
-      // llm_setsim_join fix class, measured there 5.4 → 3.1 s: codegen
-      // CSE does NOT collapse a duplicated array_intersect), via the
-      // count-only [[graft.functions.IntersectSize]] kernel (r16 — no
-      // per-pair output-array allocation; value-identical,
-      // Round16Spec-pinned). inter is multi-referenced, so
-      // CollapseProject/filter-pushdown keep the stage split; the
-      // threshold moves to the exact integer equivalent J ≥ ½ ⟺
+      .where(expr(sigAgreement("sig_a", "sig_b")) >= 3))
+      // the threshold is the exact integer equivalent J ≥ ½ ⟺
       // 3i ≥ a+b — identical row set, and the emitted double jaccard
       // is the identical division.
-      .select(col("doc_a"), col("doc_b"),
-        graft.functions.TextOps.intersectSize(col("sh_a"), col("sh_b"))
-          .as("inter"),
-        size(col("sh_a")).as("sa"), size(col("sh_b")).as("sb"))
       .where(expr("3 * inter >= sa + sb"))
       .selectExpr("doc_a", "doc_b", "inter / (sa + sb - inter) AS jaccard")
       .orderBy("doc_a", "doc_b")
@@ -188,9 +208,8 @@ object LlmText {
     * The public `llm_dedup_ngram_jaccard` key still runs the LIVE
     * pipeline — it IS the measured operator. */
   private[graft] def verifiedPairs(spark: SparkSession, sfDir: String): DataFrame =
-    graft.etl.Fixtures.stagedPersisted(spark, sfDir, "ngram_pairs") { d =>
-      dedupNgramJaccard(spark, sfDir).write.mode("overwrite").parquet(d)
-    }
+    graft.etl.Fixtures.stagedPersisted(spark, sfDir, "ngram_pairs")(
+      dedupNgramJaccard(spark, sfDir))
 
   // ---------------------------------------------------------------------
   // llm_dedup_simhash — 64-bit SimHash over distinct tokens: per bit
@@ -269,16 +288,7 @@ object LlmText {
   // set arithmetic only on candidates.
   // ---------------------------------------------------------------------
   private def minhashContainment(spark: SparkSession, sfDir: String): DataFrame =
-    candidates(spark, sfDir)
-      // intersect computed ONCE (the llm_setsim_join fix class): inter
-      // feeds BOTH containments, so the former inline form ran
-      // array_intersect twice per candidate pair — CollapseProject
-      // keeps the multi-referenced alias staged. Count-only
-      // IntersectSize kernel (r16): same value, no per-pair array.
-      .select(col("doc_a"), col("doc_b"),
-        graft.functions.TextOps.intersectSize(col("sh_a"), col("sh_b"))
-          .as("inter"),
-        size(col("sh_a")).as("sa"), size(col("sh_b")).as("sb"))
+    shingleOverlap(candidates(spark, sfDir)) // inter feeds BOTH containments
       .selectExpr("doc_a", "doc_b",
         """cast(round(inter * cast(1000000 as double) / sa) as bigint)
            AS containment_a_e6""",
@@ -459,12 +469,7 @@ object LlmText {
     dedupClusters(spark, sfDir)
       .selectExpr("doc_id", "cluster_id",
         "md5(concat(cast(cluster_id as string), '#cluster-split-salt-1')) AS fp")
-      .selectExpr("doc_id", "cluster_id",
-        """((instr('0123456789abcdef', substring(fp, 1, 1)) - 1) * 4096 +
-            (instr('0123456789abcdef', substring(fp, 2, 1)) - 1) * 256 +
-            (instr('0123456789abcdef', substring(fp, 3, 1)) - 1) * 16 +
-            (instr('0123456789abcdef', substring(fp, 4, 1)) - 1)) % 100
-           AS bucket""")
+      .selectExpr("doc_id", "cluster_id", Bucket100)
       .selectExpr("doc_id", "cluster_id", "bucket",
         """CASE WHEN bucket < 80 THEN 'train'
                 WHEN bucket < 90 THEN 'val'
@@ -518,17 +523,7 @@ object LlmText {
     * per invocation. */
   private[graft] def knnGraphRanked(spark: SparkSession, sfDir: String): DataFrame =
     graft.etl.Fixtures.persisted(spark, sfDir, "knn_edges") {
-      val jac = candidates(spark, sfDir)
-        // intersect computed ONCE (the llm_setsim_join fix class):
-        // the former inline jaccard ran array_intersect twice per
-        // candidate pair. Count-only IntersectSize kernel (r16):
-        // same value, no per-pair array. inter is referenced twice
-        // below, so CollapseProject keeps the projection staged;
-        // the double division is identical.
-        .select(col("doc_a"), col("doc_b"),
-          graft.functions.TextOps.intersectSize(col("sh_a"), col("sh_b"))
-            .as("inter"),
-          size(col("sh_a")).as("sa"), size(col("sh_b")).as("sb"))
+      val jac = shingleOverlap(candidates(spark, sfDir))
         .selectExpr("doc_a", "doc_b",
           "inter / (sa + sb - inter) AS jaccard")
       val sym = jac.select(col("doc_a").as("src"),
@@ -545,6 +540,16 @@ object LlmText {
 
   private def knnGraph(spark: SparkSession, sfDir: String): DataFrame =
     knnGraphRanked(spark, sfDir).orderBy("src", "rk")
+
+  /** (src, nbr): the kNN graph as distinct undirected edges, each in
+    * both directions, localCheckpointed for the graph keys that read it
+    * more than once (`llm_graph_linkpred`, `llm_graph_kcore`). */
+  private def knnUndirected(spark: SparkSession, sfDir: String): DataFrame = {
+    val e = knnGraphRanked(spark, sfDir).select(col("src"), col("nbr"))
+    e.unionByName(e.select(col("nbr").as("src"), col("src").as("nbr")))
+      .distinct()
+      .localCheckpoint(true)
+  }
 
   // ---------------------------------------------------------------------
   // llm_graph_hits — HITS (hubs & authorities) over the DIRECTED kNN
@@ -653,11 +658,7 @@ object LlmText {
   // the prediction set is the is_linked = false rows).
   // ---------------------------------------------------------------------
   private def graphLinkPred(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = knnGraphRanked(spark, sfDir).select(col("src"), col("nbr"))
-    val und = e
-      .unionByName(e.select(col("nbr").as("src"), col("src").as("nbr")))
-      .distinct()
-      .localCheckpoint(true) // reused by wedges (×2), degrees, exclusion
+    val und = knnUndirected(spark, sfDir) // wedges (×2), degrees, exclusion
     val deg = und.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
     val wedges = und.select(col("nbr").as("via"), col("src").as("u"))
@@ -715,6 +716,14 @@ object LlmText {
            / CAST(n_tok_p + n_terms AS DOUBLE)) AS BIGINT) AS kl_e6""")
   }
 
+  /** (node, d): each node's degree in the (doc_a, doc_b) pair graph —
+    * the one degree table of `llm_graph_modularity` and
+    * `llm_graph_assortativity`, so both grade the same graph. */
+  private def degrees(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_a").as("node"))
+      .unionAll(pairs.select(col("doc_b").as("node")))
+      .groupBy("node").agg(count(lit(1)).as("d"))
+
   // ---------------------------------------------------------------------
   // llm_graph_modularity — Newman modularity of the dedup clustering
   // against the verified near-dup graph: the one-number quality score
@@ -735,9 +744,7 @@ object LlmText {
   private def graphModularity(spark: SparkSession, sfDir: String): DataFrame = {
     val pairs = verifiedPairs(spark, sfDir).select("doc_a", "doc_b")
     val labels = dedupClusters(spark, sfDir).select("doc_id", "cluster_id")
-    val deg = pairs.select(col("doc_a").as("node"))
-      .unionAll(pairs.select(col("doc_b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
+    val deg = degrees(pairs)
     val dc = deg.join(labels.withColumnRenamed("doc_id", "node"), Seq("node"))
       .groupBy("cluster_id").agg(sum(col("d")).as("d_c"))
     val ec = pairs
@@ -789,9 +796,7 @@ object LlmText {
                                  sfDir: String): DataFrame = {
     val pairs = verifiedPairs(spark, sfDir).select("doc_a", "doc_b")
       .localCheckpoint(true) // read 3×: degrees + both endpoint joins
-    val deg = pairs.select(col("doc_a").as("node"))
-      .unionAll(pairs.select(col("doc_b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
+    val deg = degrees(pairs)
     pairs
       .join(deg.select(col("node").as("doc_a"), col("d").as("da")),
         Seq("doc_a"))
@@ -828,11 +833,7 @@ object LlmText {
   // discipline as BFS/PageRank/HITS.
   // ---------------------------------------------------------------------
   private def graphKcore(spark: SparkSession, sfDir: String): DataFrame = {
-    val e0 = knnGraphRanked(spark, sfDir).select(col("src"), col("nbr"))
-    var edges = e0
-      .unionByName(e0.select(col("nbr").as("src"), col("src").as("nbr")))
-      .distinct()
-      .localCheckpoint(true)
+    var edges = knnUndirected(spark, sfDir)
     for (_ <- 1 to 4) {
       val keep = edges.groupBy("src").agg(count(lit(1)).as("deg"))
         .where(col("deg") >= 2)
@@ -1327,13 +1328,11 @@ object LlmText {
   private[graft] def uniSeedParts(spark: SparkSession,
                            sfDir: String): (DataFrame, DataFrame) = {
     val words = graft.etl.Fixtures.stagedPersisted(spark, sfDir,
-      "unigram_vocab") { d =>
+      "unigram_vocab")(
       t(spark, sfDir, "documents")
         .select(explode(split(col("text"), " ")).as("w"))
         .where(length(col("w")) > 0)
-        .groupBy("w").agg(count(lit(1)).as("freq"))
-        .write.mode("overwrite").parquet(d)
-    }
+        .groupBy("w").agg(count(lit(1)).as("freq")))
     val subs = words.selectExpr("w", "freq",
         s"""explode(flatten(transform(sequence(1, length(w)),
              i -> filter(transform(sequence(1, $UniMaxPiece),
@@ -1348,51 +1347,68 @@ object LlmText {
     (words, seed)
   }
 
-  private def unigramLmTrain(spark: SparkSession, sfDir: String): DataFrame = {
-    val (words, seed) = uniSeedParts(spark, sfDir)
-    // bounded collect (≤ 192 + alphabet); StrictMath.log is the exact
-    // function Spark's own ln() evaluates, so the driver-computed cost
-    // equals what an in-plan ln would produce — and the DuckDB twin's
-    // ln, equal across the suite's LM keys by the same convention
-    val seedRows = seed.collect()
-      .map(r => (r.getString(0), r.getLong(1)))
+  /** −ln-cost (e6) of each seed piece from its seed weight, after one
+    * bounded collect (≤ 192 + alphabet). StrictMath.log is the exact
+    * function Spark's own ln() evaluates, so the driver-computed cost
+    * equals what an in-plan ln would produce — and the DuckDB twin's
+    * ln, equal across the suite's LM keys by the same convention. */
+  private def seedCosts(seed: DataFrame): Map[String, Long] = {
+    val seedRows = seed.collect().map(r => (r.getString(0), r.getLong(1)))
     val total = seedRows.map(_._2).sum
-    val costs: Map[String, Long] =
-      seedRows.map { case (p, wt) => p -> lnCostE6(wt, total) }.toMap
-    // E-step 1 + bounded collect of the usage counts (the aggregation
-    // is seed-bounded: ≤ ~250 pieces — same metadata class as `seed`)
-    val usage1: Map[String, Long] = viterbiUsage(words, costs).collect()
+    seedRows.map { case (p, wt) => p -> lnCostE6(wt, total) }.toMap
+  }
+
+  /** E-step + bounded collect of the usage counts (the aggregation is
+    * seed-bounded: ≤ ~250 pieces — same metadata class as the seed). */
+  private def usageOf(words: DataFrame,
+                      costs: Map[String, Long]): Map[String, Long] =
+    viterbiUsage(words, costs).collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap
-    // M-step: re-estimated costs from round-1 usage. The +1 floor on
-    // single-char usage keeps the coverage alphabet costed even when
-    // the optimal paths never used a char alone (ε-smoothing — the
-    // same reason production trainers never prune the char set).
+
+  /** M-step: costs re-estimated from `usage`; zero-usage pieces fall
+    * out. The +1 floor on single-char usage keeps the coverage alphabet
+    * costed even when the optimal paths never used a char alone
+    * (ε-smoothing — the same reason production trainers never prune
+    * the char set). */
+  private def reestimated(costs: Map[String, Long],
+                          usage: Map[String, Long]): Map[String, Long] = {
     val eff: Map[String, Long] = costs.keysIterator.flatMap { p =>
-      val u = usage1.getOrElse(p, 0L)
+      val u = usage.getOrElse(p, 0L)
       val e = if (p.length == 1) math.max(u, 1L) else u
       if (e > 0) Some(p -> e) else None
     }.toMap
-    val tot2 = eff.values.sum
-    val costs2: Map[String, Long] =
-      eff.map { case (p, u) => p -> lnCostE6(u, tot2) }
-    // PRUNE: usage-weighted loss delta = (best alternative segmentation
-    // cost − own cost) × usage; the all-single-chars composition
-    // guarantees an alternative exists. Bottom ⌈1/UniPruneDen⌉ of live
-    // multi-char pieces dropped (ties toward the lexicographically
-    // smaller piece — deterministic in both engines).
-    val multi = costs2.keys.filter(_.length >= 2).toSeq
+    val tot = eff.values.sum
+    eff.map { case (p, u) => p -> lnCostE6(u, tot) }
+  }
+
+  /** The multi-char pieces of `costs` in prune order: ascending
+    * usage-weighted loss delta = (best alternative segmentation cost −
+    * own cost) × usage, ties toward the lexicographically smaller piece
+    * (deterministic in both engines). The all-single-chars composition
+    * guarantees an alternative exists. */
+  private def pruneOrder(costs: Map[String, Long],
+                         usage: Map[String, Long]): Seq[String] = {
+    val multi = costs.keys.filter(_.length >= 2).toSeq
     val lossDelta: Map[String, Long] = multi.map { p =>
       val alt = UniProperComps(p.length).flatMap { comp =>
         val cs = comp.map { case (s, l) =>
-          costs2.get(p.substring(s - 1, s - 1 + l)) }
+          costs.get(p.substring(s - 1, s - 1 + l)) }
         if (cs.forall(_.isDefined)) Some(cs.flatten.sum) else None
       }.min
-      p -> (alt - costs2(p)) * usage1(p)
+      p -> (alt - costs(p)) * usage(p)
     }.toMap
-    val nPrune = (multi.size + UniPruneDen - 1) / UniPruneDen
-    val prunedMulti: Set[String] =
-      multi.sortBy(p => (lossDelta(p), p)).take(nPrune).toSet
-    val costs3 = costs2 -- prunedMulti
+    multi.sortBy(p => (lossDelta(p), p))
+  }
+
+  private def unigramLmTrain(spark: SparkSession, sfDir: String): DataFrame = {
+    val (words, seed) = uniSeedParts(spark, sfDir)
+    val costs = seedCosts(seed)
+    val usage1 = usageOf(words, costs)
+    val costs2 = reestimated(costs, usage1)
+    // PRUNE: bottom ⌈1/UniPruneDen⌉ of live multi-char pieces
+    val ranked = pruneOrder(costs2, usage1)
+    val nPrune = (ranked.size + UniPruneDen - 1) / UniPruneDen
+    val costs3 = costs2 -- ranked.take(nPrune)
     // pruned = everything the round removed from the seed: zero-usage
     // pieces (never entered the live vocabulary) + the loss-ranked cut
     val prunedAll: Set[String] = costs.keySet -- costs3.keySet
@@ -1444,39 +1460,18 @@ object LlmText {
 
   private def unigramVocabTrain(spark: SparkSession, sfDir: String): DataFrame = {
     val (words, seed) = uniSeedParts(spark, sfDir)
-    val seedRows = seed.collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    val total = seedRows.map(_._2).sum
-    var costs: Map[String, Long] =
-      seedRows.map { case (p, wt) => p -> lnCostE6(wt, total) }.toMap
-    val target = seedRows.count(_._1.length == 1) + UniVocabMulti
+    var costs = seedCosts(seed)
+    val target = costs.keys.count(_.length == 1) + UniVocabMulti
     val dropRound = scala.collection.mutable.Map.empty[String, Long]
     for (r <- 1 to UniVocabRounds) {
       // E-step: corpus-weighted piece usage under the live vocabulary
-      val usage: Map[String, Long] = viterbiUsage(words, costs).collect()
-        .map(row => (row.getString(0), row.getLong(1))).toMap
-      // M-step: zero-usage pieces fall out (chars keep the +1 floor)
-      val eff: Map[String, Long] = costs.keysIterator.flatMap { p =>
-        val u = usage.getOrElse(p, 0L)
-        val e = if (p.length == 1) math.max(u, 1L) else u
-        if (e > 0) Some(p -> e) else None
-      }.toMap
-      costs.keysIterator.filterNot(eff.contains)
+      val usage = usageOf(words, costs)
+      val costs2 = reestimated(costs, usage)
+      costs.keysIterator.filterNot(costs2.contains)
         .foreach(p => if (!dropRound.contains(p)) dropRound(p) = r.toLong)
-      val tot2 = eff.values.sum
-      val costs2: Map[String, Long] =
-        eff.map { case (p, u) => p -> lnCostE6(u, tot2) }
       // prune toward target: bottom-loss multi pieces, at most the
       // excess over V, at most the usual 1/UniPruneDen round cut
-      val multi = costs2.keys.filter(_.length >= 2).toSeq
-      val lossDelta: Map[String, Long] = multi.map { p =>
-        val alt = UniProperComps(p.length).flatMap { comp =>
-          val cs = comp.map { case (s, l) =>
-            costs2.get(p.substring(s - 1, s - 1 + l)) }
-          if (cs.forall(_.isDefined)) Some(cs.flatten.sum) else None
-        }.min
-        p -> (alt - costs2(p)) * usage(p)
-      }.toMap
+      val ranked = pruneOrder(costs2, usage)
       // rounds 1..R−1 cut gently (≤ 1/UniPruneDen of multi pieces —
       // the EM stability convention); the FINAL round trims exactly to
       // target (SentencePiece's last-round behavior), which is what
@@ -1485,8 +1480,8 @@ object LlmText {
       val excess = math.max(costs2.size - target, 0)
       val nDrop =
         if (r == UniVocabRounds) excess
-        else math.min((multi.size + UniPruneDen - 1) / UniPruneDen, excess)
-      val dropped = multi.sortBy(p => (lossDelta(p), p)).take(nDrop)
+        else math.min((ranked.size + UniPruneDen - 1) / UniPruneDen, excess)
+      val dropped = ranked.take(nDrop)
       dropped.foreach(p => if (!dropRound.contains(p)) dropRound(p) = r.toLong)
       costs = costs2 -- dropped
     }
@@ -1612,12 +1607,7 @@ object LlmText {
   private def sampleSplit(spark: SparkSession, sfDir: String): DataFrame =
     t(spark, sfDir, "documents")
       .selectExpr("doc_id", s"md5(concat($NormText, '#split-salt-1')) AS fp")
-      .selectExpr("doc_id",
-        """((instr('0123456789abcdef', substring(fp, 1, 1)) - 1) * 4096 +
-            (instr('0123456789abcdef', substring(fp, 2, 1)) - 1) * 256 +
-            (instr('0123456789abcdef', substring(fp, 3, 1)) - 1) * 16 +
-            (instr('0123456789abcdef', substring(fp, 4, 1)) - 1)) % 100
-           AS bucket""")
+      .selectExpr("doc_id", Bucket100)
       .selectExpr("doc_id", "bucket",
         """CASE WHEN bucket < 80 THEN 'train'
                 WHEN bucket < 90 THEN 'val'
@@ -1721,6 +1711,14 @@ object LlmText {
       .orderBy(col("freq").desc, col("bigram"))
       .limit(20)
 
+  /** (w, n_w): corpus token counts, staged once per (JVM, sfDir) — the
+    * vocabulary of `llm_cooccurrence_pmi` and `llm_bigram_lm_score`. */
+  private def unigramCounts(spark: SparkSession, sfDir: String): DataFrame =
+    graft.etl.Fixtures.stagedPersisted(spark, sfDir, "pmi_unigram_counts")(
+      t(spark, sfDir, "documents")
+        .selectExpr("explode(split(text, ' ')) AS w")
+        .groupBy("w").agg(count(lit(1)).as("n_w")))
+
   // ---------------------------------------------------------------------
   // llm_cooccurrence_pmi — pointwise mutual information of token pairs
   // within a ±2 skip-gram window: the word2vec/GloVe-style association
@@ -1767,17 +1765,9 @@ object LlmText {
     // (Formerly .persist() with no unpersist — leaked one cached copy
     // per invocation, ADVICE r6.)
     val pc = graft.etl.Fixtures.stagedPersisted(spark, sfDir,
-      "pmi_pair_counts") {
-      d => pairs.groupBy("w1", "w2").agg(count(lit(1)).as("n_xy"))
-        .write.mode("overwrite").parquet(d)
-    }
-    val uni = graft.etl.Fixtures.stagedPersisted(spark, sfDir,
-      "pmi_unigram_counts") {
-      d => t(spark, sfDir, "documents")
-        .selectExpr("explode(split(text, ' ')) AS w")
-        .groupBy("w").agg(count(lit(1)).as("n_w"))
-        .write.mode("overwrite").parquet(d)
-    }
+      "pmi_pair_counts")(
+      pairs.groupBy("w1", "w2").agg(count(lit(1)).as("n_xy")))
+    val uni = unigramCounts(spark, sfDir)
     // totals derive from the already-aggregated tables (Σ n_xy, Σ n_w)
     // — counting the raw explodes again would scan the corpus twice
     val totals = pc.agg(sum(col("n_xy")).as("n_pairs"))
@@ -1836,12 +1826,7 @@ object LlmText {
     t(spark, sfDir, "documents")
       .selectExpr("doc_id", "lang",
         s"md5(concat($NormText, '#strat-salt-1')) AS fp")
-      .selectExpr("doc_id", "lang",
-        """((instr('0123456789abcdef', substring(fp, 1, 1)) - 1) * 4096 +
-            (instr('0123456789abcdef', substring(fp, 2, 1)) - 1) * 256 +
-            (instr('0123456789abcdef', substring(fp, 3, 1)) - 1) * 16 +
-            (instr('0123456789abcdef', substring(fp, 4, 1)) - 1)) % 100
-           AS bucket""")
+      .selectExpr("doc_id", "lang", Bucket100)
       .where(expr(
         "bucket < CASE lang WHEN 'en' THEN 10 WHEN 'zh' THEN 50 ELSE 30 END"))
       .orderBy("doc_id")
@@ -1854,9 +1839,16 @@ object LlmText {
   // rounded to 1e-6 and summed as scaled bigints, so the per-document
   // average is independent of shuffle order and engine libm ulps.
   // ---------------------------------------------------------------------
-  private def unigramLogprob(spark: SparkSession, sfDir: String): DataFrame = {
-    val toks = t(spark, sfDir, "documents")
-      .selectExpr("doc_id", "explode(split(text, ' ')) AS tok")
+  private def unigramLogprob(spark: SparkSession, sfDir: String): DataFrame =
+    docAvgLp(tokenLogprobs(t(spark, sfDir, "documents")), "lp", "n_tokens",
+      "avg_logprob")
+
+  /** (tok, doc_id, lp): every token of `docs` with its unigram
+    * log-prob under the `docs` model, rounded to 1e-6 as a scaled
+    * bigint — the scorer of `llm_unigram_logprob` and
+    * `llm_perplexity_bucket`. */
+  private def tokenLogprobs(docs: DataFrame): DataFrame = {
+    val toks = docs.selectExpr("doc_id", "explode(split(text, ' ')) AS tok")
     val freq = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
     val total = freq.agg(sum(col("cnt")).as("total"))
     val lp = freq.crossJoin(broadcast(total))
@@ -1864,13 +1856,19 @@ object LlmText {
         """cast(round(ln(cast(cnt as double) / cast(total as double))
                       * cast(1000000 as double)) as bigint) AS lp""")
     toks.join(broadcast(lp), Seq("tok"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tokens"), sum(col("lp")).as("s"))
-      .select(col("doc_id"), col("n_tokens"),
-        (col("s").cast("double") / lit(1000000).cast("double") /
-          col("n_tokens")).as("avg_logprob"))
-      .orderBy("doc_id")
   }
+
+  /** Per-document count `n` and average of the e6-scaled log-prob
+    * column `lp` over `scored` rows (doc_id, …, lp), as `avg`: the sum
+    * is exact, so the average is independent of shuffle order. */
+  private def docAvgLp(scored: DataFrame, lp: String, n: String,
+                       avg: String): DataFrame =
+    scored.groupBy("doc_id")
+      .agg(count(lit(1)).as(n), sum(col(lp)).as("s"))
+      .select(col("doc_id"), col(n),
+        (col("s").cast("double") / lit(1000000).cast("double") /
+          col(n)).as(avg))
+      .orderBy("doc_id")
 
   // ---------------------------------------------------------------------
   // llm_dsir_weight — DSIR (Data Selection via Importance Resampling,
@@ -1951,14 +1949,7 @@ object LlmText {
   // ---------------------------------------------------------------------
   private def perplexityBucket(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = t(spark, sfDir, "documents")
-    val toks = docs.selectExpr("doc_id", "explode(split(text, ' ')) AS tok")
-    val freq = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-    val total = freq.agg(sum(col("cnt")).as("total"))
-    val lp = freq.crossJoin(broadcast(total))
-      .selectExpr("tok",
-        """cast(round(ln(cast(cnt as double) / cast(total as double))
-                      * cast(1000000 as double)) as bigint) AS lp""")
-    val scored = toks.join(broadcast(lp), Seq("tok"))
+    val scored = tokenLogprobs(docs)
       .groupBy("doc_id")
       .agg(sum(col("lp")).as("s"), count(lit(1)).as("n"))
       .join(docs.select("doc_id", "lang"), Seq("doc_id"))
@@ -2429,7 +2420,13 @@ object LlmText {
              element_at(t, pos + 2), element_at(t, pos + 3),
              element_at(t, pos + 4))) AS h""")
 
-  private def substringDedup(spark: SparkSession, sfDir: String): DataFrame = {
+  /** (doc_id, grp, span_start, span_end, n_grams, extra…): each
+    * document's maximal runs of 5-grams whose hash occurs in ≥ 2
+    * documents — the duplicated-hash semi-join, then the
+    * gaps-and-islands grouping (pos − row_number) — with the `extra`
+    * per-span aggregates. */
+  private def dupSpans(spark: SparkSession, sfDir: String,
+                       extra: Column*): DataFrame = {
     val grams = gramTable5(spark, sfDir)
     val dupHashes = grams.groupBy("h")
       .agg(countDistinct(col("doc_id")).as("nd"))
@@ -2440,11 +2437,14 @@ object LlmText {
         row_number().over(Window.partitionBy("doc_id").orderBy("pos")))
       .groupBy("doc_id", "grp")
       .agg(min(col("pos")).as("span_start"),
-        (max(col("pos")) + lit(4)).as("span_end"),
-        count(lit(1)).as("n_grams"))
+        Seq((max(col("pos")) + lit(4)).as("span_end"),
+          count(lit(1)).as("n_grams")) ++ extra: _*)
+  }
+
+  private def substringDedup(spark: SparkSession, sfDir: String): DataFrame =
+    dupSpans(spark, sfDir)
       .select("doc_id", "span_start", "span_end", "n_grams")
       .orderBy("doc_id", "span_start")
-  }
 
   // ---------------------------------------------------------------------
   // llm_span_attribution — the dedup DECISION llm_substring_dedup stops
@@ -2482,23 +2482,12 @@ object LlmText {
     * `llm_span_quality_gate` riding it, exactly as their oracles share
     * [[SpanGroupsCte]] verbatim. */
   private def attributedSpans(spark: SparkSession, sfDir: String): DataFrame = {
-    val grams = gramTable5(spark, sfDir)
-    val dupHashes = grams.groupBy("h")
-      .agg(countDistinct(col("doc_id")).as("nd"))
-      .where(col("nd") >= 2)
-      .select("h")
-    val spans = grams.join(dupHashes, Seq("h"), "left_semi")
-      .withColumn("grp", col("pos") -
-        row_number().over(Window.partitionBy("doc_id").orderBy("pos")))
-      .groupBy("doc_id", "grp")
-      .agg(min(col("pos")).as("span_start"),
-        (max(col("pos")) + lit(4)).as("span_end"),
-        count(lit(1)).as("n_grams"),
-        // pos is unique within a doc, so the struct sort is a total
-        // order and the fingerprint fold is deterministic
-        expr("""md5(concat_ws('|',
-               transform(array_sort(collect_list(struct(pos, h))),
-                         x -> x.h)))""").as("span_fp"))
+    val spans = dupSpans(spark, sfDir,
+      // pos is unique within a doc, so the struct sort is a total
+      // order and the fingerprint fold is deterministic
+      expr("""md5(concat_ws('|',
+             transform(array_sort(collect_list(struct(pos, h))),
+                       x -> x.h)))""").as("span_fp"))
       // span-set-sized (a vanishing fraction of the corpus) and read
       // TWICE — by the keeper election and by the final join. Without
       // the barrier Catalyst re-derives the whole corpus-sized gram
@@ -2950,10 +2939,7 @@ object LlmText {
     // LlmVector ivf_index), so the key times candidate build + verify,
     // the part that is the join.
     ppjoinVerify(graft.etl.Fixtures.stagedPersisted(spark, sfDir,
-      "ppjoin_prefix") { d =>
-      ppjoinPrefixOn(t(spark, sfDir, "documents"))
-        .write.mode("overwrite").parquet(d)
-    })
+      "ppjoin_prefix")(ppjoinPrefixOn(t(spark, sfDir, "documents"))))
   }
 
   /** Stage 1 of the PPJoin: per-doc shingle list in global rarest-first
@@ -2966,15 +2952,10 @@ object LlmText {
     * with both endpoints in the filter (what `llm_dedup_eval`'s sampled
     * stratum relies on). */
   private def ppjoinPrefixOn(docs: DataFrame): DataFrame = {
-    // shingle derivation identical to the LSH pipeline's (signed/cand)
+    // the LSH pipeline's shingles (signedOn)
     val shs = docs
-      .selectExpr("doc_id", "text", "split(text, ' ') AS tk")
-      .selectExpr("doc_id",
-        """CASE WHEN size(tk) >= 3 THEN
-             array_distinct(transform(sequence(1, size(tk) - 2),
-               i -> concat_ws(' ', element_at(tk, i), element_at(tk, i + 1),
-                    element_at(tk, i + 2))))
-           ELSE array(text) END AS sh""")
+      .selectExpr("doc_id", "text", "split(text, ' ') AS toks")
+      .selectExpr("doc_id", Shingles3)
     val tok = shs.selectExpr("doc_id", "explode(sh) AS s")
     val dfT = tok.groupBy("s").agg(count(lit(1)).as("df"))
     // Per-doc shingle list in global (df, s) order. array_sort on a
@@ -3371,14 +3352,11 @@ object LlmText {
     // A production audit stack stages the verified truth log once —
     // the embedPairs/verifiedPairs precedent exactly; the LIVE PPJoin
     // operator stays measured as llm_setsim_join.
-    graft.etl.Fixtures.stagedPersisted(spark, sfDir, "stratum_truth") { d =>
+    graft.etl.Fixtures.stagedPersisted(spark, sfDir, "stratum_truth")(
       ppjoinVerify(graft.etl.Fixtures.stagedPersisted(spark, sfDir,
-        "ppjoin_prefix_strat") { dd =>
-        ppjoinPrefixOn(t(spark, sfDir, "documents").where(expr(EvalStratum)))
-          .write.mode("overwrite").parquet(dd)
-      }).select("doc_a", "doc_b")
-        .write.mode("overwrite").parquet(d)
-    }
+        "ppjoin_prefix_strat")(ppjoinPrefixOn(
+          t(spark, sfDir, "documents").where(expr(EvalStratum)))))
+        .select("doc_a", "doc_b"))
 
   /** Shared stratum-audit inputs: the exact PPJoin truth (flagged
     * `in_truth`) and every LSH candidate pair's signature-agreement
@@ -3408,16 +3386,13 @@ object LlmText {
     // histogram. Eviction re-READS pair-set-sized parquet, never
     // re-runs the band join.
     val predn = graft.etl.Fixtures.stagedPersisted(spark, sfDir,
-      "stratum_agreement") { d =>
-      val docs = t(spark, sfDir, "documents").where(expr(EvalStratum))
+      "stratum_agreement") {
       val s = graft.etl.Fixtures.stagedPersisted(spark, sfDir,
-        "signed_strat") {
-        dd => signedOn(docs).write.mode("overwrite").parquet(dd)
-      }
+        "signed_strat")(signedOn(
+          t(spark, sfDir, "documents").where(expr(EvalStratum))))
       candidatesFrom(s)
         .selectExpr("doc_a", "doc_b",
           s"${sigAgreement("sig_a", "sig_b")} AS n_agree")
-        .write.mode("overwrite").parquet(d)
     }
     (truth, predn)
   }
@@ -3646,38 +3621,27 @@ object LlmText {
       .selectExpr("doc_id", "element_at(tk, i) AS p",
         "element_at(tk, i + 1) AS w")
 
+  /** (p, w, n_pw): corpus bigram counts, staged once per (JVM, sfDir)
+    * — the LM artifact a production scoring pipeline stages anyway;
+    * without staging, the scoring join's LM side re-explodes the
+    * corpus on every invocation. Read by `llm_bigram_lm_score` and
+    * `llm_kneser_ney_score`. */
+  private def bigramCounts(spark: SparkSession, sfDir: String): DataFrame =
+    graft.etl.Fixtures.stagedPersisted(spark, sfDir, "bigram_counts")(
+      bigramPairs(spark, sfDir).groupBy("p", "w")
+        .agg(count(lit(1)).as("n_pw")))
+
   private def bigramLmScore(spark: SparkSession, sfDir: String): DataFrame = {
-    val bi = bigramPairs(spark, sfDir)
-    // Count tables staged to parquet once per (JVM, sfDir) — the same
-    // discipline as cooccurPmi's pc/uni tables (they are the LM
-    // artifacts a production scoring pipeline stages anyway, and
-    // without staging the scoring join's LM side re-explodes the
-    // corpus on every invocation).
-    val bc = graft.etl.Fixtures.stagedPersisted(spark, sfDir,
-      "bigram_counts") {
-      d => bi.groupBy("p", "w").agg(count(lit(1)).as("n_pw"))
-        .write.mode("overwrite").parquet(d)
-    }
+    val bc = bigramCounts(spark, sfDir)
     val ctx = bc.groupBy("p").agg(sum(col("n_pw")).as("n_p"))
-    val vocab = graft.etl.Fixtures.stagedPersisted(spark, sfDir,
-      "pmi_unigram_counts") {
-      d => t(spark, sfDir, "documents")
-        .selectExpr("explode(split(text, ' ')) AS w")
-        .groupBy("w").agg(count(lit(1)).as("n_w"))
-        .write.mode("overwrite").parquet(d)
-    }.agg(count(lit(1)).as("v"))
+    val vocab = unigramCounts(spark, sfDir).agg(count(lit(1)).as("v"))
     val lm = bc.join(ctx, Seq("p")).crossJoin(broadcast(vocab))
       .selectExpr("p", "w",
         """cast(round(ln(CAST(2 * n_pw + 1 AS DOUBLE) /
                          CAST(2 * n_p + v AS DOUBLE))
                       * 1000000.0) AS BIGINT) AS lp_e6""")
-    bi.join(lm, Seq("p", "w"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("lp_e6")).as("s"))
-      .select(col("doc_id"), col("n_bigrams"),
-        (col("s").cast("double") / lit(1000000).cast("double") /
-          col("n_bigrams")).as("avg_bigram_lp"))
-      .orderBy("doc_id")
+    docAvgLp(bigramPairs(spark, sfDir).join(lm, Seq("p", "w")), "lp_e6",
+      "n_bigrams", "avg_bigram_lp")
   }
 
   // ---------------------------------------------------------------------
@@ -3700,12 +3664,7 @@ object LlmText {
   // — shuffle-order- and libm-ulp-independent like every LM key.
   // ---------------------------------------------------------------------
   private def kneserNeyScore(spark: SparkSession, sfDir: String): DataFrame = {
-    val bi = bigramPairs(spark, sfDir)
-    val bc = graft.etl.Fixtures.stagedPersisted(spark, sfDir,
-      "bigram_counts") {
-      d => bi.groupBy("p", "w").agg(count(lit(1)).as("n_pw"))
-        .write.mode("overwrite").parquet(d)
-    }
+    val bc = bigramCounts(spark, sfDir)
     val ctx = bc.groupBy("p")
       .agg(sum(col("n_pw")).as("n_p"), count(lit(1)).as("n1p"))
     val wst = bc.groupBy("w").agg(count(lit(1)).as("n1w"))
@@ -3718,13 +3677,8 @@ object LlmText {
              CAST(3 * n1p AS DOUBLE) / CAST(4 * n_p AS DOUBLE) *
              (CAST(n1w AS DOUBLE) / CAST(b AS DOUBLE)))
              * 1000000.0) AS BIGINT) AS lp_e6""")
-    bi.join(lm, Seq("p", "w"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("lp_e6")).as("s"))
-      .select(col("doc_id"), col("n_bigrams"),
-        (col("s").cast("double") / lit(1000000).cast("double") /
-          col("n_bigrams")).as("avg_kn_lp"))
-      .orderBy("doc_id")
+    docAvgLp(bigramPairs(spark, sfDir).join(lm, Seq("p", "w")), "lp_e6",
+      "n_bigrams", "avg_kn_lp")
   }
 
   // ---------------------------------------------------------------------
@@ -3842,25 +3796,36 @@ object LlmText {
   // small diameter within components anyway; the verdict's blast
   // radius rarely exceeds the component).
   // ---------------------------------------------------------------------
-  private def contaminationReach(spark: SparkSession, sfDir: String): DataFrame = {
+  private def contaminationReach(spark: SparkSession, sfDir: String): DataFrame =
+    reachedFrom(spark, sfDir,
+      t(spark, sfDir, "documents")
+        .where(col("doc_id") % 100 === 0)
+        .select(col("doc_id").as("node"))
+        .withColumn("depth", lit(0)),
+      "depth", _ + 1)
+      .select(col("node").as("doc_id"), col("depth"))
+      .orderBy("doc_id")
+
+  /** The 3-round multi-source BFS of the contamination keys over the
+    * undirected verified near-dup graph: `seeds` is (node, `f`), and
+    * each round reaches one hop further, carrying per node the min of
+    * `f`, advanced by `hop` per edge. Edges, seeds and every round are
+    * localCheckpointed, so the plan stays round-sized. */
+  private def reachedFrom(spark: SparkSession, sfDir: String,
+                          seeds: DataFrame, f: String,
+                          hop: Column => Column): DataFrame = {
     val edges = undirected(verifiedPairs(spark, sfDir), "doc_a", "doc_b")
       .localCheckpoint(true)
-    var reached = t(spark, sfDir, "documents")
-      .where(col("doc_id") % 100 === 0)
-      .select(col("doc_id").as("node"))
-      .withColumn("depth", lit(0))
-      .localCheckpoint(true)
+    var reached = seeds.localCheckpoint(true)
     for (_ <- 1 to 3) {
       val expanded = edges
-        .join(reached.select(col("node").as("src"), col("depth")),
-          Seq("src"))
-        .select(col("dst").as("node"), (col("depth") + 1).as("depth"))
+        .join(reached.select(col("node").as("src"), col(f)), Seq("src"))
+        .select(col("dst").as("node"), hop(col(f)).as(f))
       reached = reached.unionByName(expanded)
-        .groupBy("node").agg(min(col("depth")).cast("int").as("depth"))
+        .groupBy("node").agg(min(col(f)).as(f))
         .localCheckpoint(true)
     }
-    reached.select(col("node").as("doc_id"), col("depth"))
-      .orderBy("doc_id")
+    reached
   }
 
   // ---------------------------------------------------------------------
@@ -3890,22 +3855,12 @@ object LlmText {
   // ---------------------------------------------------------------------
   private def contaminationDirection(spark: SparkSession,
                                      sfDir: String): DataFrame = {
-    val edges = undirected(verifiedPairs(spark, sfDir), "doc_a", "doc_b")
-      .localCheckpoint(true)
     val docs = t(spark, sfDir, "documents")
     val T = 1000000000000L // depth stride: c = depth*T + seed
-    var reached = docs
-      .where(col("doc_id") % 100 === 0)
-      .selectExpr("doc_id AS node", "doc_id AS c")
-      .localCheckpoint(true)
-    for (_ <- 1 to 3) {
-      val expanded = edges
-        .join(reached.select(col("node").as("src"), col("c")), Seq("src"))
-        .select(col("dst").as("node"), (col("c") + lit(T)).as("c"))
-      reached = reached.unionByName(expanded)
-        .groupBy("node").agg(min(col("c")).as("c"))
-        .localCheckpoint(true)
-    }
+    val reached = reachedFrom(spark, sfDir,
+      docs.where(col("doc_id") % 100 === 0)
+        .selectExpr("doc_id AS node", "doc_id AS c"),
+      "c", _ + lit(T))
     val contaminated = reached
       .selectExpr("node", s"CAST(c DIV $T AS INT) AS depth",
         s"c % $T AS seed")

@@ -355,14 +355,12 @@ object LlmVector {
   // identical top-50 — staging cannot drift the results.
   // ---------------------------------------------------------------------
   private def lshIndexDF(spark: SparkSession, sfDir: String): DataFrame =
-    graft.etl.Fixtures.stagedPersisted(spark, sfDir, "lsh_index") { d =>
+    graft.etl.Fixtures.stagedPersisted(spark, sfDir, "lsh_index")(
       // cluster by hash table and lay rows out bucket-contiguous: the
       // probe's (tbl, bucket) self-join reads runs, not scattered rows
       lshBucketLong(spark, sfDir)
         .repartition(col("tbl"))
-        .sortWithinPartitions("tbl", "bucket")
-        .write.mode("overwrite").parquet(d)
-    }
+        .sortWithinPartitions("tbl", "bucket"))
 
   private def annLshPersisted(spark: SparkSession, sfDir: String): DataFrame =
     lshScoredCandidatesOf(spark, sfDir, lshIndexDF(spark, sfDir))
@@ -755,16 +753,13 @@ object LlmVector {
     * public `llm_embed_neardup_lsh` and the audit keys stay live where
     * they ARE the measured operator. */
   private[graft] def embedPairs(spark: SparkSession, sfDir: String): DataFrame =
-    graft.etl.Fixtures.stagedPersisted(spark, sfDir, "embed_pairs") { d =>
-      embedNeardupLsh(spark, sfDir).write.mode("overwrite").parquet(d)
-    }
+    graft.etl.Fixtures.stagedPersisted(spark, sfDir, "embed_pairs")(
+      embedNeardupLsh(spark, sfDir))
 
   private def embedClusterLabels(spark: SparkSession,
                                  sfDir: String): DataFrame =
     graft.etl.Fixtures.stagedPersisted(spark, sfDir,
-      "embed_cluster_labels") { d =>
-      embedClusterUncached(spark, sfDir).write.mode("overwrite").parquet(d)
-    }
+      "embed_cluster_labels")(embedClusterUncached(spark, sfDir))
 
   // ---------------------------------------------------------------------
   // llm_bitext_margin — margin-based bitext mining (the CCMatrix /
@@ -1894,12 +1889,10 @@ object LlmVector {
     * built once per JVM and persisted once per session. */
   private def ppmImages(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.etl.Fixtures.stagedPersisted(spark, sfDir, "ppm_images") { dir =>
+    graft.etl.Fixtures.stagedPersisted(spark, sfDir, "ppm_images")(
       t(spark, sfDir, "documents").select("doc_id").as[Long]
         .mapPartitions(it => it.map(id => (id, ppmBytes(id))))
-        .toDF("doc_id", "img")
-        .write.mode("overwrite").parquet(dir)
-    }
+        .toDF("doc_id", "img"))
   }
 
   /** (doc_id, b0..b3): the 4 dHash band ints of each staged image. */

@@ -11,8 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * session, no streaming query is run outside
   * StreamingQ.runAvailableNow, every kernel's generated code calls
   * its Scala loop through Kernel.callCompute, only LlmVector.Cents
-  * calls the centroid kernels or ranks cells on the driver, and only
-  * plans/SingleSplitRule.scala reads the split budget. */
+  * calls the centroid kernels or ranks cells on the driver, only
+  * plans/SingleSplitRule.scala reads the split budget, and each literal
+  * memo tag of Fixtures has one call site, so one builder defines each
+  * staged or persisted artifact. */
 class ArchitectureSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -75,6 +77,29 @@ class ArchitectureSpec extends AnyFunSuite {
       Seq(raw"filesMaxPartitionBytes".r, raw"FilePartition\s*\.\s*maxSplitBytes".r))
     assert(found.isEmpty,
       s"split budget read outside graft.plans.SingleSplitRule: ${found.mkString("; ")}")
+  }
+
+  test("each literal Fixtures memo tag has exactly one call site") {
+    // two builders under one tag would serve whichever ran first in the
+    // session; an interpolated tag (s"csv_$table") is one builder per
+    // family and is not counted
+    val tagged = raw"\b(?:stagedDir|persisted|stagedPersisted)\s*\(" +
+      raw"\s*[^()\x22]*?[,\s]\x22([^\x22]*)\x22\s*\)"
+    val walk = Files.walk(root)
+    val sites = try walk.iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = Files.readString(p)
+        tagged.r.findAllMatchIn(src).map(m =>
+          m.group(1) -> s"$p:${src.take(m.start).count(_ == '\n') + 1}")
+      }.toList
+    finally walk.close()
+    val repeated = sites.groupBy(_._1).toSeq.sortBy(_._1).collect {
+      case (tag, at) if at.length > 1 => s"$tag at ${at.map(_._2).mkString(", ")}"
+    }
+    assert(sites.length >= 30, s"only ${sites.length} memo tags found")
+    assert(repeated.isEmpty,
+      s"memo tags with more than one call site: ${repeated.mkString("; ")}")
   }
 
   test("every doGenCode in graft.functions is one Kernel.callCompute") {

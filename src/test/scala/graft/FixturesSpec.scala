@@ -44,9 +44,9 @@ class FixturesSpec extends AnyFunSuite {
        else spark.range(5).toDF("id")).persist()
     }
     var stagedRuns = 0
-    def staged() = Fixtures.stagedPersisted(spark, sfDir, "nested_staged") { d =>
+    def staged() = Fixtures.stagedPersisted(spark, sfDir, "nested_staged") {
       stagedRuns += 1
-      tableChain(0).write.mode("overwrite").parquet(d)
+      tableChain(0)
     }
     val df = staged()
     assert(staged() eq df)
